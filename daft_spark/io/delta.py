@@ -8,50 +8,39 @@ delta-rs, but the Delta transaction protocol is an open spec
 (https://github.com/delta-io/delta/blob/master/PROTOCOL.md): a table is
 a directory of parquet data files plus ``_delta_log/<version>.json``
 commits, each a newline-delimited list of actions (protocol, metaData,
-add, remove). This module implements the bounded subset a batch engine
-needs:
+add, remove, txn, cdc, commitInfo).
 
-- ``write_deltalake(df, path, mode)``: append / overwrite / error /
-  ignore. Data files are written with Spark's parquet writer into the
-  table directory; the commit JSON is staged to a temp file and
-  os.rename()'d into the log — the same single-writer atomicity local
-  delta-rs relies on for file:// tables.
-- ``read_deltalake(path, version=None)``: replays the log (adds minus
-  removes) up to ``version`` (time travel), then reads the active
-  parquet files with the session's parquet reader, pinning the schema
-  from the latest ``metaData.schemaString`` (which IS a Spark
-  StructType JSON — Delta inherited Spark's schema serialization).
-- Checkpoints: the writer emits a classic single-file parquet
-  checkpoint (``<v>.checkpoint.parquet`` + ``_last_checkpoint``) every
-  10 commits; the reader starts replay from the newest checkpoint at or
-  below the requested version, so tables whose early JSON commits were
-  vacuumed away (the normal state of any long-lived Delta table) still
-  read correctly.
-- Partitioned tables: hive-layout data files with
-  ``metaData.partitionColumns``; the reader restores partition columns
-  from each add action's ``partitionValues`` (one scan per live
-  partition value combination, unioned — driver-side plan cost is
-  O(live partitions), the same as delta-rs's file-pruning walk).
+Every public call goes through three internal pieces:
 
-Deletion vectors (reader v3 tables whose only reader feature is
-deletionVectors) are SUPPORTED merge-on-read: delete_deltalake_dv_py
-tombstones matching rows into roaring-bitmap DV files (io/roaring.py —
-the spec's RoaringBitmapArray portable format + the DV file framing
-version/size/CRC32) without rewriting data, and the reader drops the
-positions via _metadata.row_index anti-join.
+- ``_snapshot(path, version=None)`` replays the log ONCE — the newest
+  checkpoint at or below ``version`` (any layout, ``_checkpoint_rows``)
+  plus the later JSON commits (``_commit_actions_at``) — into a
+  ``_Snapshot``: version, schema, partition columns, live adds,
+  configuration, protocol and the txn watermark per appId.
+- ``_commit(path, snapshot, actions, operation, params)`` is the only
+  writer of ``_delta_log/<v>.json``: it appends the commitInfo, stages
+  the commit to a temp file and publishes it as ``snapshot.version +
+  1`` with ``os.link`` (which, unlike rename, never replaces an
+  existing file) — a writer whose snapshot went stale fails with
+  "concurrent Delta commit" instead of stacking on top of the other
+  writer. Every 10th version it writes a classic single-file parquet
+  checkpoint + ``_last_checkpoint``, whatever kind of commit it is.
+- ``_scan(...)`` is the one parquet scan of a set of add actions:
+  partition columns restored from ``partitionValues``, column-mapped
+  files resolved by physical name, and deletion vectors applied
+  merge-on-read by one broadcast anti-join on the row tag
+  ``(_metadata.file_path, _metadata.row_index)``. A table without DVs
+  reads as a plain multi-file parquet scan.
 
-Column mapping (PROTOCOL.md §Column Mapping) is SUPPORTED for read /
-append / schema evolution: set_column_mapping_delta_py upgrades a
-table in place (physical names = current names, the delta-spark
-upgrade convention), evolve_delta_schema renames/adds/drops logical
-columns metadata-only, readers resolve data files by physicalName and
-key partition values by physical name. DML on mapped tables is gated.
-
-Checkpoint READ covers every spec layout: classic single-file,
-legacy multi-part (<v>.checkpoint.<o>.<p>.parquet, complete sets
-only), and V2 (<v>.checkpoint.<uuid>.{json,parquet} manifests with
-sidecar files under _delta_log/_sidecars/). The writer emits classic
-checkpoints, which every Delta reader accepts.
+Supported: append / overwrite / error / ignore writes, time travel
+(version and timestamp), partitioned tables, copy-on-write and
+deletion-vector DELETE / UPDATE, MERGE, OPTIMIZE (bin-packing and
+Z-order), VACUUM, RESTORE, the change data feed, idempotent txn-stamped
+writes, column mapping for read / append / schema evolution (DML on
+mapped tables is gated), and checkpoint READ of every spec layout:
+classic single-file, legacy multi-part (<v>.checkpoint.<o>.<p>.parquet,
+complete sets only) and V2 (<v>.checkpoint.<uuid>.{json,parquet}
+manifests with sidecar files under _delta_log/_sidecars/).
 
 Out of scope (raise cleanly): other v3 reader features,
 nested-column mapping.
@@ -70,12 +59,14 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
 _LOG_DIR = "_delta_log"
 _MAX_SUPPORTED = {"minReaderVersion": 1, "minWriterVersion": 2}
+_ENGINE_INFO = "daft_spark pure-python delta writer"
 
 # PROTOCOL.md: legacy protocol versions imply feature sets; an upgrade
 # to table features (reader 3 / writer 7) must carry these forward so
@@ -90,37 +81,11 @@ _LEGACY_WRITER_FEATURES = {
 _LEGACY_READER_FEATURES = {2: ("columnMapping",)}
 
 
-def _current_protocol(table_path: str) -> dict:
-    """Latest protocol action in the log (spec default reader1/writer2
-    when none was ever written)."""
-    proto: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
-    ckpts = _checkpoint_versions(table_path)
-    start_after = -1
-    if ckpts:
-        for row in _checkpoint_rows(table_path, ckpts[-1]):
-            p = row.get("protocol")
-            if p and p.get("minReaderVersion") is not None:
-                proto = {k: v for k, v in p.items() if v is not None}
-        start_after = ckpts[-1]
-    for v in _list_versions(table_path):
-        if v <= start_after:
-            continue
-        with open(_commit_file(table_path, v)) as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    a = json.loads(line)
-                    if "protocol" in a:
-                        proto = a["protocol"]
-    return proto
-
-
-def _upgraded_dv_protocol(table_path: str) -> dict:
+def _upgraded_dv_protocol(prior: dict) -> dict:
     """The protocol action for a deletion-vector upgrade: (3, 7) with
     deletionVectors PLUS every feature the table's previous protocol
     implied (explicit feature lists carried as-is; legacy versions
     expanded via the PROTOCOL.md implication tables)."""
-    prior = _current_protocol(table_path)
     r, w = prior.get("minReaderVersion", 1), prior.get("minWriterVersion", 2)
     reader_feats = set(prior.get("readerFeatures") or [])
     writer_feats = set(prior.get("writerFeatures") or [])
@@ -203,6 +168,12 @@ def _checkpoint_versions(table_path: str) -> list[int]:
     return sorted(_checkpoint_files(table_path))
 
 
+def _table_versions(table_path: str) -> list[int]:
+    """Every version with a JSON commit or a checkpoint (a vacuumed
+    JSON prefix survives as its checkpoint); empty when no table."""
+    return sorted(set(_list_versions(table_path)) | set(_checkpoint_versions(table_path)))
+
+
 def _check_protocol(p: dict) -> None:
     """Reader v1 always; v2/v3 only when every reader feature is one we
     implement (deletionVectors). Anything else raises rather than
@@ -220,6 +191,17 @@ def _check_protocol(p: dict) -> None:
         "not supported by this pure-Python reader (deletionVectors + "
         "columnMapping only); use delta-spark"
     )
+
+
+def _json_lines(file_path: str) -> list[dict]:
+    with open(file_path) as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
+def _commit_actions_at(table_path: str, version: int) -> list[dict]:
+    """The actions of JSON commit ``version`` (FileNotFoundError when
+    only its checkpoint survives)."""
+    return _json_lines(_commit_file(table_path, version))
 
 
 def _checkpoint_rows(table_path: str, version: int) -> list[dict]:
@@ -241,12 +223,7 @@ def _checkpoint_rows(table_path: str, version: int) -> list[dict]:
     # v2 manifest
     manifest = os.path.join(log, files[0])
     if manifest.endswith(".json"):
-        rows = []
-        with open(manifest) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    rows.append(json.loads(line))
+        rows = _json_lines(manifest)
     else:
         rows = pq.read_table(manifest).to_pylist()
     out: list[dict] = []
@@ -262,113 +239,142 @@ def _checkpoint_rows(table_path: str, version: int) -> list[dict]:
     return out
 
 
-def _read_checkpoint(table_path: str, version: int):
-    """Load replay state (schema_json, partition_cols, active adds,
-    configuration, protocol) from the checkpoint at ``version`` (any
-    spec layout — see _checkpoint_rows)."""
-    rows = _checkpoint_rows(table_path, version)
+class _Snapshot(NamedTuple):
+    """Table state at one version: what every read and commit starts
+    from. ``adds`` maps data-file path -> add action (sorted by path);
+    ``txns`` maps appId -> its highest committed txn version."""
+
+    version: int
+    schema_json: str
+    partition_cols: list[str]
+    adds: dict[str, dict]
+    configuration: dict
+    protocol: dict
+    txns: dict[str, int]
+
+
+def _snapshot(table_path: str, version: int | None = None) -> _Snapshot:
+    """Replay the log up to and including ``version`` (default: latest).
+    Replay starts from the newest checkpoint at or below the target
+    version when one exists (JSON commits older than the checkpoint may
+    have been vacuumed). Checkpoint rows and JSON actions go through
+    the same loop: a checkpoint row is a dict with every action column
+    (absent ones None; arrow MAP columns read back as tuple lists)."""
+    versions = _list_versions(table_path)
+    ckpts = _checkpoint_versions(table_path)
+    known = sorted(set(versions) | set(ckpts))
+    if not known:
+        raise FileNotFoundError(
+            f"not a Delta table (no {_LOG_DIR}/*.json under {table_path})"
+        )
+    if version is None:
+        version = known[-1]
+    elif version not in known:
+        raise ValueError(f"version {version} not found in Delta log (have {known})")
+    usable = [c for c in ckpts if c <= version]
+    start_after = usable[-1] if usable else -1
+    rows = _checkpoint_rows(table_path, start_after) if usable else []
+    for v in versions:
+        if start_after < v <= version:
+            rows.extend(_commit_actions_at(table_path, v))
+
     schema_json: str | None = None
     partition_cols: list[str] = []
     configuration: dict = {}
     protocol: dict = dict(_MAX_SUPPORTED)
-    active: dict[str, dict] = {}
+    adds: dict[str, dict] = {}
+    txns: dict[str, int] = {}
     for row in rows:
         p = row.get("protocol")
-        if p:
+        if p and p.get("minReaderVersion") is not None:
             protocol = {k: v for k, v in p.items() if v is not None}
             _check_protocol(protocol)
         md = row.get("metaData")
         if md:
             schema_json = md["schemaString"]
             partition_cols = list(md.get("partitionColumns") or [])
-            cfg = md.get("configuration") or {}
-            configuration = dict(cfg) if not isinstance(cfg, dict) else cfg
+            configuration = dict(md.get("configuration") or {})
         add = row.get("add")
         if add:
-            pv = add.get("partitionValues") or {}
-            if not isinstance(pv, dict):  # arrow MAP columns read back as tuples
-                pv = dict(pv)
-            entry = {
-                "path": add["path"],
-                "partitionValues": pv,
-                "size": add.get("size") or 0,
-                "modificationTime": add.get("modificationTime") or 0,
-            }
-            dv = add.get("deletionVector")
+            entry = {k: v for k, v in add.items() if v is not None}
+            entry["partitionValues"] = dict(add.get("partitionValues") or {})
+            dv = entry.pop("deletionVector", None)
             # parquet null-struct rows read back as a dict of Nones
             if dv and dv.get("storageType"):
                 entry["deletionVector"] = {k: v for k, v in dv.items() if v is not None}
-            active[add["path"]] = entry
-    return schema_json, partition_cols, active, configuration, protocol
-
-
-def _replay_log_full(table_path: str, version: int | None = None):
-    """Return (schema_json, partition_cols, active adds, configuration,
-    protocol) after replaying the log up to and including ``version``
-    (default: latest). Replay starts from the newest checkpoint at or
-    below the target version when one exists (JSON commits older than
-    the checkpoint may have been vacuumed)."""
-    versions = _list_versions(table_path)
-    ckpts = _checkpoint_versions(table_path)
-    if not versions and not ckpts:
-        raise FileNotFoundError(
-            f"not a Delta table (no {_LOG_DIR}/*.json under {table_path})"
-        )
-    target = version if version is not None else max(versions + ckpts)
-    if version is not None and version not in set(versions) | set(ckpts):
-        raise ValueError(
-            f"version {version} not found in Delta log (have {sorted(set(versions) | set(ckpts))})"
-        )
-    schema_json: str | None = None
-    partition_cols: list[str] = []
-    configuration: dict = {}
-    protocol: dict = dict(_MAX_SUPPORTED)
-    active: dict[str, dict] = {}
-    start_after = -1
-    usable = [c for c in ckpts if c <= target]
-    if usable:
-        schema_json, partition_cols, active, configuration, protocol = _read_checkpoint(
-            table_path, usable[-1]
-        )
-        start_after = usable[-1]
-    for v in versions:
-        if v <= start_after or v > target:
-            continue
-        with open(_commit_file(table_path, v)) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    protocol = action["protocol"]
-                    _check_protocol(protocol)
-                elif "metaData" in action:
-                    schema_json = action["metaData"]["schemaString"]
-                    partition_cols = list(action["metaData"].get("partitionColumns") or [])
-                    configuration = action["metaData"].get("configuration") or {}
-                elif "add" in action:
-                    active[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    active.pop(action["remove"]["path"], None)
+            adds[add["path"]] = entry
+        rm = row.get("remove")
+        if rm:
+            adds.pop(rm["path"], None)
+        txn = row.get("txn")
+        if txn and txn.get("appId") is not None:
+            app = txn["appId"]
+            txns[app] = max(txns.get(app, -1), int(txn.get("version", -1)))
     if schema_json is None:
         raise ValueError(f"Delta log under {table_path} has no metaData action")
-    return (
+    return _Snapshot(
+        version,
         schema_json,
         partition_cols,
-        {k: active[k] for k in sorted(active)},
+        {k: adds[k] for k in sorted(adds)},
         configuration,
         protocol,
+        txns,
     )
 
 
-def _replay_log(table_path: str, version: int | None = None):
-    """(schema_json, partition_cols, active adds) — the 3-tuple most
-    callers want; _replay_log_full adds configuration + protocol."""
-    schema_json, partition_cols, adds, _cfg, _proto = _replay_log_full(
-        table_path, version
-    )
-    return schema_json, partition_cols, adds
+def _commit(
+    table_path: str,
+    snapshot: _Snapshot | None,
+    actions: list[dict],
+    operation: str,
+    params: dict | None = None,
+    checkpoint_interval: int = 10,
+) -> None:
+    """Publish ``actions`` plus a commitInfo as version ``snapshot.version
+    + 1`` (0 for a new table: ``snapshot`` None). The
+    commit is staged to a temp file and hard-linked into place: link()
+    fails when the target exists (rename() would silently replace it),
+    so a writer whose snapshot went stale raises instead of clobbering
+    or stacking on another writer's commit, and readers never see a
+    half-written file. Every ``checkpoint_interval`` versions a
+    checkpoint follows, whatever the commit kind."""
+    version = 0 if snapshot is None else snapshot.version + 1
+    info: dict = {"timestamp": int(time.time() * 1000), "operation": operation}
+    if params is not None:
+        info["operationParameters"] = params
+    info["engineInfo"] = _ENGINE_INFO
+    log = _log_path(table_path)
+    os.makedirs(log, exist_ok=True)
+    tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        for a in [*actions, {"commitInfo": info}]:
+            f.write(json.dumps(a) + "\n")
+    try:
+        os.link(tmp, _commit_file(table_path, version))
+    except FileExistsError:
+        raise RuntimeError(
+            f"concurrent Delta commit detected at version {version} ({table_path})"
+        ) from None
+    finally:
+        os.remove(tmp)
+    if checkpoint_interval and version > 0 and version % checkpoint_interval == 0:
+        _write_checkpoint(table_path, version)
+
+
+def _metadata_action(
+    schema_json: str, partition_cols: list[str], configuration: dict
+) -> dict:
+    return {
+        "metaData": {
+            "id": str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema_json,
+            "partitionColumns": partition_cols,
+            "configuration": configuration,
+            "createdTime": int(time.time() * 1000),
+        }
+    }
 
 
 def _mapping_info(schema_json: str, config: dict):
@@ -418,24 +424,23 @@ def version_at_timestamp_delta_py(path: str, timestamp_ms: int) -> int:
     matching delta-spark's before-earliest-version error."""
     best = None
     json_versions = set(_list_versions(path))
-    # Checkpoint-only versions survive log cleanup (_replay_log_full
-    # reads them without their JSON commits) — timestamp travel must
-    # resolve from them too, not error with "history starts later"
-    # when the instant predates the oldest surviving JSON (r8 advice).
+    # Checkpoint-only versions survive log cleanup (_snapshot reads
+    # them without their JSON commits) — timestamp travel must resolve
+    # from them too, not error with "history starts later" when the
+    # instant predates the oldest surviving JSON.
     ckpt_files = _checkpoint_files(path)
     for v in sorted(json_versions | set(ckpt_files)):
         ts = None
         if v in json_versions:
             try:
-                with open(_commit_file(path, v)) as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        action = json.loads(line)
-                        if "commitInfo" in action:
-                            ts = action["commitInfo"].get("timestamp")
-                            break
+                ts = next(
+                    (
+                        a["commitInfo"].get("timestamp")
+                        for a in _commit_actions_at(path, v)
+                        if "commitInfo" in a
+                    ),
+                    None,
+                )
                 if ts is None:
                     ts = int(os.path.getmtime(_commit_file(path, v)) * 1000)
             except FileNotFoundError:
@@ -497,87 +502,136 @@ def read_deltalake_py(
     (absent from the data files, per the Delta spec) are restored from
     each add action's partitionValues: one scan per live partition
     combination, unioned."""
-    from pyspark.sql import functions as F
-
     if timestamp_ms is not None:
         if version is not None:
             raise ValueError("pass version or timestamp_ms, not both")
         version = version_at_timestamp_delta_py(path, timestamp_ms)
-    schema_json, partition_cols, adds, config, _proto = _replay_log_full(path, version)
-    schema = StructType.fromJson(json.loads(schema_json))
-    mode, l2p, p2l = _mapping_info(schema_json, config)
+    snap = _snapshot(path, version)
+    _mode, l2p, p2l = _mapping_info(snap.schema_json, snap.configuration)
     # a clean logical schema (mapping annotations stripped) for results
     schema = StructType(
-        [StructField(f.name, f.dataType, f.nullable) for f in schema.fields]
+        [
+            StructField(f.name, f.dataType, f.nullable)
+            for f in StructType.fromJson(json.loads(snap.schema_json)).fields
+        ]
     )
-    # metaData tracks partition columns by PHYSICAL name on mapped
-    # tables (spec: partition values use physical names); normalize to
-    # (logical, physical) pairs, tolerating logical-keyed metadata too
-    part_pairs = [
-        (p2l.get(c, c), l2p.get(p2l.get(c, c), c)) for c in partition_cols
-    ]
-    partition_cols = [lg for lg, _ph in part_pairs]
-    phys_name = {lg: ph for lg, ph in part_pairs}
-    if not adds:
+    if not snap.adds:
         return spark.createDataFrame([], schema)
-    dv_frame = _dv_positions_frame(spark, path, adds)
+    # metaData tracks partition columns by PHYSICAL name on mapped
+    # tables (spec: partition values use physical names); tolerate
+    # logical-keyed metadata too
+    partition_cols = [p2l.get(c, c) for c in snap.partition_cols]
+    return _scan(spark, path, snap.adds, schema, partition_cols, l2p=l2p)
 
-    def _physize(st: StructType) -> StructType:
-        if mode is None:
-            return st
-        return StructType(
-            [StructField(l2p.get(f.name, f.name), f.dataType, True) for f in st.fields]
-        )
 
-    def _logicalize(df, st: StructType):
-        if mode is None:
-            return df
-        return df.select(
-            *[F.col(l2p.get(f.name, f.name)).alias(f.name) for f in st.fields]
-        )
+def _scan(
+    spark: SparkSession,
+    table_path: str,
+    adds: dict,
+    schema: StructType,
+    partition_cols: list[str],
+    *,
+    l2p: dict | None = None,
+    keep: dict[str, list[int]] | None = None,
+    tag: bool = False,
+) -> DataFrame:
+    """The one scan of Delta data files every read path shares: the
+    files of ``adds`` (path relative to the table -> add action) read
+    as ``schema``, one parquet scan per partition-value group with the
+    partition columns restored from partitionValues (Delta serializes
+    them as strings, null -> absent), unioned. ``l2p`` resolves
+    column-mapped files and partition values by physical name.
 
-    def _strip_dv(df):
-        """Anti-join the deletion-vector positions by (normalized file
-        path, parquet row ordinal) — the MoR application of Delta DVs,
-        mirroring the Iceberg position-delete path."""
-        if dv_frame is None:
-            return df
-        tagged = df.select(
-            "*",
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/").alias(
-                "__fp"
-            ),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-        return tagged.join(
-            F.broadcast(dv_frame), ["__fp", "__pos"], "left_anti"
-        ).drop("__fp", "__pos")
+    Deletion vectors apply merge-on-read: each row is tagged (__fp,
+    __pos) = (normalized _metadata.file_path, _metadata.row_index) and
+    ONE broadcast left-anti join drops the DV positions (a
+    metadata-sized frame). ``keep`` (path -> row ordinals) instead
+    keeps exactly the listed rows of the listed files. ``tag`` keeps
+    the row tag in the output, for DML keyed on it. With no DVs, no
+    ``keep`` and no ``tag`` the result is a plain parquet scan."""
+    from pyspark.sql import functions as F
 
-    if not partition_cols:
-        scan = spark.read.schema(_physize(schema)).parquet(
-            *[os.path.join(path, f) for f in adds]
-        )
-        return _logicalize(_strip_dv(scan), schema)
-
-    part_types = {f.name: f.dataType for f in schema.fields if f.name in partition_cols}
-    phys = StructType([f for f in schema.fields if f.name not in partition_cols])
+    l2p = l2p or {}
+    keep = keep or {}
+    types = {f.name: f.dataType for f in schema.fields}
+    file_schema = StructType(
+        [
+            StructField(l2p.get(f.name, f.name), f.dataType, f.nullable)
+            for f in schema.fields
+            if f.name not in partition_cols
+        ]
+    )
+    dv_rows = [
+        (_abs_path(table_path, rel), int(p))
+        for rel, add in adds.items()
+        if add.get("deletionVector")
+        for p in _dv_read(table_path, add["deletionVector"])
+    ]
+    keep_rows = [
+        (_abs_path(table_path, rel), int(p)) for rel, ps in keep.items() for p in ps
+    ]
+    tagged = bool(tag or dv_rows or keep)
+    tag_cols = ["__fp", "__pos"] if tagged else []
     groups: dict[tuple, list[str]] = {}
     for rel, add in adds.items():
         pv = add.get("partitionValues") or {}
-        # mapped tables key partitionValues by physical name
-        key = tuple(pv.get(phys_name[c], pv.get(c)) for c in partition_cols)
-        groups.setdefault(key, []).append(os.path.join(path, rel))
-    parts = []
+        key = tuple(pv.get(l2p.get(c, c), pv.get(c)) for c in partition_cols)
+        groups.setdefault(key, []).append(os.path.join(table_path, rel))
+    out = None
     for key, files in _pv_sorted(groups):
-        df = _logicalize(_strip_dv(spark.read.schema(_physize(phys)).parquet(*files)), phys)
-        for c, raw in zip(partition_cols, key):
-            # Delta serializes partition values as strings (null -> absent)
-            df = df.withColumn(c, F.lit(raw).cast(part_types[c]))
-        parts.append(df.select(*[f.name for f in schema.fields]))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
+        df = spark.read.schema(file_schema).parquet(*files)
+        if tagged:
+            df = df.select(
+                "*",
+                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/").alias(
+                    "__fp"
+                ),
+                F.col("_metadata.row_index").alias("__pos"),
+            )
+        if partition_cols or l2p:
+            restored = dict(zip(partition_cols, key))
+            df = df.select(
+                *[
+                    F.lit(restored[f.name]).cast(types[f.name]).alias(f.name)
+                    if f.name in restored
+                    else F.col(l2p.get(f.name, f.name)).alias(f.name)
+                    for f in schema.fields
+                ],
+                *tag_cols,
+            )
+        out = df if out is None else out.unionAll(df)
+    if dv_rows:
+        out = out.join(
+            F.broadcast(_positions_frame(spark, dv_rows)), tag_cols, "left_anti"
+        )
+    if keep:
+        kf = _positions_frame(spark, keep_rows).withColumn("__keep", F.lit(True))
+        keep_files = sorted(_abs_path(table_path, rel) for rel in keep)
+        out = (
+            out.join(F.broadcast(kf), tag_cols, "left_outer")
+            .filter(~F.col("__fp").isin(*keep_files) | F.col("__keep").isNotNull())
+            .drop("__keep")
+        )
+    if not tag:
+        return out.drop(*tag_cols) if tagged else out
+    if dv_rows or keep:
+        # using-column joins move the keys first; restore the order
+        out = out.select(*[f.name for f in schema.fields], *tag_cols)
     return out
+
+
+def _abs_path(table_path: str, rel: str) -> str:
+    """A data file's absolute path: the key of the (__fp, __pos) row tag."""
+    return os.path.abspath(os.path.join(table_path, rel))
+
+
+def _positions_frame(spark: SparkSession, rows: list[tuple[str, int]]) -> DataFrame:
+    from pyspark.sql.types import LongType, StringType
+
+    sch = StructType(
+        [StructField("__fp", StringType()), StructField("__pos", LongType())]
+    )
+    return spark.createDataFrame(rows, sch)
 
 
 def _dv_read(table_path: str, desc: dict) -> list[int]:
@@ -607,29 +661,6 @@ def _dv_read(table_path: str, desc: dict) -> list[int]:
     return deserialize_rbm64(body)
 
 
-def _dv_positions_frame(spark: SparkSession, table_path: str, adds: dict):
-    """(__fp, __pos) frame of every deleted row position across the
-    active adds, or None. Driver-side assembly is metadata-scale work
-    (per-file cardinality is bounded by the file's row count, same
-    order as the log replay itself); the frame broadcasts into the
-    anti-join."""
-    rows = []
-    for rel, add in adds.items():
-        desc = add.get("deletionVector")
-        if not desc:
-            continue
-        abs_path = os.path.abspath(os.path.join(table_path, rel))
-        rows.extend((abs_path, int(p)) for p in _dv_read(table_path, desc))
-    if not rows:
-        return None
-    from pyspark.sql.types import LongType, StringType, StructField
-
-    sch = StructType(
-        [StructField("__fp", StringType()), StructField("__pos", LongType())]
-    )
-    return spark.createDataFrame(rows, sch)
-
-
 def _dv_write(table_path: str, positions) -> dict:
     """Write one deletion-vector file (version byte + size/data/CRC32
     framing) and return its add-action descriptor."""
@@ -657,6 +688,27 @@ def _dv_write(table_path: str, positions) -> dict:
     }
 
 
+def _dml_scan(spark: SparkSession, path: str, snap: _Snapshot, adds: dict | None = None):
+    """Row-tagged, DV-applied scan of ``adds`` (default: every live add)
+    under the table schema — the substrate of the file-granular DML
+    passes: pass 1 scans all adds to find the files containing changed
+    rows; pass 2 re-scans ONLY the affected adds for the rewrite
+    (delta-spark's two-pass copy-on-write shape). None when there is
+    nothing to scan."""
+    adds = snap.adds if adds is None else adds
+    if not adds:
+        return None
+    schema = StructType.fromJson(json.loads(snap.schema_json))
+    return _scan(spark, path, adds, schema, snap.partition_cols, tag=True)
+
+
+def _affected_adds(path: str, adds: dict, affected_abs: list[str]) -> dict:
+    """The adds whose absolute paths (the __fp values pass 1 collected)
+    appear in ``affected_abs``."""
+    aff = set(affected_abs)
+    return {rel: a for rel, a in adds.items() if _abs_path(path, rel) in aff}
+
+
 def delete_deltalake_dv_py(path: str, spark: SparkSession, condition: str) -> None:
     """Merge-on-read DELETE via DELETION VECTORS: rows matching the SQL
     ``condition`` are tombstoned by parquet row ordinal into roaring
@@ -668,28 +720,28 @@ def delete_deltalake_dv_py(path: str, spark: SparkSession, condition: str) -> No
     stay time-travelable."""
     from pyspark.sql import functions as F
 
-    _gate_column_mapping(path)
-    schema_json, partition_cols, adds, cfg, _proto = _replay_log_full(path)
-    if not adds:
+    snap = _snapshot(path)
+    _gate_column_mapping(snap)
+    if not snap.adds:
         return
     # Match against the CURRENT state (existing DVs applied) so already-
     # deleted rows don't churn; capture (file, ordinal) via _metadata.
-    t = _scan_adds_tagged(spark, path, adds, schema_json, partition_cols)
+    t = _dml_scan(spark, path, snap)
     matched = t.filter(F.expr(condition).eqNullSafe(F.lit(True)))
-    by_file = _dv_write_distributed(matched, path, adds)
+    by_file = _dv_write_distributed(matched, path, snap.adds)
     if not by_file:
         return
     extra: list[dict] = []
-    if _cdf_enabled(cfg):
+    if _cdf_enabled(snap.configuration):
         # CDF tables get explicit cdc actions in the SAME commit (the
         # delta-spark contract) — a DV commit's add/remove pair re-adds
         # the whole file, so change feeds can never be reconstructed
-        # from it (r8 advice, medium).
+        # from it.
         deleted = matched.drop("__fp", "__pos").withColumn(
             "_change_type", F.lit("delete")
         )
-        extra = _write_cdc_file(path, deleted, partition_cols)
-    _dv_commit(path, adds, by_file, extra, "DELETE", condition)
+        extra = _write_cdc_file(path, deleted, snap.partition_cols)
+    _dv_commit(path, snap, by_file, extra, "DELETE", condition)
 
 
 def _dv_write_distributed(matched, path: str, adds: dict) -> dict[str, dict]:
@@ -704,7 +756,7 @@ def _dv_write_distributed(matched, path: str, adds: dict) -> dict[str, dict]:
     from pyspark.sql import functions as F
 
     old_descs = {
-        os.path.abspath(os.path.join(path, rel)): add["deletionVector"]
+        _abs_path(path, rel): add["deletionVector"]
         for rel, add in adds.items()
         if add.get("deletionVector")
     }
@@ -732,7 +784,7 @@ def _dv_write_distributed(matched, path: str, adds: dict) -> dict[str, dict]:
 
 def _dv_commit(
     path: str,
-    adds: dict,
+    snap: _Snapshot,
     by_file: dict[str, dict],
     extra_actions: list[dict],
     op: str,
@@ -743,11 +795,11 @@ def _dv_commit(
     _dv_write_distributed, pre-existing DVs already merged), then any
     extra add actions (e.g. UPDATE's rewritten rows)."""
     now_ms = int(time.time() * 1000)
-    abs_to_rel = {os.path.abspath(os.path.join(path, rel)): rel for rel in adds}
-    actions: list[dict] = [{"protocol": _upgraded_dv_protocol(path)}]
+    abs_to_rel = {_abs_path(path, rel): rel for rel in snap.adds}
+    actions: list[dict] = [{"protocol": _upgraded_dv_protocol(snap.protocol)}]
     for abs_path, desc in sorted(by_file.items()):
         rel = abs_to_rel[abs_path]
-        add = adds[rel]
+        add = snap.adds[rel]
         actions.append(
             {"remove": {"path": rel, "deletionTimestamp": now_ms, "dataChange": True}}
         )
@@ -761,28 +813,7 @@ def _dv_commit(
         }
         actions.append({"add": new_add})
     actions.extend(extra_actions)
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": op,
-                "operationParameters": {"predicate": condition, "mode": "mor-dv"},
-                "engineInfo": "daft_spark pure-python delta writer",
-            }
-        }
-    )
-    version = max(_list_versions(path) + _checkpoint_versions(path)) + 1
-    tmp = os.path.join(_log_path(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    final = _commit_file(path, version)
-    if os.path.exists(final):
-        os.remove(tmp)
-        raise RuntimeError(
-            f"concurrent Delta commit detected at version {version} ({path})"
-        )
-    os.rename(tmp, final)
+    _commit(path, snap, actions, op, {"predicate": condition, "mode": "mor-dv"})
 
 
 def update_deltalake_dv_py(
@@ -800,17 +831,17 @@ def update_deltalake_dv_py(
     the public Delta PROTOCOL.md deletion-vector rules."""
     from pyspark.sql import functions as F
 
-    _gate_column_mapping(path)
-    schema_json, partition_cols, adds, cfg, _proto = _replay_log_full(path)
-    schema = StructType.fromJson(json.loads(schema_json))
-    if not adds:
+    snap = _snapshot(path)
+    _gate_column_mapping(snap)
+    schema = StructType.fromJson(json.loads(snap.schema_json))
+    if not snap.adds:
         return
     bad = set(set_exprs) - {f.name for f in schema.fields}
     if bad:
         raise ValueError(f"SET columns not in table schema: {sorted(bad)}")
-    t = _scan_adds_tagged(spark, path, adds, schema_json, partition_cols)
+    t = _dml_scan(spark, path, snap)
     matched = t.filter(F.expr(condition).eqNullSafe(F.lit(True)))
-    by_file = _dv_write_distributed(matched, path, adds)
+    by_file = _dv_write_distributed(matched, path, snap.adds)
     if not by_file:
         return
     types_by_name = {f.name: f.dataType for f in schema.fields}
@@ -820,10 +851,10 @@ def update_deltalake_dv_py(
     updated = updated.select(*[f.name for f in schema.fields])
     # Stage the rewritten rows exactly like write_deltalake_py does
     # (hive layout when partitioned), producing the commit's add actions.
-    now_ms = int(time.time() * 1000)
-    version = max(_list_versions(path) + _checkpoint_versions(path)) + 1
-    new_adds = _stage_data_files(updated, path, version, partition_cols, now_ms)
-    if _cdf_enabled(cfg):
+    new_adds = _stage_data_files(
+        updated, path, snap.version + 1, snap.partition_cols, int(time.time() * 1000)
+    )
+    if _cdf_enabled(snap.configuration):
         # pre/post images as explicit cdc actions (delta-spark's UPDATE
         # on CDF tables) — see delete_deltalake_dv_py for why DV commits
         # can't serve change feeds from add/remove reconstruction.
@@ -832,73 +863,20 @@ def update_deltalake_dv_py(
         )
         post = updated.withColumn("_change_type", F.lit("update_postimage"))
         new_adds = new_adds + _write_cdc_file(
-            path, pre.unionByName(post), partition_cols
+            path, pre.unionByName(post), snap.partition_cols
         )
-    _dv_commit(path, adds, by_file, new_adds, "UPDATE", condition)
-
-
-def _all_txn_versions(table_path: str, version: int) -> dict[str, int]:
-    """Latest txn version per appId at ``version`` (checkpoint rows +
-    later JSON commits)."""
-    out: dict[str, int] = {}
-    ckpts = [c for c in _checkpoint_versions(table_path) if c <= version]
-    start_after = -1
-    if ckpts:
-        import pyarrow.parquet as pq
-
-        p = os.path.join(
-            _log_path(table_path), f"{ckpts[-1]:020d}.checkpoint.parquet"
-        )
-        t = pq.read_table(p)
-        if "txn" in t.column_names:
-            for row in t.column("txn").to_pylist():
-                if row and row.get("appId") is not None:
-                    a = row["appId"]
-                    out[a] = max(out.get(a, -1), int(row.get("version", -1)))
-        start_after = ckpts[-1]
-    for v in _list_versions(table_path):
-        if v <= start_after or v > version:
-            continue
-        with open(_commit_file(table_path, v)) as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    a = json.loads(line)
-                    if "txn" in a and a["txn"].get("appId") is not None:
-                        aid = a["txn"]["appId"]
-                        out[aid] = max(out.get(aid, -1), int(a["txn"].get("version", -1)))
-    return out
+    _dv_commit(path, snap, by_file, new_adds, "UPDATE", condition)
 
 
 def last_txn_version(path: str, app_id: str) -> int:
     """Highest ``txn`` action version committed for ``app_id`` (-1 when
     none) — the Delta protocol's application-transaction mechanism for
-    idempotent writers (PROTOCOL.md "Transaction Identifiers"). Scans
-    the newest checkpoint's txn rows plus every later JSON commit."""
-    best = -1
-    ckpts = _checkpoint_versions(path)
-    start_after = -1
-    if ckpts:
-        import pyarrow.parquet as pq
-
-        p = os.path.join(_log_path(path), f"{ckpts[-1]:020d}.checkpoint.parquet")
-        t = pq.read_table(p)
-        if "txn" in t.column_names:
-            for row in t.column("txn").to_pylist():
-                if row and row.get("appId") == app_id:
-                    best = max(best, int(row.get("version", -1)))
-        start_after = ckpts[-1]
-    for v in _list_versions(path):
-        if v <= start_after:
-            continue
-        with open(_commit_file(path, v)) as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    a = json.loads(line)
-                    if "txn" in a and a["txn"].get("appId") == app_id:
-                        best = max(best, int(a["txn"].get("version", -1)))
-    return best
+    idempotent writers (PROTOCOL.md "Transaction Identifiers"), read
+    from the latest snapshot (checkpoint of any layout + later JSON
+    commits)."""
+    if not _table_versions(path):
+        return -1
+    return _snapshot(path).txns.get(app_id, -1)
 
 
 def _stage_data_files(
@@ -957,83 +935,14 @@ def _stage_data_files(
     return adds
 
 
-def _scan_adds_tagged(
-    spark: SparkSession,
-    path: str,
-    adds: dict,
-    schema_json: str,
-    partition_cols: list[str],
-):
-    """DV-applied scan of the given add actions with partition columns
-    restored and (__fp, __pos) row identity attached, or None when
-    ``adds`` is empty. This is the shared substrate of the file-granular
-    DML passes: pass 1 scans all adds to find the files containing
-    changed rows; pass 2 re-scans ONLY the affected adds for the
-    rewrite — delta-spark's two-pass copy-on-write shape."""
-    from pyspark.sql import functions as F
-
-    if not adds:
-        return None
-    schema = StructType.fromJson(json.loads(schema_json))
-    dv_frame = _dv_positions_frame(spark, path, adds)
-    part_types = {
-        f.name: f.dataType for f in schema.fields if f.name in partition_cols
-    }
-    phys = StructType([f for f in schema.fields if f.name not in partition_cols])
-    groups: dict[tuple, list[str]] = {}
-    for rel, add in adds.items():
-        pv = add.get("partitionValues") or {}
-        key = tuple(pv.get(c) for c in partition_cols)
-        groups.setdefault(key, []).append(os.path.join(path, rel))
-    out = None
-    for key, files in _pv_sorted(groups):
-        df = spark.read.schema(phys).parquet(*files).select(
-            "*",
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/").alias(
-                "__fp"
-            ),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-        if dv_frame is not None:
-            df = df.join(F.broadcast(dv_frame), ["__fp", "__pos"], "left_anti")
-        for c, raw in zip(partition_cols, key):
-            df = df.withColumn(c, F.lit(raw).cast(part_types[c]))
-        df = df.select(*[f.name for f in schema.fields], "__fp", "__pos")
-        out = df if out is None else out.unionByName(df)
-    return out
-
-
-def _affected_scan(
-    spark: SparkSession,
-    path: str,
-    adds: dict,
-    schema_json: str,
-    partition_cols: list[str],
-    affected_abs: list[str],
-):
-    """Pass 2 of file-granular DML: re-scan ONLY the adds whose
-    absolute paths appear in ``affected_abs`` (the __fp values pass 1
-    collected). Keeps the abspath keying in ONE place, matching
-    _cow_commit's abs_to_rel."""
-    aff_set = set(affected_abs)
-    aff_adds = {
-        rel: a
-        for rel, a in adds.items()
-        if os.path.abspath(os.path.join(path, rel)) in aff_set
-    }
-    return _scan_adds_tagged(spark, path, aff_adds, schema_json, partition_cols)
-
-
 def _cow_commit(
     path: str,
-    adds: dict,
+    snap: _Snapshot,
     affected_abs: list[str],
     rewritten: DataFrame | None,
-    partition_cols: list[str],
     op: str,
     params: dict,
     extra_actions: list[dict] | None,
-    checkpoint_interval: int = 10,
 ) -> None:
     """File-granular copy-on-write commit: retire ONLY the affected
     files, stage their surviving/updated rows (plus any merge-inserted
@@ -1046,42 +955,31 @@ def _cow_commit(
     import pyarrow.parquet as pq
 
     now_ms = int(time.time() * 1000)
-    version = max(_list_versions(path) + _checkpoint_versions(path)) + 1
     add_actions: list[dict] = []
     if rewritten is not None:
-        for a in _stage_data_files(rewritten, path, version, partition_cols, now_ms):
+        staged = _stage_data_files(
+            rewritten, path, snap.version + 1, snap.partition_cols, now_ms
+        )
+        for a in staged:
             dst = os.path.join(path, a["add"]["path"])
             if pq.ParquetFile(dst).metadata.num_rows == 0:
                 os.remove(dst)
                 continue
             add_actions.append(a)
-    abs_to_rel = {os.path.abspath(os.path.join(path, rel)): rel for rel in adds}
-    actions: list[dict] = []
-    for fp in sorted(affected_abs):
-        actions.append(
-            {
-                "remove": {
-                    "path": abs_to_rel[fp],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-        )
-    actions.extend(add_actions)
-    actions.extend(extra_actions or [])
-    actions.append(
+    abs_to_rel = {_abs_path(path, rel): rel for rel in snap.adds}
+    actions: list[dict] = [
         {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": op,
-                "operationParameters": params,
-                "engineInfo": "daft_spark pure-python delta writer",
+            "remove": {
+                "path": abs_to_rel[fp],
+                "deletionTimestamp": now_ms,
+                "dataChange": True,
             }
         }
-    )
-    _commit_actions(path, version, actions)
-    if checkpoint_interval and version > 0 and version % checkpoint_interval == 0:
-        _write_checkpoint(path, version)
+        for fp in sorted(affected_abs)
+    ]
+    actions.extend(add_actions)
+    actions.extend(extra_actions or [])
+    _commit(path, snap, actions, op, params)
 
 
 def write_deltalake_py(
@@ -1106,28 +1004,22 @@ def write_deltalake_py(
     on (see streaming.write_stream_delta)."""
     if mode not in ("append", "overwrite", "error", "ignore"):
         raise ValueError(f"unsupported mode {mode!r}")
-    if txn is not None:
-        app_id, txn_version = str(txn[0]), int(txn[1])
-        try:
-            if last_txn_version(path, app_id) >= txn_version:
-                return  # already committed (replayed micro-batch)
-        except FileNotFoundError:
-            pass
-    versions = _list_versions(path)
-    ckpts = _checkpoint_versions(path)
-    exists = bool(versions or ckpts)
-    if exists and mode == "error":
+    snap = _snapshot(path) if _table_versions(path) else None
+    if txn is not None and snap is not None:
+        if snap.txns.get(str(txn[0]), -1) >= int(txn[1]):
+            return  # already committed (replayed micro-batch)
+    if snap is not None and mode == "error":
         raise FileExistsError(f"Delta table already exists at {path}")
-    if exists and mode == "ignore":
+    if snap is not None and mode == "ignore":
         return
-    version = (max(versions + ckpts) + 1) if exists else 0
     partition_by = list(partition_by or [])
     prior_cfg: dict = {}
-    if exists:
+    if snap is not None:
         from pyspark.sql import functions as F
 
-        prior_schema_json, prior_parts, _adds, prior_cfg, _proto = _replay_log_full(path)
-        map_mode, l2p, _p2l = _mapping_info(prior_schema_json, prior_cfg)
+        prior_cfg = snap.configuration
+        table_cols = [f["name"] for f in json.loads(snap.schema_json)["fields"]]
+        map_mode, l2p, _p2l = _mapping_info(snap.schema_json, prior_cfg)
         if map_mode is not None:
             # column-mapped tables: stage files under PHYSICAL names and
             # key partitionValues by them (PROTOCOL.md column-mapping
@@ -1136,19 +1028,18 @@ def write_deltalake_py(
                 raise NotImplementedError(
                     "overwrite of a column-mapped Delta table is not supported"
                 )
-            logical = [f["name"] for f in json.loads(prior_schema_json)["fields"]]
-            if sorted(df.columns) != sorted(logical):
+            if sorted(df.columns) != sorted(table_cols):
                 raise ValueError(
                     f"append columns {sorted(df.columns)} do not match the "
-                    f"mapped table schema {sorted(logical)} — evolve it first "
+                    f"mapped table schema {sorted(table_cols)} — evolve it first "
                     "(evolve_delta_schema)"
                 )
-            df = df.select(*[F.col(c).alias(l2p[c]) for c in logical])
+            df = df.select(*[F.col(c).alias(l2p[c]) for c in table_cols])
             partition_by = [l2p.get(c, c) for c in partition_by]
-        if mode == "append" and prior_parts != partition_by:
+        if mode == "append" and snap.partition_cols != partition_by:
             raise ValueError(
                 f"partition columns {partition_by} do not match the table's "
-                f"existing partitioning {prior_parts}"
+                f"existing partitioning {snap.partition_cols}"
             )
         if mode == "append" and map_mode is None:
             # Delta schema enforcement: extra columns are rejected
@@ -1156,7 +1047,6 @@ def write_deltalake_py(
             # them on the pinned-schema read would lose data). Missing
             # columns are fine — the reader fills nulls, the spec's
             # nullable-column semantics.
-            table_cols = {f["name"] for f in json.loads(prior_schema_json)["fields"]}
             extra = [c for c in df.columns if c not in table_cols]
             if extra:
                 raise ValueError(
@@ -1164,39 +1054,21 @@ def write_deltalake_py(
                     f"{sorted(table_cols)}; overwrite to change the schema"
                 )
 
-    os.makedirs(_log_path(path), exist_ok=True)
     now_ms = int(time.time() * 1000)
+    version = 0 if snap is None else snap.version + 1
     adds = _stage_data_files(df, path, version, partition_by, now_ms)
 
     actions: list[dict] = []
-    if not exists:
+    if snap is None:
         actions.append({"protocol": dict(_MAX_SUPPORTED)})
-    if not exists or mode == "overwrite":
-        actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": df.schema.json(),
-                    "partitionColumns": partition_by,
-                    # table properties (CDF flag etc.) survive overwrites
-                    "configuration": prior_cfg,
-                    "createdTime": now_ms,
-                }
-            }
+    if snap is None or mode == "overwrite":
+        # table properties (CDF flag etc.) survive overwrites
+        actions.append(_metadata_action(df.schema.json(), partition_by, prior_cfg))
+    if snap is not None and mode == "overwrite":
+        actions.extend(
+            {"remove": {"path": rel, "deletionTimestamp": now_ms, "dataChange": True}}
+            for rel in snap.adds
         )
-    if mode == "overwrite" and exists:
-        _, _, prior = _replay_log(path)
-        for rel in prior:
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
     actions.extend(adds)
     if _extra_actions:
         actions.extend(_extra_actions)  # e.g. cdc actions (same commit)
@@ -1210,33 +1082,7 @@ def write_deltalake_py(
                 }
             }
         )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode},
-                "engineInfo": "daft_spark pure-python delta writer",
-            }
-        }
-    )
-
-    # Atomic publish: write to a temp name in the log dir, rename into
-    # place. rename() fails-or-succeeds atomically on POSIX, so a
-    # concurrent reader never sees a half-written commit.
-    tmp = os.path.join(_log_path(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    final = _commit_file(path, version)
-    if os.path.exists(final):
-        os.remove(tmp)
-        raise RuntimeError(
-            f"concurrent Delta commit detected at version {version} ({path})"
-        )
-    os.rename(tmp, final)
-    if checkpoint_interval and version > 0 and version % checkpoint_interval == 0:
-        _write_checkpoint(path, version)
+    _commit(path, snap, actions, "WRITE", {"mode": mode}, checkpoint_interval)
 
 
 def _write_checkpoint(table_path: str, version: int) -> None:
@@ -1245,9 +1091,8 @@ def _write_checkpoint(table_path: str, version: int) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    schema_json, partition_cols, adds, configuration, protocol = _replay_log_full(
-        table_path, version
-    )
+    snap = _snapshot(table_path, version)
+    protocol = snap.protocol
     ck_protocol = {
         "minReaderVersion": protocol.get("minReaderVersion", 1),
         "minWriterVersion": protocol.get("minWriterVersion", 2),
@@ -1261,15 +1106,15 @@ def _write_checkpoint(table_path: str, version: int) -> None:
             "metaData": {
                 "id": str(uuid.uuid4()),
                 "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_json,
-                "partitionColumns": partition_cols,
-                "configuration": dict(configuration or {}),
+                "schemaString": snap.schema_json,
+                "partitionColumns": snap.partition_cols,
+                "configuration": snap.configuration,
                 "createdTime": int(time.time() * 1000),
             },
             "add": None,
         },
     ]
-    for rel, add in adds.items():
+    for rel, add in snap.adds.items():
         # deletionVector rides along per the spec's checkpoint add
         # schema — without it a checkpointed replay would resurrect
         # DV-deleted rows (this writer used to SKIP checkpoints while
@@ -1303,7 +1148,7 @@ def _write_checkpoint(table_path: str, version: int) -> None:
     # spec: a checkpoint must carry the newest txn action per appId,
     # or idempotent writers lose their watermark once the JSON prefix
     # is vacuumed
-    for app_id, txn_version in sorted(_all_txn_versions(table_path, version).items()):
+    for app_id, txn_version in sorted(snap.txns.items()):
         rows.append(
             {
                 "protocol": None,
@@ -1382,24 +1227,8 @@ def _write_checkpoint(table_path: str, version: int) -> None:
     os.rename(tmp, last)
 
 
-def _commit_actions(table_path: str, version: int, actions: list[dict]) -> None:
-    """Atomically publish one commit (write-temp-then-rename)."""
-    tmp = os.path.join(_log_path(table_path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    final = _commit_file(table_path, version)
-    if os.path.exists(final):
-        os.remove(tmp)
-        raise RuntimeError(
-            f"concurrent Delta commit detected at version {version} ({table_path})"
-        )
-    os.rename(tmp, final)
-
-
-def _gate_column_mapping(table_path: str) -> None:
-    schema_json, _pc, _adds, cfg, _proto = _replay_log_full(table_path)
-    if _mapping_info(schema_json, cfg)[0] is not None:
+def _gate_column_mapping(snap: _Snapshot) -> None:
+    if _mapping_info(snap.schema_json, snap.configuration)[0] is not None:
         raise NotImplementedError(
             "DML on a column-mapped Delta table is not supported by this "
             "pure-Python writer (read/append/schema evolution only)"
@@ -1422,7 +1251,8 @@ def set_column_mapping_delta_py(path: str, mode: str = "name") -> None:
     (daft/io/delta_lake/_deltalake.py)."""
     if mode not in ("name", "id"):
         raise ValueError(f"unsupported column mapping mode {mode!r}")
-    schema_json, partition_cols, _adds, cfg, proto = _replay_log_full(path)
+    snap = _snapshot(path)
+    schema_json, cfg, proto = snap.schema_json, snap.configuration, snap.protocol
     if _mapping_info(schema_json, cfg)[0] is not None:
         return  # already enabled
     fields = json.loads(schema_json)["fields"]
@@ -1453,31 +1283,18 @@ def set_column_mapping_delta_py(path: str, mode: str = "name") -> None:
         new_proto["writerFeatures"] = sorted(
             set(proto.get("writerFeatures") or []) | {"columnMapping"}
         )
-    now_ms = int(time.time() * 1000)
-    version = max(_list_versions(path) + _checkpoint_versions(path)) + 1
-    _commit_actions(
+    _commit(
         path,
-        version,
+        snap,
         [
             {"protocol": new_proto},
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps({"type": "struct", "fields": out_fields}),
-                    "partitionColumns": partition_cols,
-                    "configuration": new_cfg,
-                    "createdTime": now_ms,
-                }
-            },
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "UPGRADE COLUMN MAPPING",
-                    "engineInfo": "daft_spark pure-python delta writer",
-                }
-            },
+            _metadata_action(
+                json.dumps({"type": "struct", "fields": out_fields}),
+                snap.partition_cols,
+                new_cfg,
+            ),
         ],
+        "UPGRADE COLUMN MAPPING",
     )
 
 
@@ -1500,21 +1317,22 @@ def evolve_delta_schema(
     renames = dict(renames or {})
     add_columns = list(add_columns or [])
     drop_columns = list(drop_columns or [])
-    schema_json, partition_cols, _adds, cfg, _proto = _replay_log_full(path)
-    mode, _l2p, _p2l = _mapping_info(schema_json, cfg)
+    snap = _snapshot(path)
+    cfg = snap.configuration
+    mode, _l2p, _p2l = _mapping_info(snap.schema_json, cfg)
     if mode is None:
         raise NotImplementedError(
             "Delta schema evolution requires column mapping "
             "(set_column_mapping_delta_py)"
         )
-    fields = [dict(f) for f in json.loads(schema_json)["fields"]]
+    fields = [dict(f) for f in json.loads(snap.schema_json)["fields"]]
     names = {f["name"] for f in fields}
     for old, new in renames.items():
         if old not in names:
             raise ValueError(f"rename source column {old!r} not in schema")
         if new in names and new != old:
             raise ValueError(f"rename target column {new!r} already exists")
-    part_phys = set(partition_cols)
+    part_phys = set(snap.partition_cols)
     for c in drop_columns:
         f = next((f for f in fields if f["name"] == c), None)
         if f is None:
@@ -1548,30 +1366,12 @@ def evolve_delta_schema(
         existing.add(name)
     new_cfg = dict(cfg)
     new_cfg["delta.columnMapping.maxColumnId"] = str(max_id)
-    now_ms = int(time.time() * 1000)
-    version = max(_list_versions(path) + _checkpoint_versions(path)) + 1
-    _commit_actions(
+    schema_json = json.dumps({"type": "struct", "fields": out_fields})
+    _commit(
         path,
-        version,
-        [
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps({"type": "struct", "fields": out_fields}),
-                    "partitionColumns": partition_cols,
-                    "configuration": new_cfg,
-                    "createdTime": now_ms,
-                }
-            },
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "CHANGE COLUMN",
-                    "engineInfo": "daft_spark pure-python delta writer",
-                }
-            },
-        ],
+        snap,
+        [_metadata_action(schema_json, snap.partition_cols, new_cfg)],
+        "CHANGE COLUMN",
     )
 
 
@@ -1593,25 +1393,22 @@ def optimize_deltalake_py(
 
     Scale note: each bin is rewritten by a Spark job over just that
     bin's files; the driver only carries file metadata."""
-    from pyspark.sql import functions as F
-
-    _schema_json, _partition_cols, adds, _cfg, _proto = _replay_log_full(path)
+    snap = _snapshot(path)
     # Pin each bin read to the table's PHYSICAL file schema: files
     # written before a schema evolution lack later columns, and an
     # unpinned multi-file read would adopt one file's schema and
     # silently drop the others' columns from the rewrite.
-    _mode, _l2p, _p2l = _mapping_info(_schema_json, _cfg)
-    _part_logical = {_p2l.get(c, c) for c in (_partition_cols or [])}
-    _phys_fields = []
-    for f_ in StructType.fromJson(json.loads(_schema_json)).fields:
-        if f_.name in _part_logical:
-            continue  # partition columns are not in the data files
-        _phys_fields.append(
-            StructField(_l2p.get(f_.name, f_.name), f_.dataType, True)
-        )
-    _file_schema = StructType(_phys_fields)
+    _mode, l2p, p2l = _mapping_info(snap.schema_json, snap.configuration)
+    part_logical = {p2l.get(c, c) for c in snap.partition_cols}
+    file_schema = StructType(
+        [
+            StructField(l2p.get(f.name, f.name), f.dataType, True)
+            for f in StructType.fromJson(json.loads(snap.schema_json)).fields
+            if f.name not in part_logical  # not in the data files
+        ]
+    )
     by_part: dict[tuple, list[tuple[str, dict]]] = {}
-    for rel, add in adds.items():
+    for rel, add in snap.adds.items():
         if int(add.get("size") or 0) >= target_file_bytes:
             continue
         pv = add.get("partitionValues") or {}
@@ -1637,22 +1434,9 @@ def optimize_deltalake_py(
     removed = added = 0
     for bin_files in bins:
         rels = [rel for rel, _a in bin_files]
-        dv_adds = {rel: a for rel, a in bin_files if a.get("deletionVector")}
-        scan = spark.read.schema(_file_schema).parquet(
-            *[os.path.join(path, r) for r in rels]
-        )
-        if dv_adds:
-            dv_frame = _dv_positions_frame(spark, path, dv_adds)
-            tagged = scan.select(
-                "*",
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/").alias(
-                    "__fp"
-                ),
-                F.col("_metadata.row_index").alias("__pos"),
-            )
-            scan = tagged.join(
-                F.broadcast(dv_frame), ["__fp", "__pos"], "left_anti"
-            ).drop("__fp", "__pos")
+        # file-level rewrite: physical columns, DVs applied, no
+        # partition restore (the bin shares one partition directory)
+        scan = _scan(spark, path, dict(bin_files), file_schema, [])
         staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
         scan.coalesce(1).write.mode("overwrite").parquet(staging)
         part_dir = os.path.dirname(rels[0])
@@ -1690,18 +1474,7 @@ def optimize_deltalake_py(
             }
         )
         added += 1
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "OPTIMIZE",
-                "operationParameters": {"targetSize": str(target_file_bytes)},
-                "engineInfo": "daft_spark pure-python delta writer",
-            }
-        }
-    )
-    version = max(_list_versions(path) + _checkpoint_versions(path)) + 1
-    _commit_actions(path, version, actions)
+    _commit(path, snap, actions, "OPTIMIZE", {"targetSize": str(target_file_bytes)})
     return {"removed": removed, "added": added}
 
 
@@ -1716,20 +1489,14 @@ def vacuum_deltalake_py(
     needing the removed files breaks afterwards, exactly the documented
     VACUUM trade-off. DV files referenced by live adds survive. Returns
     the deleted (or would-delete, with ``dry_run``) relative paths."""
-    _schema_json, _pc, adds, _cfg, _proto = _replay_log_full(path)
-    live = set(adds)
+    live = set(_snapshot(path).adds)
     removed_at: dict[str, int] = {}
     for v in _list_versions(path):
-        with open(_commit_file(path, v)) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "remove" in action:
-                    removed_at[action["remove"]["path"]] = int(
-                        action["remove"].get("deletionTimestamp") or 0
-                    )
+        for action in _commit_actions_at(path, v):
+            if "remove" in action:
+                removed_at[action["remove"]["path"]] = int(
+                    action["remove"].get("deletionTimestamp") or 0
+                )
     now_ms = int(time.time() * 1000)
     out: list[str] = []
     for root, dirs, files in os.walk(path):
@@ -1762,9 +1529,10 @@ def delete_deltalake_py(path: str, spark: SparkSession, condition: str) -> None:
     time-travelable."""
     from pyspark.sql import functions as F
 
-    _gate_column_mapping(path)
-    schema_json, partition_cols, adds, cfg, _proto = _replay_log_full(path)
-    t = _scan_adds_tagged(spark, path, adds, schema_json, partition_cols)
+    snap = _snapshot(path)
+    _gate_column_mapping(snap)
+    params = {"predicate": condition}
+    t = _dml_scan(spark, path, snap)
     cond = F.expr(condition).eqNullSafe(F.lit(True))
     affected = (
         []
@@ -1774,25 +1542,19 @@ def delete_deltalake_py(path: str, spark: SparkSession, condition: str) -> None:
         )
     )
     if not affected:
-        _cow_commit(
-            path, adds, [], None, partition_cols, "DELETE",
-            {"predicate": condition}, None,
-        )
+        _cow_commit(path, snap, [], None, "DELETE", params, None)
         return
-    aff = _affected_scan(spark, path, adds, schema_json, partition_cols, affected)
+    aff = _dml_scan(spark, path, snap, _affected_adds(path, snap.adds, affected))
     surviving = aff.filter(~cond).drop("__fp", "__pos")
     extra = None
-    if _cdf_enabled(cfg):
+    if _cdf_enabled(snap.configuration):
         deleted = (
             aff.filter(cond)
             .drop("__fp", "__pos")
             .withColumn("_change_type", F.lit("delete"))
         )
-        extra = _write_cdc_file(path, deleted, partition_cols)
-    _cow_commit(
-        path, adds, affected, surviving, partition_cols, "DELETE",
-        {"predicate": condition}, extra,
-    )
+        extra = _write_cdc_file(path, deleted, snap.partition_cols)
+    _cow_commit(path, snap, affected, surviving, "DELETE", params, extra)
 
 
 def update_deltalake_py(
@@ -1806,18 +1568,20 @@ def update_deltalake_py(
     carry forward. Prior versions stay time-travelable."""
     from pyspark.sql import functions as F
 
-    _gate_column_mapping(path)
-    schema_json, partition_cols, adds, cfg, _proto = _replay_log_full(path)
-    tcols = [f["name"] for f in json.loads(schema_json)["fields"]]
+    snap = _snapshot(path)
+    _gate_column_mapping(snap)
+    params = {"predicate": condition}
+    tcols = [f["name"] for f in json.loads(snap.schema_json)["fields"]]
     # metaData is NOT rewritten by a file-granular commit, so SET
     # expressions must land in the table's declared column types
     ttypes = {
-        f.name: f.dataType for f in StructType.fromJson(json.loads(schema_json)).fields
+        f.name: f.dataType
+        for f in StructType.fromJson(json.loads(snap.schema_json)).fields
     }
     for c in set_exprs:
         if c not in tcols:
             raise ValueError(f"update target column {c!r} not in table schema")
-    t = _scan_adds_tagged(spark, path, adds, schema_json, partition_cols)
+    t = _dml_scan(spark, path, snap)
     cond = F.expr(condition).eqNullSafe(F.lit(True))
     affected = (
         []
@@ -1827,12 +1591,9 @@ def update_deltalake_py(
         )
     )
     if not affected:
-        _cow_commit(
-            path, adds, [], None, partition_cols, "UPDATE",
-            {"predicate": condition}, None,
-        )
+        _cow_commit(path, snap, [], None, "UPDATE", params, None)
         return
-    aff = _affected_scan(spark, path, adds, schema_json, partition_cols, affected)
+    aff = _dml_scan(spark, path, snap, _affected_adds(path, snap.adds, affected))
     updated = aff.select(
         *[
             F.when(cond, F.expr(str(set_exprs[c])).cast(ttypes[c]))
@@ -1844,7 +1605,7 @@ def update_deltalake_py(
         ]
     )
     extra = None
-    if _cdf_enabled(cfg):
+    if _cdf_enabled(snap.configuration):
         pre = (
             aff.filter(cond)
             .select(*tcols)
@@ -1858,11 +1619,8 @@ def update_deltalake_py(
                 for c in tcols
             ]
         ).withColumn("_change_type", F.lit("update_postimage"))
-        extra = _write_cdc_file(path, pre.unionAll(post), partition_cols)
-    _cow_commit(
-        path, adds, affected, updated, partition_cols, "UPDATE",
-        {"predicate": condition}, extra,
-    )
+        extra = _write_cdc_file(path, pre.unionAll(post), snap.partition_cols)
+    _cow_commit(path, snap, affected, updated, "UPDATE", params, extra)
 
 
 # ---------------------------------------------------------------------------
@@ -1884,31 +1642,22 @@ def restore_deltalake_py(path: str, version: int) -> None:
     versions in between stay time-travelable. Restoring past a VACUUM
     that deleted the target's files fails on read — the documented
     trade-off delta-spark shares."""
-    schema_json, partition_cols, target_adds, cfg, _proto = _replay_log_full(
-        path, version
-    )
-    cur_schema, cur_parts, cur_adds, cur_cfg, _ = _replay_log_full(path)
+    target = _snapshot(path, version)
+    cur = _snapshot(path)
     now_ms = int(time.time() * 1000)
     actions: list[dict] = []
     # configuration is metadata too: a restore past enable_cdf (or any
     # SET TBLPROPERTIES) must bring the target version's properties
     # back, exactly as delta-spark's RESTORE does
-    if (
-        schema_json != cur_schema
-        or partition_cols != cur_parts
-        or (cfg or {}) != (cur_cfg or {})
+    if (target.schema_json, target.partition_cols, target.configuration) != (
+        cur.schema_json,
+        cur.partition_cols,
+        cur.configuration,
     ):
         actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": schema_json,
-                    "partitionColumns": partition_cols,
-                    "configuration": cfg,
-                    "createdTime": now_ms,
-                }
-            }
+            _metadata_action(
+                target.schema_json, target.partition_cols, target.configuration
+            )
         )
 
     def _identity(add: dict) -> tuple:
@@ -1923,8 +1672,8 @@ def restore_deltalake_py(path: str, version: int) -> None:
             dv.get("cardinality"),
         )
 
-    for rel in cur_adds:
-        if rel not in target_adds:
+    for rel in cur.adds:
+        if rel not in target.adds:
             actions.append(
                 {
                     "remove": {
@@ -1934,24 +1683,13 @@ def restore_deltalake_py(path: str, version: int) -> None:
                     }
                 }
             )
-    for rel, add in target_adds.items():
-        if rel not in cur_adds or _identity(cur_adds[rel]) != _identity(add):
+    for rel, add in target.adds.items():
+        if rel not in cur.adds or _identity(cur.adds[rel]) != _identity(add):
             restored = dict(add)
             restored["modificationTime"] = now_ms
             restored["dataChange"] = True
             actions.append({"add": restored})
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "RESTORE",
-                "operationParameters": {"version": str(version)},
-                "engineInfo": "daft_spark pure-python delta writer",
-            }
-        }
-    )
-    new_version = max(_list_versions(path) + _checkpoint_versions(path)) + 1
-    _commit_actions(path, new_version, actions)
+    _commit(path, cur, actions, "RESTORE", {"version": str(version)})
 
 
 def enable_cdf_delta_py(path: str) -> None:
@@ -1962,10 +1700,11 @@ def enable_cdf_delta_py(path: str) -> None:
     feature instead). From then on DML commits carry explicit ``cdc``
     actions under ``_change_data/`` and ``table_changes_delta_py``
     serves per-version row-level changes."""
-    schema_json, partition_cols, _adds, cfg, proto = _replay_log_full(path)
-    if _cdf_enabled(cfg):
+    snap = _snapshot(path)
+    proto = snap.protocol
+    if _cdf_enabled(snap.configuration):
         return
-    new_cfg = dict(cfg)
+    new_cfg = dict(snap.configuration)
     new_cfg["delta.enableChangeDataFeed"] = "true"
     new_proto = dict(proto)
     if proto.get("writerFeatures") is not None:
@@ -1974,31 +1713,14 @@ def enable_cdf_delta_py(path: str) -> None:
         )
     else:
         new_proto["minWriterVersion"] = max(4, proto.get("minWriterVersion", 2))
-    now_ms = int(time.time() * 1000)
-    version = max(_list_versions(path) + _checkpoint_versions(path)) + 1
-    _commit_actions(
+    _commit(
         path,
-        version,
+        snap,
         [
             {"protocol": new_proto},
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": schema_json,
-                    "partitionColumns": partition_cols,
-                    "configuration": new_cfg,
-                    "createdTime": now_ms,
-                }
-            },
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "SET TBLPROPERTIES",
-                    "engineInfo": "daft_spark pure-python delta writer",
-                }
-            },
+            _metadata_action(snap.schema_json, snap.partition_cols, new_cfg),
         ],
+        "SET TBLPROPERTIES",
     )
 
 
@@ -2053,6 +1775,89 @@ def _write_cdc_file(path: str, cdc_df: DataFrame, partition_cols: list[str]) -> 
     return actions
 
 
+def _commit_changes(
+    path: str, version: int, partition_cols: list[str]
+) -> tuple[int, list[tuple]]:
+    """The row-level changes of JSON commit ``version``: (commit
+    timestamp, [(kind, rel, partitionValues, deletionVector|None,
+    keep_positions|None)]) with kind 'cdc' (the file carries
+    _change_type), 'insert' or 'delete' — the change data feed's
+    per-commit planning, shared by table_changes_delta_py and the
+    streaming CDF source. Per the spec's reader rules a commit WITH cdc
+    actions serves exactly those files; a cdc-less commit reconstructs:
+    dataChange adds are inserts, dataChange removes are deletes (read
+    from the still-on-disk retired files, the reason VACUUM retention
+    exists), and dataChange=false commits (OPTIMIZE) change nothing.
+
+    Reconstruction is DV-aware. A file re-added in place (a RESTORE
+    re-adds an identity-changed file with NO remove action; DV DML
+    before the feed was enabled pairs a remove with a re-add) changes
+    by its DV DIFF against the prior state: positions deleted before
+    but not after resurface as inserts, positions deleted after but
+    not before become deletes — exactly those ordinals, never
+    whole-file churn. Plain appends skip the prior-state replay."""
+    cdc, adds, removes = [], [], []
+    ts, op = 0, ""
+    for action in _commit_actions_at(path, version):
+        if "cdc" in action:
+            cdc.append((action["cdc"]["path"], action["cdc"].get("partitionValues")))
+        elif "add" in action and action["add"].get("dataChange", True):
+            a = action["add"]
+            adds.append((a["path"], a.get("partitionValues"), a.get("deletionVector")))
+        elif "remove" in action and action["remove"].get("dataChange", True):
+            r = action["remove"]
+            removes.append((r["path"], r.get("partitionValues"), r.get("deletionVector")))
+        elif "commitInfo" in action:
+            ts = int(action["commitInfo"].get("timestamp") or 0)
+            op = str(action["commitInfo"].get("operation") or "")
+    if cdc:
+        return ts, [("cdc", rel, pv or {}, None, None) for rel, pv in cdc]
+    need_prior = version > 0 and (
+        bool(removes) or any(dv for _r, _pv, dv in adds) or op.upper() == "RESTORE"
+    )
+    prior_adds = _snapshot(path, version - 1).adds if need_prior else {}
+    out: list[tuple] = []
+    for rel, pv, dv in adds:
+        prior = prior_adds.get(rel)
+        if prior is None:
+            # new (or resurfacing) file: its visible content inserts,
+            # MoR-applying any DV it carries
+            out.append(("insert", rel, pv or {}, dv, None))
+            continue
+        old_dv = prior.get("deletionVector")
+        old_pos = set(_dv_read(path, old_dv)) if old_dv else set()
+        new_pos = set(_dv_read(path, dv)) if dv else set()
+        if old_pos - new_pos:
+            out.append(("insert", rel, pv or {}, None, sorted(old_pos - new_pos)))
+        if new_pos - old_pos:
+            out.append(("delete", rel, pv or {}, None, sorted(new_pos - old_pos)))
+    add_rels = {rel for rel, _pv, _dv in adds}
+    for rel, pv, dv in removes:
+        if rel in add_rels:
+            continue  # in-place edit: covered by the DV diff above
+        if not os.path.exists(os.path.join(path, rel)):
+            raise FileNotFoundError(
+                f"change feed at version {version} needs vacuumed file {rel!r}"
+            )
+        # remove actions may omit partitionValues and (in this writer)
+        # never carry the retired file's deletionVector; recover both
+        # from the prior state so deletes reflect the rows that were
+        # actually visible
+        prior = prior_adds.get(rel)
+        if prior is None and pv is None and partition_cols:
+            raise ValueError(
+                f"change feed at version {version}: removed file "
+                f"{rel!r} not present at version {version - 1}"
+            )
+        if prior is not None:
+            if dv is None:
+                dv = prior.get("deletionVector")
+            if pv is None:
+                pv = prior.get("partitionValues")
+        out.append(("delete", rel, pv or {}, dv, None))
+    return ts, out
+
+
 def table_changes_delta_py(
     path: str,
     spark: SparkSession,
@@ -2061,231 +1866,61 @@ def table_changes_delta_py(
 ) -> DataFrame:
     """CHANGE DATA FEED read (the readChangeFeed/table_changes surface):
     row-level changes between two versions (inclusive), each stamped
-    with _change_type / _commit_version / _commit_timestamp. Per the
-    spec's reader requirements: a commit WITH cdc actions serves
-    exactly those files; a commit without them reconstructs — adds with
-    dataChange=true are inserts, removes with dataChange=true are
-    deletes (read from the still-on-disk retired files, the reason
-    VACUUM retention exists). dataChange=false commits (OPTIMIZE)
-    produce no changes. Requires delta.enableChangeDataFeed=true."""
+    with _change_type / _commit_version / _commit_timestamp, planned
+    per commit by _commit_changes. Requires
+    delta.enableChangeDataFeed=true."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, StringType
 
-    schema_json, partition_cols, _adds, cfg, _proto = _replay_log_full(path)
-    if not _cdf_enabled(cfg):
+    snap = _snapshot(path)
+    if not _cdf_enabled(snap.configuration):
         raise ValueError(
             "change data feed is not enabled on this table "
             "(enable_cdf_delta_py / delta.enableChangeDataFeed)"
         )
-    schema = StructType.fromJson(json.loads(schema_json))
+    partition_cols = snap.partition_cols
+    schema = StructType.fromJson(json.loads(snap.schema_json))
     cdc_schema = StructType(
-        list(schema.fields)
-        + [StructField("_change_type", StringType())]
+        list(schema.fields) + [StructField("_change_type", StringType())]
     )
-    # Partitioned tables: data AND cdc files omit the partition columns
-    # (spec: cdc files follow the data-file rules); values come from
-    # each action's partitionValues, typed from their string form.
-    part_types = {f.name: f.dataType for f in schema.fields if f.name in partition_cols}
-    data_fields = [f for f in schema.fields if f.name not in partition_cols]
-    file_schema = StructType(data_fields)
-    file_cdc_schema = StructType(
-        data_fields + [StructField("_change_type", StringType())]
-    )
+    cdc_cols = [f.name for f in cdc_schema.fields]
 
-    def _restore(entries, fschema, change_type=None):
-        """[(abs_path, pvals, dv_desc|None, keep_positions|None)] ->
-        DataFrame in cdc_schema column order with partition columns
-        restored per partition-value group. Files carrying a
-        deletion-vector descriptor are read MoR-style (the DV's row
-        positions anti-joined out on (file, row_index)); entries with an
-        explicit keep_positions list instead SELECT exactly those row
-        ordinals (the DV-diff reconstruction of an in-place re-add). Both
-        are the reason cdc-less DV commits (e.g. RESTORE) no longer
-        refuse."""
-        groups: dict[tuple, list[str]] = {}
-        dv_rows: list[tuple[str, int]] = []
-        keep_rows: list[tuple[str, int]] = []
-        keep_files: set[str] = set()
-        for p_, pv, dv, keep in entries:
-            key = tuple((pv or {}).get(c) for c in partition_cols)
-            groups.setdefault(key, []).append(p_)
-            ap = os.path.abspath(p_)
-            if keep is not None:
-                keep_files.add(ap)
-                keep_rows.extend((ap, int(x)) for x in keep)
-            elif dv:
-                dv_rows.extend((ap, int(x)) for x in _dv_read(path, dv))
-        dsch = StructType(
-            [StructField("__fp", StringType()), StructField("__pos", LongType())]
-        )
-        dv_frame = spark.createDataFrame(dv_rows, dsch) if dv_rows else None
-        keep_frame = spark.createDataFrame(keep_rows, dsch) if keep_files else None
-        outs = []
-        for key, files in _pv_sorted(groups):
-            df = spark.read.schema(fschema).parquet(*files)
-            if dv_frame is not None or keep_frame is not None:
-                tagged = df.select(
-                    "*",
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:/+", "/"
-                    ).alias("__fp"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-                if dv_frame is not None:
-                    tagged = tagged.join(
-                        F.broadcast(dv_frame), ["__fp", "__pos"], "left_anti"
-                    )
-                if keep_frame is not None:
-                    # rows from keep-listed files survive only if their
-                    # ordinal is listed; other files pass through
-                    kf = keep_frame.withColumn("__keep", F.lit(True))
-                    tagged = tagged.join(
-                        F.broadcast(kf), ["__fp", "__pos"], "left_outer"
-                    ).filter(
-                        (~F.col("__fp").isin(*sorted(keep_files)))
-                        | F.col("__keep").isNotNull()
-                    ).drop("__keep")
-                df = tagged.drop("__fp", "__pos")
-            if change_type is not None:
-                df = df.withColumn("_change_type", F.lit(change_type))
-            for c, raw in zip(partition_cols, key):
-                df = df.withColumn(c, F.lit(raw).cast(part_types[c]))
-            outs.append(df.select(*[f.name for f in cdc_schema.fields]))
-        res = outs[0]
-        for o in outs[1:]:
-            res = res.unionAll(o)
-        return res
+    def _restore(entries, change_type=None):
+        """[(rel, pvals, dv_desc|None, keep_positions|None)] ->
+        DataFrame in cdc_schema column order. Partitioned tables: data
+        AND cdc files omit the partition columns (spec: cdc files follow
+        the data-file rules); _scan restores them from partitionValues.
+        Files carrying a deletion-vector descriptor are read MoR-style;
+        entries with an explicit keep_positions list instead SELECT
+        exactly those row ordinals (the DV-diff reconstruction of an
+        in-place re-add)."""
+        adds = {
+            rel: {"partitionValues": pv or {}, "deletionVector": dv}
+            for rel, pv, dv, _keep in entries
+        }
+        keep = {rel: ks for rel, _pv, _dv, ks in entries if ks is not None}
+        if change_type is None:  # cdc files carry _change_type
+            return _scan(spark, path, adds, cdc_schema, partition_cols, keep=keep)
+        df = _scan(spark, path, adds, schema, partition_cols, keep=keep)
+        return df.withColumn("_change_type", F.lit(change_type)).select(*cdc_cols)
 
-    end = ending_version
     versions = [
         v for v in _list_versions(path)
-        if v >= starting_version and (end is None or v <= end)
+        if v >= starting_version and (ending_version is None or v <= ending_version)
     ]
     parts = []
     for v in versions:
-        cdc_entries: list[tuple] = []
-        # (rel, partitionValues, deletionVector?) — rel kept so in-place
-        # re-adds can be diffed against the prior state
-        add_entries: list[tuple[str, dict, dict | None]] = []
-        removes: list[tuple[str, dict | None, dict | None]] = []
-        ts = 0
-        op = ""
-        with open(_commit_file(path, v)) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "cdc" in action:
-                    cdc_entries.append(
-                        (
-                            os.path.join(path, action["cdc"]["path"]),
-                            action["cdc"].get("partitionValues") or {},
-                            None,
-                            None,
-                        )
-                    )
-                elif "add" in action and action["add"].get("dataChange", True):
-                    add_entries.append(
-                        (
-                            action["add"]["path"],
-                            action["add"].get("partitionValues") or {},
-                            action["add"].get("deletionVector"),
-                        )
-                    )
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    removes.append(
-                        (
-                            action["remove"]["path"],
-                            action["remove"].get("partitionValues"),
-                            action["remove"].get("deletionVector"),
-                        )
-                    )
-                elif "commitInfo" in action:
-                    ts = int(action["commitInfo"].get("timestamp") or 0)
-                    op = str(action["commitInfo"].get("operation") or "")
-        if cdc_entries:
-            df = _restore(cdc_entries, file_cdc_schema)
-        else:
-            # cdc-less commit: spec reconstruction — dataChange adds are
-            # inserts, dataChange removes are deletes — made DV/MoR-aware
-            # (r9 advice, medium). A RESTORE re-adds an identity-changed
-            # file with NO remove action and no cdc; its row-level change
-            # is the DV DIFF against the prior state: positions deleted
-            # before but not after resurface as inserts, positions
-            # deleted after but not before become deletes. Plain appends
-            # (no DVs, no removes, not a RESTORE) skip the prior-state
-            # replay entirely. DV DML on CDF-enabled tables still takes
-            # the cdc branch above.
-            need_prior = v > 0 and (
-                bool(removes)
-                or any(dv for _r, _pv, dv in add_entries)
-                or op.upper() == "RESTORE"
-            )
-            prior_adds: dict = {}
-            if need_prior:
-                _sj, _pc, prior_adds, _cfg, _pr = _replay_log_full(path, v - 1)
-            add_rels = {rel for rel, _pv, _dv in add_entries}
-            ins_entries: list[tuple] = []
-            del_entries: list[tuple] = []
-            for rel, pv, dv in add_entries:
-                abs_p = os.path.join(path, rel)
-                prior = prior_adds.get(rel) if need_prior else None
-                if prior is None:
-                    # new (or resurfacing) file: its visible content
-                    # inserts, MoR-applying any DV it carries
-                    ins_entries.append((abs_p, pv, dv, None))
-                    continue
-                old_dv = prior.get("deletionVector")
-                old_pos = set(_dv_read(path, old_dv)) if old_dv else set()
-                new_pos = set(_dv_read(path, dv)) if dv else set()
-                resurfaced = sorted(old_pos - new_pos)
-                hidden = sorted(new_pos - old_pos)
-                if resurfaced:
-                    ins_entries.append((abs_p, pv, None, resurfaced))
-                if hidden:
-                    del_entries.append((abs_p, pv, None, hidden))
-            # removes of files re-added in the SAME commit are covered by
-            # the DV diff above (the remove+re-add is one in-place edit)
-            live_removes = [r for r in removes if r[0] not in add_rels]
-            if live_removes:
-                missing = [
-                    r for r, _pv, _dv in live_removes
-                    if not os.path.exists(os.path.join(path, r))
-                ]
-                if missing:
-                    raise FileNotFoundError(
-                        f"change feed at version {v} needs vacuumed files {missing[:3]}"
-                    )
-                # remove actions may omit partitionValues and (in this
-                # writer) never carry the retired file's deletionVector;
-                # recover both from the prior state so deletes reflect
-                # the rows that were actually visible
-                for rel, pv, dv in live_removes:
-                    prior = prior_adds.get(rel)
-                    if prior is None and pv is None and partition_cols:
-                        raise ValueError(
-                            f"change feed at version {v}: removed file "
-                            f"{rel!r} not present at version {v - 1}"
-                        )
-                    if prior is not None:
-                        if dv is None:
-                            dv = prior.get("deletionVector")
-                        if pv is None:
-                            pv = prior.get("partitionValues") or {}
-                    del_entries.append((os.path.join(path, rel), pv or {}, dv, None))
-            pieces = []
-            if ins_entries:
-                pieces.append(_restore(ins_entries, file_schema, "insert"))
-            if del_entries:
-                pieces.append(_restore(del_entries, file_schema, "delete"))
-            if not pieces:
-                continue
-            df = pieces[0]
-            for p_ in pieces[1:]:
-                df = df.unionAll(p_)
+        ts, changes = _commit_changes(path, v, partition_cols)
+        if not changes:
+            continue
+        pieces = []
+        for kind in ("cdc", "insert", "delete"):
+            entries = [c[1:] for c in changes if c[0] == kind]
+            if entries:
+                pieces.append(_restore(entries, None if kind == "cdc" else kind))
+        df = pieces[0]
+        for p_ in pieces[1:]:
+            df = df.unionAll(p_)
         parts.append(
             df.withColumn("_commit_version", F.lit(v).cast("long"))
             .withColumn("_commit_timestamp", F.lit(ts).cast("long"))
@@ -2339,10 +1974,10 @@ def merge_deltalake_py(
     add action carries forward via log replay."""
     from pyspark.sql import functions as F
 
-    _gate_column_mapping(path)
-    schema_json, partition_cols, adds, cfg, _proto = _replay_log_full(path)
-    tcols = [f["name"] for f in json.loads(schema_json)["fields"]]
-    t = _scan_adds_tagged(spark, path, adds, schema_json, partition_cols)
+    snap = _snapshot(path)
+    _gate_column_mapping(snap)
+    tcols = [f["name"] for f in json.loads(snap.schema_json)["fields"]]
+    t = _dml_scan(spark, path, snap)
     s = source.withColumn("__smatch", F.lit(1)).alias("s")
     cond = F.expr(on)
     if when_matched_delete is True:
@@ -2362,7 +1997,8 @@ def merge_deltalake_py(
     # metaData is NOT rewritten by a file-granular commit — update
     # expressions must land in the table's declared column types
     ttypes = {
-        f.name: f.dataType for f in StructType.fromJson(json.loads(schema_json)).fields
+        f.name: f.dataType
+        for f in StructType.fromJson(json.loads(snap.schema_json)).fields
     }
     row_changes = del_cond | F.lit(bool(upd))
 
@@ -2401,9 +2037,7 @@ def merge_deltalake_py(
     matched = F.col("s.__smatch").isNotNull()
     update_applies = matched & ~del_cond & F.lit(bool(upd))
     if affected:
-        aff = _affected_scan(
-            spark, path, adds, schema_json, partition_cols, affected
-        )
+        aff = _dml_scan(spark, path, snap, _affected_adds(path, snap.adds, affected))
         joined = aff.alias("t").join(s, cond, "left")
         kept = joined.filter(~(matched & del_cond)).select(
             *[
@@ -2452,7 +2086,7 @@ def merge_deltalake_py(
         out = out.unionAll(p_)
 
     extra = None
-    if _cdf_enabled(cfg):
+    if _cdf_enabled(snap.configuration):
         cdc = None
         if joined is not None:
             deleted = joined.filter(matched & del_cond).select(
@@ -2474,11 +2108,8 @@ def merge_deltalake_py(
             insc = ins.withColumn("_change_type", F.lit("insert"))
             cdc = insc if cdc is None else cdc.unionAll(insc)
         if cdc is not None:
-            extra = _write_cdc_file(path, cdc, partition_cols)
-    _cow_commit(
-        path, adds, affected, out, partition_cols, "MERGE",
-        {"predicate": on}, extra,
-    )
+            extra = _write_cdc_file(path, cdc, snap.partition_cols)
+    _cow_commit(path, snap, affected, out, "MERGE", {"predicate": on}, extra)
 
 
 # ---------------------------------------------------------------------------
@@ -2603,7 +2234,7 @@ def delta_admitted_files(
     planner is sound for tables written before stats collection."""
     from daft_spark.io.iceberg_transforms import stats_admit
 
-    _schema_json, _parts, adds, _cfg, _proto = _replay_log_full(path, version)
+    adds = _snapshot(path, version).adds
     admitted = []
     for rel, add in sorted(adds.items()):
         st = add.get("stats")
@@ -2660,12 +2291,12 @@ def zorder_deltalake_py(
         raise ValueError("zorder_by must be non-empty")
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
-    _schema_json, partition_cols, adds, _cfg, _proto = _replay_log_full(path)
-    if partition_cols:
+    snap = _snapshot(path)
+    if snap.partition_cols:
         raise NotImplementedError("zorder of a partitioned table")
-    if not adds:
+    if not snap.adds:
         return {"removed": 0, "added": 0}
-    df = read_deltalake_py(path, spark)
+    df = read_deltalake_py(path, spark, version=snap.version)
     # Per-column quantization bits shrink with column count so the
     # interleaved key never shifts past bit 62 (bit 63 would overflow
     # the signed long: r11 ADVICE low). 1 col -> 16 bits, 2 -> 16,
@@ -2714,9 +2345,9 @@ def zorder_deltalake_py(
         )
     )
     now_ms = int(time.time() * 1000)
-    new_adds = _stage_data_files(clustered, path, 0, [], now_ms)
+    new_adds = _stage_data_files(clustered, path, snap.version + 1, [], now_ms)
     actions: list[dict] = []
-    for rel in sorted(adds):
+    for rel in snap.adds:
         actions.append(
             {
                 "remove": {
@@ -2729,18 +2360,5 @@ def zorder_deltalake_py(
     for a in new_adds:
         a["add"]["dataChange"] = False
         actions.append(a)
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "zOrderBy": json.dumps(zorder_by),
-                },
-                "engineInfo": "daft_spark pure-python delta writer",
-            }
-        }
-    )
-    version = max(_list_versions(path) + _checkpoint_versions(path)) + 1
-    _commit_actions(path, version, actions)
-    return {"removed": len(adds), "added": len(new_adds)}
+    _commit(path, snap, actions, "OPTIMIZE", {"zOrderBy": json.dumps(zorder_by)})
+    return {"removed": len(snap.adds), "added": len(new_adds)}

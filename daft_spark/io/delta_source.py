@@ -36,12 +36,23 @@ from pyspark.sql.types import StructType
 
 
 def _latest_version(path: str) -> int:
-    from daft_spark.io.delta import _checkpoint_versions, _list_versions
+    from daft_spark.io.delta import _table_versions
 
-    versions = _list_versions(path) + _checkpoint_versions(path)
+    versions = _table_versions(path)
     if not versions:
         raise FileNotFoundError(f"not a Delta table: {path}")
-    return max(versions)
+    return versions[-1]
+
+
+def _version_actions(path: str, version: int) -> list[dict]:
+    """The actions of JSON commit ``version``; [] for a checkpoint-only
+    version (its JSON commit was cleaned up)."""
+    from daft_spark.io.delta import _commit_actions_at
+
+    try:
+        return _commit_actions_at(path, version)
+    except FileNotFoundError:
+        return []
 
 
 class DeltaStreamSource(DataSource):
@@ -52,10 +63,9 @@ class DeltaStreamSource(DataSource):
         return "daft_delta"
 
     def schema(self):
-        from daft_spark.io.delta import _replay_log
+        from daft_spark.io.delta import _snapshot
 
-        schema_json, _parts, _adds = _replay_log(self.options["path"])
-        return StructType.fromJson(json.loads(schema_json))
+        return StructType.fromJson(json.loads(_snapshot(self.options["path"]).schema_json))
 
     def streamReader(self, schema) -> "DeltaStreamReader":
         return DeltaStreamReader(self.options, schema)
@@ -67,13 +77,13 @@ class DeltaStreamReader(DataSourceStreamReader):
         self.ignore_changes = str(options.get("ignorechanges", "")).lower() == "true"
         self.ignore_deletes = str(options.get("ignoredeletes", "")).lower() == "true"
         self.schema = schema
-        from daft_spark.io.delta import _mapping_info, _replay_log_full
+        from daft_spark.io.delta import _mapping_info, _snapshot
 
-        schema_json, part_cols, _adds, cfg, _proto = _replay_log_full(self.path)
+        snap = _snapshot(self.path)
         # column-mapped tables: data files + partitionValues use
         # physical names; the stream emits logical columns
-        _mode, self.l2p, p2l = _mapping_info(schema_json, cfg)
-        self.partition_cols = [p2l.get(c, c) for c in part_cols]
+        _mode, self.l2p, p2l = _mapping_info(snap.schema_json, snap.configuration)
+        self.partition_cols = [p2l.get(c, c) for c in snap.partition_cols]
 
     # -- offsets ----------------------------------------------------------
     def initialOffset(self) -> dict:
@@ -89,37 +99,24 @@ class DeltaStreamReader(DataSourceStreamReader):
 
     # -- planning ----------------------------------------------------------
     def _snapshot_adds(self, version: int) -> list[tuple[str, dict]]:
-        from daft_spark.io.delta import _replay_log
+        from daft_spark.io.delta import _snapshot
 
-        _sj, _pc, adds = _replay_log(self.path, version)
-        return sorted(adds.items())
+        return list(_snapshot(self.path, version).adds.items())
 
     def _incremental_adds(self, start: int, end: int) -> list[tuple[str, dict]]:
-        from daft_spark.io.delta import _commit_file
-
         out: list[tuple[str, dict]] = []
         for v in range(start + 1, end + 1):
-            f = _commit_file(self.path, v)
-            if not os.path.exists(f):
-                continue  # checkpoint-only version
             adds, removes = [], []
-            with open(f) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        # dataChange=false adds are rearrangements of
-                        # existing data (OPTIMIZE compaction) — already
-                        # delivered, never re-emitted (the Delta
-                        # streaming-source contract)
-                        if action["add"].get("dataChange", True):
-                            adds.append(action["add"])
-                    elif "remove" in action and action["remove"].get(
-                        "dataChange", True
-                    ):
-                        removes.append(action["remove"])
+            for action in _version_actions(self.path, v):
+                if "add" in action:
+                    # dataChange=false adds are rearrangements of
+                    # existing data (OPTIMIZE compaction) — already
+                    # delivered, never re-emitted (the Delta
+                    # streaming-source contract)
+                    if action["add"].get("dataChange", True):
+                        adds.append(action["add"])
+                elif "remove" in action and action["remove"].get("dataChange", True):
+                    removes.append(action["remove"])
             if removes and not (self.ignore_changes or self.ignore_deletes):
                 raise RuntimeError(
                     f"Delta commit {v} removes data files (UPDATE/DELETE/"
@@ -223,10 +220,9 @@ class DeltaCDFStreamSource(DataSource):
     def schema(self):
         from pyspark.sql.types import LongType, StringType, StructField
 
-        from daft_spark.io.delta import _replay_log
+        from daft_spark.io.delta import _snapshot
 
-        schema_json, _parts, _adds = _replay_log(self.options["path"])
-        base = StructType.fromJson(json.loads(schema_json))
+        base = StructType.fromJson(json.loads(_snapshot(self.options["path"]).schema_json))
         return StructType(
             list(base.fields)
             + [
@@ -241,18 +237,18 @@ class DeltaCDFStreamSource(DataSource):
 
 class DeltaCDFStreamReader(DataSourceStreamReader):
     def __init__(self, options, schema):
-        from daft_spark.io.delta import _cdf_enabled, _replay_log_full
+        from daft_spark.io.delta import _cdf_enabled, _snapshot
 
         self.path = options["path"]
         self.schema = schema
         self.start_version = int(options.get("startingversion", 0))
-        schema_json, part_cols, _adds, cfg, _proto = _replay_log_full(self.path)
-        if not _cdf_enabled(cfg):
+        snap = _snapshot(self.path)
+        if not _cdf_enabled(snap.configuration):
             raise ValueError(
                 "change data feed is not enabled on this table "
                 "(enable_cdf_delta_py / delta.enableChangeDataFeed)"
             )
-        self.partition_cols = list(part_cols)
+        self.partition_cols = snap.partition_cols
 
     def initialOffset(self) -> dict:
         return {"version": self.start_version - 1}
@@ -266,106 +262,24 @@ class DeltaCDFStreamReader(DataSourceStreamReader):
     def _version_entries(self, v: int) -> list[tuple]:
         """[(kind, abs_file, pvals_json, version, dv_json|None,
         keep_json|None)] for one commit — kind 'cdc' (file carries
-        _change_type), 'insert', or 'delete'. Mirrors
-        table_changes_delta_py's per-version planning, including the
-        DV-diff reconstruction of cdc-less commits: an in-place re-add
-        (RESTORE, or pre-enablement DV DML) streams exactly the
-        positions the commit resurfaced (inserts) or newly hid
-        (deletes), never whole-file churn."""
-        from daft_spark.io.delta import _commit_file, _dv_read, _replay_log
+        _change_type), 'insert', or 'delete' — planned by
+        _commit_changes exactly as table_changes_delta_py plans it."""
+        from daft_spark.io.delta import _commit_changes, _commit_file
 
-        f = _commit_file(self.path, v)
-        if not os.path.exists(f):
+        if not os.path.exists(_commit_file(self.path, v)):
             return []  # checkpoint-only version
-        cdc, adds, removes = [], [], []
-        op = ""
-        with open(f) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "commitInfo" in action:
-                    op = str(action["commitInfo"].get("operation") or "")
-                elif "cdc" in action:
-                    cdc.append(
-                        (action["cdc"]["path"], action["cdc"].get("partitionValues"))
-                    )
-                elif "add" in action and action["add"].get("dataChange", True):
-                    adds.append(
-                        (
-                            action["add"]["path"],
-                            action["add"].get("partitionValues"),
-                            action["add"].get("deletionVector"),
-                        )
-                    )
-                elif "remove" in action and action["remove"].get("dataChange", True):
-                    removes.append(
-                        (
-                            action["remove"]["path"],
-                            action["remove"].get("partitionValues"),
-                            action["remove"].get("deletionVector"),
-                        )
-                    )
-        out: list[tuple] = []
-        if cdc:
-            for rel, pv in cdc:
-                out.append(
-                    ("cdc", os.path.join(self.path, rel), json.dumps(pv or {}), v,
-                     None, None)
-                )
-            return out
-        # RESTORE re-adds a same-path file with its DV cleared and NO
-        # remove action (delta.py:1872); without the prior-state replay
-        # the whole file would stream as inserts, duplicating rows the
-        # stream already emitted. Mirror table_changes_delta_py
-        # (delta.py:2218) and diff against the prior state (r10 advice,
-        # medium).
-        need_prior = v > 0 and (
-            bool(removes)
-            or any(dv for _r, _pv, dv in adds)
-            or op.upper() == "RESTORE"
-        )
-        prior_adds: dict = {}
-        if need_prior:
-            _s, _p, prior_adds = _replay_log(self.path, v - 1)
-        add_rels = {rel for rel, _pv, _dv in adds}
-        for rel, pv, dv in adds:
-            full = os.path.join(self.path, rel)
-            prior = prior_adds.get(rel) if need_prior else None
-            if prior is None:
-                out.append(("insert", full, json.dumps(pv or {}), v,
-                            json.dumps(dv) if dv else None, None))
-                continue
-            old_dv = prior.get("deletionVector")
-            old_pos = set(_dv_read(self.path, old_dv)) if old_dv else set()
-            new_pos = set(_dv_read(self.path, dv)) if dv else set()
-            resurfaced = sorted(old_pos - new_pos)
-            hidden = sorted(new_pos - old_pos)
-            if resurfaced:
-                out.append(("insert", full, json.dumps(pv or {}), v, None,
-                            json.dumps(resurfaced)))
-            if hidden:
-                out.append(("delete", full, json.dumps(pv or {}), v, None,
-                            json.dumps(hidden)))
-        for rel, pv, dv in removes:
-            if rel in add_rels:
-                continue  # in-place edit: covered by the DV diff above
-            full = os.path.join(self.path, rel)
-            if not os.path.exists(full):
-                raise FileNotFoundError(
-                    f"change feed at version {v} needs vacuumed file {rel}"
-                )
-            prior = prior_adds.get(rel) or {}
-            if dv is None:
-                # remove actions in this writer never carry the retired
-                # file's DV; recover it from the prior state
-                dv = prior.get("deletionVector")
-            if pv is None:
-                pv = prior.get("partitionValues") or {}
-            out.append(("delete", full, json.dumps(pv or {}), v,
-                        json.dumps(dv) if dv else None, None))
-        return out
+        _ts, changes = _commit_changes(self.path, v, self.partition_cols)
+        return [
+            (
+                kind,
+                os.path.join(self.path, rel),
+                json.dumps(pv),
+                v,
+                json.dumps(dv) if dv else None,
+                json.dumps(keep) if keep is not None else None,
+            )
+            for kind, rel, pv, dv, keep in changes
+        ]
 
     def partitions(self, start: dict, end: dict):
         sv, ev = int(start["version"]), int(end["version"])

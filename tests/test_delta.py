@@ -210,7 +210,7 @@ def test_delta_deletion_vectors_merge_on_read(spark, tmp_path):
         delete_deltalake_dv_py,
         read_deltalake_py,
         write_deltalake_py,
-        _replay_log,
+        _snapshot,
     )
     from daft_spark.io.readers import load_table
     from tests.conftest import SF_DIR
@@ -239,7 +239,7 @@ def test_delta_deletion_vectors_merge_on_read(spark, tmp_path):
     got = read_deltalake_py(path, spark)
     assert got.count() == exp2.count() + 25
     # protocol carries the reader feature
-    _, _, adds = _replay_log(path)
+    adds = _snapshot(path).adds
     assert any(a.get("deletionVector") for a in adds.values())
     log_dir = os.path.join(path, "_delta_log")
     protos = []
@@ -254,7 +254,7 @@ def test_delta_deletion_vectors_merge_on_read(spark, tmp_path):
     assert protos[-1]["readerFeatures"] == ["deletionVectors"]
     # DV table refuses nothing on read; CoW overwrite compacts DVs away
     write_deltalake_py(got, path, mode="overwrite")
-    _, _, adds2 = _replay_log(path)
+    adds2 = _snapshot(path).adds
     assert not any(a.get("deletionVector") for a in adds2.values())
     assert read_deltalake_py(path, spark).count() == exp2.count() + 25
 
@@ -311,7 +311,7 @@ def test_dv_protocol_upgrade_carries_legacy_features(spark, tmp_path):
     appendOnly + invariants (PROTOCOL.md) — so external writers keep
     enforcing them."""
     from daft_spark.io.delta import (
-        _current_protocol,
+        _snapshot,
         delete_deltalake_dv_py,
         read_deltalake_py,
         write_deltalake_py,
@@ -320,7 +320,7 @@ def test_dv_protocol_upgrade_carries_legacy_features(spark, tmp_path):
     path = str(tmp_path / "t")
     write_deltalake_py(_df(spark, 0, 50), path, mode="overwrite")
     delete_deltalake_dv_py(path, spark, "id < 10")
-    proto = _current_protocol(path)
+    proto = _snapshot(path).protocol
     assert proto["minReaderVersion"] == 3 and proto["minWriterVersion"] == 7
     assert set(proto["writerFeatures"]) >= {
         "appendOnly", "invariants", "deletionVectors",
@@ -578,9 +578,9 @@ def test_optimize_partitioned_and_dv_materialization(spark, tmp_path):
     rows = {(r["k"], r["g"]) for r in back.collect()}
     assert rows == {(i, str(i % 2)) for i in range(12)}
     # compaction materialized the DVs: no live add carries one
-    from daft_spark.io.delta import _replay_log
+    from daft_spark.io.delta import _snapshot
 
-    _s, _pc, adds = _replay_log(p)
+    adds = _snapshot(p).adds
     assert not any(a.get("deletionVector") for a in adds.values())
     # partition dirs preserved
     assert all("/g=" in f or "g=" in f for f in back.inputFiles())
@@ -819,9 +819,17 @@ def _rewrite_classic_checkpoint(tbl, splitter):
     return v
 
 
-def test_multipart_checkpoint_read(spark, tmp_path):
+def _split_multipart(rows, log, v):
+    """Legacy multi-part layout: <v>.checkpoint.<o>.<p>.parquet, the
+    actions spread across the parts in any way."""
     import pyarrow.parquet as pq
 
+    mid = rows.num_rows // 2
+    pq.write_table(rows.slice(0, mid), os.path.join(log, f"{v:020d}.checkpoint.{1:010d}.{2:010d}.parquet"))
+    pq.write_table(rows.slice(mid), os.path.join(log, f"{v:020d}.checkpoint.{2:010d}.{2:010d}.parquet"))
+
+
+def test_multipart_checkpoint_read(spark, tmp_path):
     from daft_spark.io.delta import read_deltalake_py, write_deltalake_py
 
     tbl = str(tmp_path / "mp")
@@ -831,14 +839,7 @@ def test_multipart_checkpoint_read(spark, tmp_path):
             tbl, mode="append" if lo else "error",
         )
 
-    def split(rows, log, v):
-        # legacy layout: <v>.checkpoint.<o>.<p>.parquet, actions spread
-        # across the parts in any way
-        mid = rows.num_rows // 2
-        pq.write_table(rows.slice(0, mid), os.path.join(log, f"{v:020d}.checkpoint.{1:010d}.{2:010d}.parquet"))
-        pq.write_table(rows.slice(mid), os.path.join(log, f"{v:020d}.checkpoint.{2:010d}.{2:010d}.parquet"))
-
-    _rewrite_classic_checkpoint(tbl, split)
+    _rewrite_classic_checkpoint(tbl, _split_multipart)
     got = read_deltalake_py(tbl, spark)
     assert sorted(r["k"] for r in got.collect()) == list(range(30))
     # later commits replay on top of the multipart checkpoint
@@ -1036,7 +1037,7 @@ def test_dml_is_file_granular_cow(spark, tmp_path):
     import os
 
     from daft_spark.io.delta import (
-        _replay_log,
+        _snapshot,
         delete_deltalake_py,
         merge_deltalake_py,
         read_deltalake_py,
@@ -1053,11 +1054,11 @@ def test_dml_is_file_granular_cow(spark, tmp_path):
             ).coalesce(1),
             p, mode="append",
         )
-    _s, _p, adds0 = _replay_log(p)
+    adds0 = _snapshot(p).adds
     assert len(adds0) == 3
 
     def digests():
-        _s, _p, adds = _replay_log(p)
+        adds = _snapshot(p).adds
         return {
             rel: hashlib.sha256(
                 open(os.path.join(p, rel), "rb").read()
@@ -1516,3 +1517,74 @@ def test_zorder_data_skipping_majority_file_skip(spark, tmp_path):
     adm1, total1 = delta_admitted_files(path, box)
     skip_frac = 1 - len(adm1) / total1
     assert skip_frac > 0.5, (len(adm1), total1)
+
+
+# ---------------------------------------------------------------------------
+# one snapshot, one committer
+
+
+def test_txn_replay_skipped_on_multipart_checkpoint(spark, tmp_path):
+    """The exactly-once guard reads txn watermarks from the snapshot,
+    so it holds whatever the newest checkpoint's layout: a replayed
+    txn-stamped batch on a table whose checkpoint is multi-part is
+    skipped, not appended a second time."""
+    tbl = str(tmp_path / "mptxn")
+    for i in range(2):
+        write_deltalake_py(
+            spark.range(i * 10, (i + 1) * 10).select(F.col("id").alias("k")),
+            tbl, mode="append" if i else "error", txn=("app", i),
+        )
+    _rewrite_classic_checkpoint(tbl, _split_multipart)
+    write_deltalake_py(
+        spark.range(10, 20).select(F.col("id").alias("k")),
+        tbl, mode="append", txn=("app", 1),
+    )
+    assert read_deltalake_py(tbl, spark).count() == 20
+
+
+@pytest.mark.parametrize("kind", ["dv_delete", "optimize"])
+def test_checkpoint_on_every_commit_kind(spark, tmp_path, kind):
+    """The interval checkpoint belongs to the committer, so the 10th
+    commit writes one whether it is an append, a DV DELETE or an
+    OPTIMIZE."""
+    from daft_spark.io.delta import (
+        _checkpoint_versions,
+        delete_deltalake_dv_py,
+        optimize_deltalake_py,
+        restore_deltalake_py,
+    )
+
+    tbl = str(tmp_path / kind)
+    write_deltalake_py(_df(spark, 0, 100).repartition(4), tbl, mode="error")
+    for _ in range(9):  # versions 1..9: cheap metadata-only commits
+        restore_deltalake_py(tbl, 0)
+    if kind == "dv_delete":
+        delete_deltalake_dv_py(tbl, spark, "id % 7 = 0")
+        expected = 100 - len(range(0, 100, 7))
+    else:
+        assert optimize_deltalake_py(tbl, spark)["removed"] == 4
+        expected = 100
+    assert _checkpoint_versions(tbl) == [10]
+    log = os.path.join(tbl, "_delta_log")
+    for v in range(11):  # the checkpoint alone must carry the state
+        os.remove(os.path.join(log, f"{v:020d}.json"))
+    assert read_deltalake_py(tbl, spark).count() == expected
+
+
+def test_commit_on_stale_snapshot_never_clobbers(spark, tbl):
+    """Publishing against a snapshot whose next version already exists
+    raises the concurrent-commit error and leaves the existing commit
+    byte-identical (no temp file left behind either)."""
+    from daft_spark.io.delta import _commit, _commit_file, _snapshot
+
+    write_deltalake_py(_df(spark, 0, 10), tbl, mode="overwrite")
+    stale = _snapshot(tbl)
+    write_deltalake_py(_df(spark, 10, 20), tbl, mode="append")
+    with open(_commit_file(tbl, 1), "rb") as f:
+        before = f.read()
+    with pytest.raises(RuntimeError, match="concurrent Delta commit detected at version 1"):
+        _commit(tbl, stale, [], "WRITE", {"mode": "append"})
+    with open(_commit_file(tbl, 1), "rb") as f:
+        assert f.read() == before
+    assert not [f for f in os.listdir(os.path.join(tbl, "_delta_log")) if f.startswith(".tmp-")]
+    assert read_deltalake_py(tbl, spark).count() == 20

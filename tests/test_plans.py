@@ -365,6 +365,38 @@ def test_delta_dv_read_broadcasts_positions(spark, tmp_path):
     assert "SortMergeJoin" not in plan, plan
 
 
+@pytest.mark.parametrize("partition_by", [None, ["grp"]])
+def test_delta_read_plan_one_dv_anti_join(spark, tmp_path, partition_by):
+    """read_deltalake_py is a plain parquet scan until the table has
+    deletion vectors; then the DV positions apply through broadcast
+    left-anti joins only — exactly one on an unpartitioned table (the
+    optimizer may push it into each branch of a partitioned table's
+    union) — so the shared scan adds no work to Delta reads."""
+    from daft_spark.io.delta import (
+        delete_deltalake_dv_py,
+        read_deltalake_py,
+        write_deltalake_py,
+    )
+
+    def physical(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    df = spark.range(200).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("grp")
+    )
+    path = str(tmp_path / "t")
+    write_deltalake_py(df, path, mode="overwrite", partition_by=partition_by)
+    plan = physical(read_deltalake_py(path, spark))
+    assert "Join" not in plan, plan
+    delete_deltalake_dv_py(path, spark, "id % 5 = 0")
+    got = read_deltalake_py(path, spark)
+    plan = physical(got)
+    joins = plan.count("Join")
+    assert joins == len(re.findall(r"BroadcastHashJoin .*LeftAnti", plan)), plan
+    assert joins == (1 if partition_by is None else 3), plan
+    assert got.count() == 160
+
+
 def test_iceberg_pos_delete_read_no_shuffle_join(spark, tmp_path):
     """Position-delete application joins on (file, ordinal); with a
     small delete set AQE/broadcast must keep the probe side unshuffled."""

@@ -156,6 +156,8 @@ def _build_chain_edges(spark, n: int = 1_000_000, chain: int = 8):
 def _symmetric_checkpoint(pairs, spark):
     from pyspark.sql import functions as F
 
+    from daft_spark.operators.cluster import _loop_partitions
+
     fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = (
         fwd.unionAll(
@@ -166,7 +168,7 @@ def _symmetric_checkpoint(pairs, spark):
     )
     ecnt = edges.count()
     session_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_sp = min(int(session_sp), max(1, ecnt // 2_000_000 + 1))
+    loop_sp = _loop_partitions(ecnt, int(session_sp))
     return edges, ecnt, loop_sp, session_sp
 
 
