@@ -64,6 +64,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
+from daft_spark.io.publish import publish_once
+
 _LOG_DIR = "_delta_log"
 _MAX_SUPPORTED = {"minReaderVersion": 1, "minWriterVersion": 2}
 _ENGINE_INFO = "daft_spark pure-python delta writer"
@@ -332,32 +334,22 @@ def _commit(
     checkpoint_interval: int = 10,
 ) -> None:
     """Publish ``actions`` plus a commitInfo as version ``snapshot.version
-    + 1`` (0 for a new table: ``snapshot`` None). The
-    commit is staged to a temp file and hard-linked into place: link()
-    fails when the target exists (rename() would silently replace it),
-    so a writer whose snapshot went stale raises instead of clobbering
-    or stacking on another writer's commit, and readers never see a
-    half-written file. Every ``checkpoint_interval`` versions a
-    checkpoint follows, whatever the commit kind."""
+    + 1`` (0 for a new table: ``snapshot`` None) through the no-clobber
+    ``publish_once``: a writer whose snapshot went stale raises instead
+    of clobbering or stacking on another writer's commit. Every
+    ``checkpoint_interval`` versions a checkpoint follows, whatever the
+    commit kind."""
     version = 0 if snapshot is None else snapshot.version + 1
     info: dict = {"timestamp": int(time.time() * 1000), "operation": operation}
     if params is not None:
         info["operationParameters"] = params
     info["engineInfo"] = _ENGINE_INFO
-    log = _log_path(table_path)
-    os.makedirs(log, exist_ok=True)
-    tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        for a in [*actions, {"commitInfo": info}]:
-            f.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, _commit_file(table_path, version))
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent Delta commit detected at version {version} ({table_path})"
-        ) from None
-    finally:
-        os.remove(tmp)
+    os.makedirs(_log_path(table_path), exist_ok=True)
+    publish_once(
+        _commit_file(table_path, version),
+        "".join(json.dumps(a) + "\n" for a in [*actions, {"commitInfo": info}]),
+        f"concurrent Delta commit detected at version {version} ({table_path})",
+    )
     if checkpoint_interval and version > 0 and version % checkpoint_interval == 0:
         _write_checkpoint(table_path, version)
 

@@ -475,19 +475,17 @@ class GlueRestCatalog(Catalog):
         loc = properties.get("location") or os.path.join(dbinfo["LocationUri"], name)
         ti: dict = {"Name": name, "TableType": "EXTERNAL_TABLE"}
         if fmt == "iceberg":
-            from daft_spark.io.iceberg import _meta_dir, write_iceberg_py
+            from daft_spark.io.iceberg import (
+                _load_metadata,
+                _metadata_file,
+                write_iceberg_py,
+            )
 
             write_iceberg_py(source, loc, mode="error",
                              partition_by=properties.get("partition_by"))
-            md = _meta_dir(loc)
-            latest = max(
-                int(f[1:-len(".metadata.json")])
-                for f in os.listdir(md)
-                if f.startswith("v") and f.endswith(".metadata.json")
-            )
             ti["Parameters"] = {
                 "table_type": "ICEBERG",
-                "metadata_location": os.path.join(md, f"v{latest}.metadata.json"),
+                "metadata_location": _metadata_file(loc, _load_metadata(loc)[0]),
             }
             ti["StorageDescriptor"] = {
                 "Location": loc, "Columns": _glue_columns(source.schema),

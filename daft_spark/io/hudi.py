@@ -16,8 +16,10 @@ Bounded subset implemented (mirroring io/delta.py and io/iceberg.py):
 - ``write_hudi_py(df, path, mode, partition_by=None)``: append (new
   file groups per commit) / overwrite (a replacecommit retiring every
   prior file group) / error / ignore; data written with Spark's
-  parquet writer and renamed to Hudi base-file names; the commit JSON
-  is staged and os.rename()'d — single-writer file:// atomicity.
+  parquet writer and renamed to Hudi base-file names; the completed
+  instant is published with the no-clobber ``publish_once`` (io/
+  publish.py), so an instant another writer already completed raises
+  instead of being replaced.
   Partitioned tables stage through ``partitionBy`` on DUPLICATED
   columns (Hudi keeps the partition source columns IN the data files)
   and land under ``<partition>/`` dirs with per-partition write stats
@@ -42,6 +44,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from daft_spark.io.publish import publish_once
 
 _HOODIE = ".hoodie"
 
@@ -384,11 +388,8 @@ def write_hudi_py(
     for marker in (f"{instant}.{action}.requested", f"{instant}.{action}.inflight"):
         with open(os.path.join(td, marker), "w"):
             pass
-    tmp = os.path.join(td, f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(commit, f)
-    final = os.path.join(td, f"{instant}.{action}")
-    if os.path.exists(final):
-        os.remove(tmp)
-        raise RuntimeError(f"concurrent Hudi commit at instant {instant} ({path})")
-    os.rename(tmp, final)
+    publish_once(
+        os.path.join(td, f"{instant}.{action}"),
+        json.dumps(commit),
+        f"concurrent Hudi commit at instant {instant} ({path})",
+    )

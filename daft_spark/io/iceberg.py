@@ -24,11 +24,9 @@ the sibling pure-Python Avro codec (``daft_spark.io.avro``):
   identity, the transform value otherwise) so the source columns stay
   IN the data files (what native Iceberg writers produce — hive layout
   alone would drop them) while the directory layout yields each file's
-  partition tuple for its manifest entry. Each commit publishes one manifest, a new
-  manifest list (append re-references the previous snapshot's
-  manifests untouched), a new metadata.json, and finally rotates
-  ``version-hint.text`` via atomic rename — the same single-writer
-  file:// atomicity the Delta writer (io/delta.py) relies on.
+  partition tuple for its manifest entry. Each commit writes one
+  manifest and a new manifest list (an append re-references the head's
+  manifests untouched) and then publishes new metadata.
 - ``read_iceberg_py(path, spark, snapshot_id=None)``: resolve current
   (or time-travel) snapshot from metadata.json, walk manifest-list ->
   manifests -> live data files, and hand the file list to Spark's
@@ -49,8 +47,21 @@ the sibling pure-Python Avro codec (``daft_spark.io.avro``):
   (125/128, single-value binary) recorded on write and consulted on
   read, so selective filters skip files even on unpartitioned tables.
 
-Out of scope (raise cleanly): format v3, schema evolution beyond
-latest-schema reads, and non-local filesystems.
+Every metadata change goes through three pieces. ``_load_metadata``
+returns (version, metadata) of the newest ``v<N>.metadata.json``;
+``version-hint.text`` is only a lower bound it probes forward from.
+``_apply_updates`` applies a list of REST ``updateTable`` actions
+(add-snapshot, set-snapshot-ref, remove-snapshots, add-schema, ...) to
+a base metadata; it is the only builder of a metadata dict. ``_commit``
+applies them to the base the caller read and link-publishes
+``v<base+1>.metadata.json`` (io/publish.py): a commit names the base it
+read, and a stale base finds its target taken and raises. Only a blind
+append (``_commit_snapshot``) rebases onto the new head and retries —
+the Iceberg spec's optimistic concurrency, and the rule the Delta log
+follows (io/delta.py). The REST catalog server commits through the same
+``_commit``.
+
+Out of scope (raise cleanly): format v3 and non-local filesystems.
 
 At 100 TB the metadata walk is driver-side KB/MB work (exactly how
 pyiceberg plans scans); the data plane stays a multi-file parquet scan.
@@ -58,11 +69,13 @@ pyiceberg plans scans); the data plane stays a multi-file parquet scan.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -70,6 +83,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from daft_spark.io.avro import read_ocf, write_ocf
+from daft_spark.io.publish import ConcurrentCommitError, publish_once
 
 # ---------------------------------------------------------------------------
 # schema conversion (Spark StructType <-> Iceberg schema JSON)
@@ -381,35 +395,42 @@ def _meta_dir(path: str) -> str:
     return os.path.join(path, "metadata")
 
 
-def _read_version_hint(path: str) -> int | None:
-    hint = os.path.join(_meta_dir(path), "version-hint.text")
+def _metadata_file(path: str, version: int) -> str:
+    return os.path.join(_meta_dir(path), f"v{version}.metadata.json")
+
+
+def _load_metadata(path: str) -> tuple[int, dict]:
+    """(version, metadata) of the table's newest ``v<N>.metadata.json``.
+    ``version-hint.text`` is only a lower bound: a commit links its
+    metadata file before it rotates the hint, so the loader probes
+    forward from the hint (or from the highest listed version when the
+    hint is missing or points nowhere)."""
+    md = _meta_dir(path)
     try:
-        with open(hint) as f:
-            return int(f.read().strip())
+        with open(os.path.join(md, "version-hint.text")) as f:
+            v = int(f.read().strip())
     except (OSError, ValueError):
-        return None
+        v = None
+    if v is None or not os.path.exists(_metadata_file(path, v)):
+        if not os.path.isdir(md):
+            raise FileNotFoundError(f"not an Iceberg table (no metadata/ under {path})")
+        stems = [
+            f[1 : -len(".metadata.json")]
+            for f in os.listdir(md)
+            if f.startswith("v") and f.endswith(".metadata.json")
+        ]
+        versions = [int(n) for n in stems if n.isdigit()]
+        if not versions:
+            raise FileNotFoundError(f"no v*.metadata.json under {md}")
+        v = max(versions)
+    while os.path.exists(_metadata_file(path, v + 1)):
+        v += 1
+    with open(_metadata_file(path, v)) as f:
+        return v, json.load(f)
 
 
 def _latest_metadata(path: str) -> dict:
-    md = _meta_dir(path)
-    v = _read_version_hint(path)
-    if v is not None:
-        fp = os.path.join(md, f"v{v}.metadata.json")
-        if os.path.exists(fp):
-            with open(fp) as f:
-                return json.load(f)
-    if not os.path.isdir(md):
-        raise FileNotFoundError(f"not an Iceberg table (no metadata/ under {path})")
-    versions = sorted(
-        int(f[1 : -len(".metadata.json")])
-        for f in os.listdir(md)
-        if f.startswith("v") and f.endswith(".metadata.json")
-        and f[1 : -len(".metadata.json")].isdigit()
-    )
-    if not versions:
-        raise FileNotFoundError(f"no v*.metadata.json under {md}")
-    with open(os.path.join(md, f"v{versions[-1]}.metadata.json")) as f:
-        return json.load(f)
+    return _load_metadata(path)[1]
 
 
 def _to_local(p: str, table_path: str) -> str:
@@ -524,11 +545,6 @@ def _live_files_and_deletes(
     data.sort(key=lambda r: r["path"])
     deletes.sort(key=lambda r: r["path"])
     return data, deletes
-
-
-def _live_data_files(meta: dict, table_path: str, snapshot_id: int | None = None) -> list[str]:
-    data, _deletes = _live_files_and_deletes(meta, table_path, snapshot_id)
-    return [r["path"] for r in data]
 
 
 def _current_ice_schema(meta: dict) -> dict:
@@ -1157,14 +1173,14 @@ def write_iceberg_py(
     partition_by: list[str] | None = None,
     sort_by: list[str] | None = None,
     _upsert_by: list[str] | None = None,
-    _publish: bool = True,
     summary_props: dict | None = None,
     set_properties: dict | None = None,
-) -> dict | None:
+) -> None:
     """Write ``df`` as one Iceberg v2 commit: parquet data files, one
-    manifest, a manifest list, metadata.json v(N+1), then rotate
-    version-hint.text (atomic rename = publish). ``partition_by``
-    declares the partition spec — identity column names and/or hidden
+    manifest, a manifest list, then metadata v(N+1) on the version N it
+    read (_commit_snapshot: only a blind append survives another writer
+    publishing first). ``partition_by`` declares the partition spec —
+    identity column names and/or hidden
     transforms (``bucket(N, col)``, ``truncate(W, col)``, ``days(col)``,
     ``months(col)``, ``years(col)``, see _parse_partition_term); data
     files keep the source columns (staged through partitionBy on
@@ -1174,23 +1190,66 @@ def write_iceberg_py(
     physically sorts rows within each written file — tightening the
     per-file lower/upper bounds the stats pruner consults, the reason
     sorted layouts exist. Prior sort orders are carried forward;
-    equivalent orders reuse their order-id."""
+    equivalent orders reuse their order-id. ``set_properties`` merges
+    into the table properties in the same commit (streaming sinks keep
+    their idempotence record there: snapshot summaries expire with
+    their snapshots, properties don't)."""
+    if mode not in ("append", "overwrite", "error", "ignore"):
+        raise ValueError(f"unsupported mode {mode!r}")
+    try:
+        base = _load_metadata(path)
+    except FileNotFoundError:
+        base = (0, None)
+    if base[1] is not None and mode == "error":
+        raise FileExistsError(f"Iceberg table already exists at {path}")
+    if base[1] is not None and mode == "ignore":
+        return
+    staged = _stage_write(
+        df, path, base, mode, partition_by, sort_by, _upsert_by, summary_props
+    )
+    if set_properties:
+        staged.updates.append(
+            {
+                "action": "set-properties",
+                "updates": {str(k): str(v) for k, v in set_properties.items()},
+            }
+        )
+    _commit_snapshot(
+        staged, lambda: _load_metadata(path), functools.partial(_commit, path)
+    )
+
+
+class _Staged(NamedTuple):
+    """A write whose data files and manifests sit in the table but
+    whose snapshot is not committed yet."""
+
+    path: str
+    version: int | None  # base version, as the loader returned it
+    base: dict | None  # metadata the write was staged on (None: new table)
+    snapshot: dict  # snapshot-id, summary, schema-id
+    manifests: list[dict]  # manifest-list entries this write added
+    updates: list[dict]  # schema / spec / sort-order / property actions
+    overwrite: bool
+
+
+def _stage_write(
+    df: DataFrame,
+    path: str,
+    base: tuple[int | None, dict | None],
+    mode: str,
+    partition_by: list[str] | None = None,
+    sort_by: list[str] | None = None,
+    upsert_by: list[str] | None = None,
+    summary_props: dict | None = None,
+) -> _Staged:
+    """Everything of write_iceberg_py up to the commit, against ``base``
+    = (version, metadata) as a loader returned it: data files under
+    data/, their manifests, and the metadata actions the write needs."""
     from urllib.parse import unquote
 
     from pyspark.sql import functions as F
 
-    if mode not in ("append", "overwrite", "error", "ignore"):
-        raise ValueError(f"unsupported mode {mode!r}")
-    md = _meta_dir(path)
-    try:
-        prior = _latest_metadata(path)
-    except FileNotFoundError:
-        prior = None
-    if prior is not None and mode == "error":
-        raise FileExistsError(f"Iceberg table already exists at {path}")
-    if prior is not None and mode == "ignore":
-        return
-
+    version, prior = base
     # An append with no explicit partition_by ADOPTS the table's default
     # spec (the spec is table state, not a per-write argument — real
     # writers behave this way, and it is what makes partition evolution
@@ -1223,13 +1282,15 @@ def write_iceberg_py(
                 "(evolve_iceberg_partition_spec)"
             )
 
-    now_ms = int(time.time() * 1000)
     snapshot_id = uuid.uuid4().int % (1 << 62)
-    seq = (prior.get("last-sequence-number", 0) if prior else 0) + 1
+    updates: list[dict] = []
 
     # Schema + field ids: appends REUSE the table's current schema (and
     # its stable field ids — the spec's evolution invariant) rather than
-    # re-deriving ids positionally; creates/overwrites mint fresh ids.
+    # re-deriving ids positionally. A create or an overwrite with a new
+    # shape adds a schema whose ids are minted above last-column-id
+    # (spec: ids are never reused), keeping older schemas resolvable
+    # for old snapshots; an overwrite with the same shape keeps it.
     if prior is not None and mode == "append":
         ice_schema = _current_ice_schema(prior)
         cur_names = [f["name"] for f in ice_schema["fields"]]
@@ -1240,45 +1301,25 @@ def write_iceberg_py(
                 "first (evolve_iceberg_schema)"
             )
         df = df.select(*cur_names)
-        last_column_id = prior.get(
-            "last-column-id", max(f["id"] for f in ice_schema["fields"])
-        )
-        schemas = prior.get("schemas") or [ice_schema]
-        current_schema_id = prior.get("current-schema-id", 0)
-    elif prior is not None:
-        # overwrite of an existing table: same shape reuses the current
-        # schema + ids; a different shape becomes a NEW schema entry
-        # with ids minted above last-column-id (spec: ids are never
-        # reused), keeping older schemas resolvable for old snapshots.
-        cur = _current_ice_schema(prior)
-        fresh = _optionalize_schema(schema_to_iceberg(df.schema))
-        same = [(f["name"], _type_sig(f["type"])) for f in cur["fields"]] == [
-            (f["name"], _type_sig(f["type"])) for f in fresh["fields"]
-        ]
-        if same:
-            ice_schema = cur
-            schemas = prior.get("schemas") or [cur]
-            current_schema_id = prior.get("current-schema-id", 0)
-            last_column_id = prior.get(
-                "last-column-id", max(f["id"] for f in cur["fields"])
-            )
-        else:
-            prev = prior.get("schemas") or []
-            sid = max((s.get("schema-id", 0) for s in prev), default=-1) + 1
-            ice_schema = dict(
-                _optionalize_schema(
-                    schema_to_iceberg(df.schema, start_id=prior.get("last-column-id", 0))
-                ),
-                **{"schema-id": sid},
-            )
-            schemas = prev + [ice_schema]
-            current_schema_id = sid
-            last_column_id = ice_schema["last-column-id"]
     else:
-        ice_schema = _optionalize_schema(schema_to_iceberg(df.schema))
-        last_column_id = ice_schema["last-column-id"]
-        schemas = [ice_schema]
-        current_schema_id = ice_schema.get("schema-id", 0)
+        fresh = _optionalize_schema(
+            schema_to_iceberg(df.schema, start_id=(prior or {}).get("last-column-id", 0))
+        )
+        ice_schema = _current_ice_schema(prior) if prior is not None else None
+        if ice_schema is None or [
+            (f["name"], _type_sig(f["type"])) for f in ice_schema["fields"]
+        ] != [(f["name"], _type_sig(f["type"])) for f in fresh["fields"]]:
+            prev = (prior or {}).get("schemas") or []
+            sid = max((s.get("schema-id", 0) for s in prev), default=-1) + 1
+            ice_schema = dict(fresh, **{"schema-id": sid})
+            updates += [
+                {
+                    "action": "add-schema",
+                    "schema": ice_schema,
+                    "last-column-id": ice_schema["last-column-id"],
+                },
+                {"action": "set-current-schema", "schema-id": sid},
+            ]
 
     # Stage data files via Spark's parquet writer, move under data/.
     # partitionBy consumes DERIVED columns (_p_<name> — a duplicate for
@@ -1320,7 +1361,7 @@ def write_iceberg_py(
     writer.parquet(staging)
     data_dir = os.path.join(path, "data")
     os.makedirs(data_dir, exist_ok=True)
-    os.makedirs(md, exist_ok=True)
+    os.makedirs(_meta_dir(path), exist_ok=True)
 
     parsers = {t["name"]: t["parse"] for t in terms}
 
@@ -1348,181 +1389,59 @@ def write_iceberg_py(
             dst = os.path.join(data_dir, rel_out, name) if rel_out else os.path.join(data_dir, name)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             shutil.move(os.path.join(root, f), dst)
-            vcounts, ncounts, lower, upper = _parquet_column_stats(
-                dst, schema_field_ids, schema_field_types
-            )
             entries.append(
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,  # inherited from the manifest
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": dst,
-                        "file_format": "PARQUET",
-                        "partition": {c: pvals.get(c) for c, _ in part_fields},
-                        "record_count": _parquet_rows(dst),
-                        "file_size_in_bytes": os.path.getsize(dst),
-                        "value_counts": vcounts,
-                        "null_value_counts": ncounts,
-                        "lower_bounds": lower,
-                        "upper_bounds": upper,
-                        "equality_ids": None,
-                    },
-                }
+                _file_entry(
+                    snapshot_id,
+                    dst,
+                    partition={c: pvals.get(c) for c, _ in part_fields},
+                    stats=_parquet_column_stats(dst, schema_field_ids, schema_field_types),
+                )
             )
     shutil.rmtree(staging, ignore_errors=True)
 
     # Spec catalog: reuse an identical existing spec (its id and field
-    # ids) or mint the next spec-id; ALL specs stay in the metadata so
+    # ids) or add the next spec-id; ALL specs stay in the metadata so
     # older manifests — written under earlier specs — remain resolvable
     # (partition evolution, spec §Partition Evolution).
-    spec_id, spec_fields, all_specs, last_pid = _assign_partition_spec(
-        terms, schema_field_ids, (prior or {}).get("partition-specs", [])
-    )
-    manifest_path = os.path.join(md, f"{uuid.uuid4().hex}-m0.avro")
-    write_ocf(
-        manifest_path,
-        _manifest_entry_schema(part_fields),
-        entries,
-        metadata={
-            "schema": json.dumps(ice_schema),
-            "partition-spec": json.dumps(spec_fields),
-            "partition-spec-id": str(spec_id),
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-    added_rows = sum(e["data_file"]["record_count"] for e in entries)
-    new_manifest = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": spec_id,
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(entries),
-        "existing_data_files_count": 0,
-        "deleted_data_files_count": 0,
-        "added_rows_count": added_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    manifests = [new_manifest]
-    if mode == "append" and prior is not None:
-        prior_snap = current_snapshot(prior)
-        if prior_snap is not None:
-            _, _, prev = read_ocf(_to_local(prior_snap["manifest-list"], path))
-            manifests.extend(prev)  # untouched prior manifests carry over
+    spec_id, spec_fields, spec_updates = _spec_updates(terms, schema_field_ids, prior)
+    updates += spec_updates
+    manifests = [
+        _write_manifest(
+            path, entries, _manifest_entry_schema(part_fields), ice_schema,
+            spec_id, spec_fields,
+        )
+    ]
 
-    if _upsert_by:
+    if upsert_by:
         # single-commit UPSERT (the Flink CDC shape): an equality-delete
         # manifest shares this snapshot's sequence number — the spec's
         # strictly-older rule deletes every PRIOR row with the key while
         # the same-sequence inserts above survive their own delete
         if prior is None or mode != "append":
             raise ValueError("upsert requires an existing table and mode='append'")
-        eq_cols = list(_upsert_by)
+        eq_cols = list(upsert_by)
         missing = [c for c in eq_cols if c not in schema_field_ids]
         if missing:
             raise ValueError(f"upsert key columns not in table schema: {missing}")
-        eq_ids = [schema_field_ids[c] for c in eq_cols]
-        dstaging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-        df.select(*eq_cols).distinct().write.mode("overwrite").parquet(dstaging)
-        delete_entries = []
-        for droot, _dd, dfiles in os.walk(dstaging):
-            for f in sorted(dfiles):
-                if not f.endswith(".parquet"):
-                    continue
-                dname = f"{uuid.uuid4().hex}-deletes.parquet"
-                ddst = os.path.join(data_dir, dname)
-                shutil.move(os.path.join(droot, f), ddst)
-                delete_entries.append(
-                    {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": None,
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": 2,  # EQUALITY_DELETES
-                            "file_path": ddst,
-                            "file_format": "PARQUET",
-                            "partition": {},
-                            "record_count": _parquet_rows(ddst),
-                            "file_size_in_bytes": os.path.getsize(ddst),
-                            "equality_ids": eq_ids,
-                        },
-                    }
-                )
-        shutil.rmtree(dstaging, ignore_errors=True)
-        dspec_id, all_specs = _unpartitioned_spec_id({"partition-specs": all_specs})
-        dm_path = os.path.join(md, f"{uuid.uuid4().hex}-m0.avro")
-        write_ocf(
-            dm_path,
-            _manifest_entry_schema([]),
-            delete_entries,
-            metadata={
-                "schema": json.dumps(ice_schema),
-                "partition-spec": json.dumps([]),
-                "partition-spec-id": str(dspec_id),
-                "format-version": "2",
-                "content": "deletes",
-            },
+        delete_entries = _stage_delete_files(
+            df.select(*eq_cols).distinct(), path, snapshot_id, 2,
+            [schema_field_ids[c] for c in eq_cols],
         )
+        specs = prior.get("partition-specs", []) + [
+            u["spec"] for u in spec_updates if u["action"] == "add-spec"
+        ]
+        dspec_id, dspec_updates = _unpartitioned_spec(specs)
+        updates += dspec_updates
         manifests.append(
-            {
-                "manifest_path": dm_path,
-                "manifest_length": os.path.getsize(dm_path),
-                "partition_spec_id": dspec_id,
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(delete_entries),
-                "existing_data_files_count": 0,
-                "deleted_data_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in delete_entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
+            _write_manifest(
+                path, delete_entries, _manifest_entry_schema([]), ice_schema,
+                dspec_id, [], content=1,
+            )
         )
 
-    mlist_path = os.path.join(md, f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro")
-    write_ocf(
-        mlist_path,
-        _MANIFEST_FILE_SCHEMA,
-        manifests,
-        metadata={"format-version": "2"},
-    )
-
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist_path,
-        # summary is the spec's string map; extra props are how
-        # streaming sinks stamp their batch identity (exactly-once)
-        "summary": {
-            "operation": "overwrite" if mode == "overwrite" else "append",
-            **{str(k): str(v) for k, v in (summary_props or {}).items()},
-        },
-        "schema-id": current_schema_id,
-    }
-    # parent-snapshot-id is the spec's ancestry pointer — incremental /
-    # streaming reads walk it (ancestorsBetween); absent only on the
-    # first snapshot. Overwrites still chain: history stays linear.
-    prior_head = current_snapshot(prior) if prior else None
-    if prior_head is not None:
-        snapshot["parent-snapshot-id"] = prior_head["snapshot-id"]
-    # Sort orders are table state: carry prior orders forward; a
+    # Sort orders are table state: prior orders carry forward; a
     # sort_by matching an existing order reuses its id, a new shape
-    # appends with the next id and becomes the default.
-    sort_orders = list((prior or {}).get("sort-orders") or [{"order-id": 0, "fields": []}])
-    sort_order_id = (prior or {}).get("default-sort-order-id", 0)
+    # gets the next id and becomes the default.
     if sort_terms:
         want = [
             {
@@ -1533,63 +1452,182 @@ def write_iceberg_py(
             }
             for s in sort_terms
         ]
-        match = next(
-            (o for o in sort_orders if o.get("fields") == want), None
-        )
+        orders = (prior or {}).get("sort-orders") or [_UNSORTED]
+        match = next((o for o in orders if o.get("fields") == want), None)
         if match is not None:
-            sort_order_id = match["order-id"]
+            order_id = match["order-id"]
         else:
-            sort_order_id = max(o.get("order-id", 0) for o in sort_orders) + 1
-            sort_orders.append({"order-id": sort_order_id, "fields": want})
-    meta = {
-        "format-version": 2,
-        "table-uuid": prior["table-uuid"] if prior else str(uuid.uuid4()),
-        "location": path,
-        "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
-        "last-column-id": last_column_id,
-        "current-schema-id": current_schema_id,
-        "schemas": schemas,
-        "default-spec-id": spec_id,
-        "partition-specs": all_specs,
-        "last-partition-id": max(last_pid, (prior or {}).get("last-partition-id", 999)),
-        "default-sort-order-id": sort_order_id,
-        "sort-orders": sort_orders,
-        "current-snapshot-id": snapshot_id,
-        "snapshots": ((prior.get("snapshots", []) if prior else []) + [snapshot]),
-        "snapshot-log": (
-            (prior.get("snapshot-log", []) if prior else [])
-            + [{"snapshot-id": snapshot_id, "timestamp-ms": now_ms}]
-        ),
-        "metadata-log": [],
-        # named refs persist across commits (they pin their snapshots)
-        "refs": (prior.get("refs", {}) if prior else {}),
-        # table properties persist; set_properties merges in the SAME
-        # publish (streaming sinks keep their idempotence record here —
-        # snapshot summaries expire with their snapshots, properties
-        # don't, and a property read is O(1) per batch)
-        "properties": {
-            **((prior.get("properties") or {}) if prior else {}),
-            **{str(k): str(v) for k, v in (set_properties or {}).items()},
+            order_id = max(o.get("order-id", 0) for o in orders) + 1
+            updates.append(
+                {
+                    "action": "add-sort-order",
+                    "sort-order": {"order-id": order_id, "fields": want},
+                }
+            )
+        if order_id != (prior or {}).get("default-sort-order-id", 0):
+            updates.append({"action": "set-default-sort-order", "sort-order-id": order_id})
+
+    snapshot = {
+        "snapshot-id": snapshot_id,
+        # summary is the spec's string map; extra props are how
+        # streaming sinks stamp their batch identity (exactly-once)
+        "summary": {
+            "operation": "overwrite" if mode == "overwrite" else "append",
+            **{str(k): str(v) for k, v in (summary_props or {}).items()},
+        },
+        "schema-id": ice_schema.get("schema-id", 0),
+    }
+    return _Staged(
+        path, version, prior, snapshot, manifests, updates, mode == "overwrite"
+    )
+
+
+# rebase attempts of a blind append; each costs one manifest-list write
+_APPEND_RETRIES = 10
+
+
+def _commit_snapshot(staged: _Staged, load, commit) -> None:
+    """Commit a staged write as main's new snapshot on the base it was
+    staged on: ``commit(version, base, updates)`` publishes, ``load()``
+    returns a fresh (version, base). Only a blind append — an append to
+    an existing table that adds data manifests and nothing else (no
+    deletes, schema, spec, sort order or properties) — may rebase: when
+    its publish loses to another writer it reloads, rebuilds its
+    manifest list on the new head and retries, up to _APPEND_RETRIES
+    times. Data files never conflict, and the staged manifests are
+    reused as they are. Any other write on a moved base raises. The
+    file path and the REST catalog client share this loop."""
+    blind = (
+        staged.base is not None
+        and not staged.overwrite
+        and not staged.updates
+        and all(m["content"] == 0 for m in staged.manifests)
+    )
+    version, base = staged.version, staged.base
+    for attempt in range(_APPEND_RETRIES + 1):
+        snap = _build_snapshot(
+            staged.path,
+            staged.snapshot,
+            staged.manifests,
+            current_snapshot(base) if base is not None else None,
+            (base or {}).get("last-sequence-number", 0) + 1,
+            carried=[] if staged.overwrite else None,
+        )
+        try:
+            commit(version, base, [*staged.updates, *_add_snapshot(snap)])
+            return
+        except ConcurrentCommitError:
+            os.remove(snap["manifest-list"])  # listed by no metadata
+            if not blind or attempt == _APPEND_RETRIES:
+                raise
+        version, base = load()
+
+
+def _file_entry(
+    snapshot_id: int,
+    dst: str,
+    content: int = 0,
+    partition: dict | None = None,
+    stats: tuple = (None, None, None, None),
+    equality_ids: list[int] | None = None,
+) -> dict:
+    """The ADDED manifest entry of one data (content 0), position delete
+    (1) or equality delete (2) file; its sequence number is inherited
+    from the manifest."""
+    value_counts, null_counts, lower, upper = stats
+    return {
+        "status": 1,  # ADDED
+        "snapshot_id": snapshot_id,
+        "sequence_number": None,
+        "file_sequence_number": None,
+        "data_file": {
+            "content": content,
+            "file_path": dst,
+            "file_format": "PARQUET",
+            "partition": partition or {},
+            "record_count": _parquet_rows(dst),
+            "file_size_in_bytes": os.path.getsize(dst),
+            "value_counts": value_counts,
+            "null_value_counts": null_counts,
+            "lower_bounds": lower,
+            "upper_bounds": upper,
+            "equality_ids": equality_ids,
         },
     }
-    if not _publish:
-        # REST-catalog commit flow: data/manifests are staged in shared
-        # storage, but the METADATA swap belongs to the catalog — hand
-        # back what an updateTable commit needs instead of publishing.
-        # new_manifests (the manifest-list entries THIS commit created,
-        # vs the carried prior ones) let the client rebase the snapshot
-        # onto a moved head in its 409 refresh-and-retry loop.
-        return {
-            "snapshot": snapshot,
-            "prior_snapshot_id": (prior or {}).get("current-snapshot-id"),
-            "metadata": meta,
-            "new_manifests": [
-                m for m in manifests if m.get("added_snapshot_id") == snapshot_id
-            ],
-        }
-    _publish_metadata(path, meta)
-    return None
+
+
+def _stage_delete_files(
+    df: DataFrame,
+    path: str,
+    snapshot_id: int,
+    content: int,
+    equality_ids: list[int] | None = None,
+) -> list[dict]:
+    """Write ``df`` as unpartitioned delete files under data/ and return
+    their manifest entries: content 2 (equality, ``df`` holds the
+    distinct key values) or 1 (position, ``df`` holds file_path/pos;
+    empty files are dropped)."""
+    suffix = "-deletes" if content == 2 else "-pos-deletes"
+    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
+    df.write.mode("overwrite").parquet(staging)
+    data_dir = os.path.join(path, "data")
+    os.makedirs(data_dir, exist_ok=True)
+    entries = []
+    for root, _dirs, files in os.walk(staging):
+        for f in sorted(files):
+            if not f.endswith(".parquet"):
+                continue
+            if content == 1 and _parquet_rows(os.path.join(root, f)) == 0:
+                continue
+            dst = os.path.join(data_dir, f"{uuid.uuid4().hex}{suffix}.parquet")
+            shutil.move(os.path.join(root, f), dst)
+            entries.append(
+                _file_entry(snapshot_id, dst, content, equality_ids=equality_ids)
+            )
+    shutil.rmtree(staging, ignore_errors=True)
+    return entries
+
+
+def _write_manifest(
+    path: str,
+    entries: list[dict],
+    entry_schema: dict,
+    ice_schema: dict,
+    spec_id: int,
+    spec_fields: list[dict],
+    content: int = 0,
+) -> dict:
+    """Write ``entries`` as one manifest (``content`` 0 data, 1 deletes)
+    and return its manifest-list entry. Its sequence numbers and
+    added_snapshot_id are left to _build_snapshot, which stamps them for
+    the snapshot that lists it."""
+    mpath = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
+    write_ocf(
+        mpath,
+        entry_schema,
+        entries,
+        metadata={
+            "schema": json.dumps(ice_schema),
+            "partition-spec": json.dumps(spec_fields),
+            "partition-spec-id": str(spec_id),
+            "format-version": "2",
+            "content": "deletes" if content else "data",
+        },
+    )
+    added = [e for e in entries if e["status"] == 1]
+    existing = [e for e in entries if e["status"] == 0]
+    return {
+        "manifest_path": mpath,
+        "manifest_length": os.path.getsize(mpath),
+        "partition_spec_id": spec_id,
+        "content": content,
+        "added_data_files_count": len(added),
+        "existing_data_files_count": len(existing),
+        "deleted_data_files_count": 0,
+        "added_rows_count": sum(e["data_file"]["record_count"] for e in added),
+        "existing_rows_count": sum(e["data_file"]["record_count"] for e in existing),
+        "deleted_rows_count": 0,
+    }
 
 
 def evolve_iceberg_schema(
@@ -1615,7 +1653,7 @@ def evolve_iceberg_schema(
     renames = dict(renames or {})
     add_columns = list(add_columns or [])
     drop_columns = list(drop_columns or [])
-    prior = _latest_metadata(path)
+    version, prior = _load_metadata(path)
     cur = _current_ice_schema(prior)
     fields = [dict(f) for f in cur["fields"]]
     names = {f["name"] for f in fields}
@@ -1673,12 +1711,15 @@ def evolve_iceberg_schema(
         "fields": out_fields,
         "last-column-id": ids.n,
     }
-    meta = dict(prior)
-    meta["schemas"] = prev_schemas + [new_schema]
-    meta["current-schema-id"] = sid
-    meta["last-column-id"] = ids.n
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    _publish_metadata(path, meta)
+    _commit(
+        path,
+        version,
+        prior,
+        [
+            {"action": "add-schema", "schema": new_schema, "last-column-id": ids.n},
+            {"action": "set-current-schema", "schema-id": sid},
+        ],
+    )
 
 
 def _default_spec(meta: dict) -> dict:
@@ -1754,27 +1795,33 @@ def _parse_spec_term(term: str, ice_fields: list[dict]) -> dict:
     return {"name": col, "transform": "identity", "source": col}
 
 
-def _assign_partition_spec(terms, schema_field_ids, prior_specs):
-    """(spec_id, spec_fields, all_specs, last_partition_id) for a write
-    or evolution. An existing spec with the same field list is reused
-    verbatim; otherwise a new spec-id is minted, and each field reuses
-    the field-id of an equivalent (source-id, transform) field from ANY
-    older spec — the spec's partition-field-id rules (ids are never
-    reused for different fields, always reused for the same one)."""
+def _spec_updates(
+    terms, schema_field_ids, meta: dict | None
+) -> tuple[int, list[dict], list[dict]]:
+    """(spec_id, spec fields, actions) making ``terms`` the default
+    spec of ``meta``. An existing spec with the same field list is
+    reused verbatim; otherwise an add-spec mints the next spec-id, and
+    each field reuses the field-id of an equivalent (source-id,
+    transform) field from ANY older spec — the spec's partition-field-id
+    rules (ids are never reused for different fields, always reused for
+    the same one). No actions when the spec is already the default."""
     candidate = [
         (t["name"], t["transform"], schema_field_ids[t["source"]]) for t in terms
     ]
-    prior_specs = list(prior_specs or [])
-    last = max(
-        (f["field-id"] for sp in prior_specs for f in sp.get("fields", [])),
-        default=999,
-    )
-    for s in prior_specs:
+    specs = list((meta or {}).get("partition-specs") or [])
+    default = (meta or {}).get("default-spec-id", 0)
+    for s in specs:
         have = [(f["name"], f["transform"], f["source-id"]) for f in s.get("fields", [])]
         if have == candidate:
-            return s.get("spec-id", 0), s.get("fields", []), prior_specs, max(999, last)
+            sid = s.get("spec-id", 0)
+            return sid, s.get("fields", []), (
+                [] if sid == default else [{"action": "set-default-spec", "spec-id": sid}]
+            )
+    last = max(
+        (f["field-id"] for sp in specs for f in sp.get("fields", [])), default=999
+    )
     by_key: dict[tuple, int] = {}
-    for sp in prior_specs:
+    for sp in specs:
         for f in sp.get("fields", []):
             by_key.setdefault((f["source-id"], f["transform"]), f["field-id"])
     fields = []
@@ -1786,28 +1833,135 @@ def _assign_partition_spec(terms, schema_field_ids, prior_specs):
         fields.append(
             {"name": name, "transform": transform, "source-id": source_id, "field-id": fid}
         )
-    spec_id = max((s.get("spec-id", 0) for s in prior_specs), default=-1) + 1
-    return spec_id, fields, prior_specs + [{"spec-id": spec_id, "fields": fields}], last
+    sid = max((s.get("spec-id", 0) for s in specs), default=-1) + 1
+    return sid, fields, [
+        {"action": "add-spec", "spec": {"spec-id": sid, "fields": fields}},
+        {"action": "set-default-spec", "spec-id": sid},
+    ]
 
 
-def _publish_metadata(path: str, meta: dict) -> None:
-    """Write v(N+1).metadata.json and rotate version-hint.text (atomic
-    rename = publish; an existing file at the new version is a
-    concurrent commit)."""
+_UNSORTED = {"order-id": 0, "fields": []}
+
+
+def _new_table_metadata(path: str) -> dict:
+    """The empty base a table's first commit applies its actions to."""
+    return {
+        "format-version": 2,
+        "table-uuid": str(uuid.uuid4()),
+        "location": path,
+        "last-sequence-number": 0,
+        "last-updated-ms": 0,
+        "last-column-id": 0,
+        "current-schema-id": 0,
+        "schemas": [],
+        "default-spec-id": 0,
+        "partition-specs": [],
+        "last-partition-id": 999,
+        "default-sort-order-id": 0,
+        "sort-orders": [_UNSORTED],
+        "current-snapshot-id": -1,
+        "snapshots": [],
+        "snapshot-log": [],
+        "metadata-log": [],
+        "refs": {},
+        "properties": {},
+    }
+
+
+def _apply_updates(base: dict, updates: list[dict]) -> dict:
+    """Apply REST ``updateTable`` actions to a copy of ``base`` — the one
+    builder of every metadata dict that reaches disk. ``main`` is the
+    current snapshot (set-snapshot-ref on it moves current-snapshot-id
+    and logs the move); other refs live in ``refs``. Raises ValueError
+    on an unknown action, snapshot or ref."""
+    meta = dict(base)
+    meta["last-updated-ms"] = int(time.time() * 1000)
+    for u in updates:
+        action = u.get("action")
+        if action == "add-snapshot":
+            snap = u["snapshot"]
+            meta["snapshots"] = [*meta.get("snapshots", []), snap]
+            meta["last-sequence-number"] = max(
+                meta.get("last-sequence-number", 0), snap.get("sequence-number", 0)
+            )
+            meta["last-updated-ms"] = snap["timestamp-ms"]
+        elif action == "set-snapshot-ref":
+            name, sid = u["ref-name"], u["snapshot-id"]
+            if all(s["snapshot-id"] != sid for s in meta.get("snapshots", [])):
+                raise ValueError(f"snapshot {sid} not found")
+            if name == "main":
+                meta["current-snapshot-id"] = sid
+                meta["snapshot-log"] = [
+                    *meta.get("snapshot-log", []),
+                    {"snapshot-id": sid, "timestamp-ms": meta["last-updated-ms"]},
+                ]
+            else:
+                ref = {k: v for k, v in u.items() if k not in ("action", "ref-name")}
+                meta["refs"] = {**(meta.get("refs") or {}), name: ref}
+        elif action == "remove-snapshot-ref":
+            refs = dict(meta.get("refs") or {})
+            if refs.pop(u["ref-name"], None) is None:
+                raise ValueError(f"ref {u['ref-name']!r} not found")
+            meta["refs"] = refs
+        elif action == "remove-snapshots":
+            gone = set(u["snapshot-ids"])
+            meta["snapshots"] = [
+                s for s in meta.get("snapshots", []) if s["snapshot-id"] not in gone
+            ]
+            meta["snapshot-log"] = [
+                e for e in meta.get("snapshot-log", []) if e.get("snapshot-id") not in gone
+            ]
+        elif action == "add-schema":
+            meta["schemas"] = [*meta.get("schemas", []), u["schema"]]
+            meta["last-column-id"] = max(
+                meta.get("last-column-id", 0), u["last-column-id"]
+            )
+        elif action == "set-current-schema":
+            meta["current-schema-id"] = u["schema-id"]
+        elif action == "add-spec":
+            spec = u["spec"]
+            meta["partition-specs"] = [*meta.get("partition-specs", []), spec]
+            meta["last-partition-id"] = max(
+                [meta.get("last-partition-id", 999)]
+                + [f["field-id"] for f in spec["fields"]]
+            )
+        elif action == "set-default-spec":
+            meta["default-spec-id"] = u["spec-id"]
+        elif action == "add-sort-order":
+            meta["sort-orders"] = [*meta.get("sort-orders", []), u["sort-order"]]
+        elif action == "set-default-sort-order":
+            meta["default-sort-order-id"] = u["sort-order-id"]
+        elif action == "set-properties":
+            meta["properties"] = {**(meta.get("properties") or {}), **u["updates"]}
+        else:
+            raise ValueError(f"unsupported update {action!r}")
+    return meta
+
+
+def _commit(
+    path: str, version: int, base: dict | None, updates: list[dict]
+) -> tuple[int, dict]:
+    """The only writer of Iceberg metadata: apply ``updates`` to
+    ``base``, the metadata read at ``version`` (None and 0 create the
+    table), publish the result as ``v<version+1>.metadata.json`` with
+    the no-clobber link, then rotate version-hint.text. The version is
+    never taken from the hint: a commit whose base went stale finds its
+    target taken and raises ConcurrentCommitError. Returns the new
+    (version, metadata)."""
+    meta = _apply_updates(base if base is not None else _new_table_metadata(path), updates)
     md = _meta_dir(path)
-    version = (_read_version_hint(path) or 0) + 1
-    meta_file = os.path.join(md, f"v{version}.metadata.json")
-    tmp = meta_file + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    if os.path.exists(meta_file):
-        os.remove(tmp)
-        raise RuntimeError(f"concurrent Iceberg commit detected at v{version} ({path})")
-    os.rename(tmp, meta_file)
+    os.makedirs(md, exist_ok=True)
+    version += 1
+    publish_once(
+        _metadata_file(path, version),
+        json.dumps(meta),
+        f"concurrent Iceberg commit detected at v{version} ({path})",
+    )
     hint_tmp = os.path.join(md, f".hint-{uuid.uuid4().hex}")
     with open(hint_tmp, "w") as f:
         f.write(str(version))
     os.replace(hint_tmp, os.path.join(md, "version-hint.text"))
+    return version, meta
 
 
 def evolve_iceberg_partition_spec(path: str, partition_by: list[str] | None) -> None:
@@ -1822,23 +1976,13 @@ def evolve_iceberg_partition_spec(path: str, partition_by: list[str] | None) -> 
     matches. Reference: pyiceberg-managed tables evolve specs this way
     and daft plans through the resulting metadata
     (daft/io/iceberg/_iceberg.py:130)."""
-    prior = _latest_metadata(path)
+    version, prior = _load_metadata(path)
     cur = _current_ice_schema(prior)
     terms = [_parse_spec_term(t, cur["fields"]) for t in (partition_by or [])]
     schema_field_ids = {f["name"]: f["id"] for f in cur["fields"]}
-    spec_id, _fields, all_specs, last_pid = _assign_partition_spec(
-        terms, schema_field_ids, prior.get("partition-specs", [])
-    )
-    if spec_id == prior.get("default-spec-id", 0) and all_specs == prior.get(
-        "partition-specs", []
-    ):
-        return
-    meta = dict(prior)
-    meta["partition-specs"] = all_specs
-    meta["default-spec-id"] = spec_id
-    meta["last-partition-id"] = max(prior.get("last-partition-id", 999), last_pid)
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    _publish_metadata(path, meta)
+    _sid, _fields, updates = _spec_updates(terms, schema_field_ids, prior)
+    if updates:
+        _commit(path, version, prior, updates)
 
 
 def _parquet_rows(path: str) -> int:
@@ -1855,147 +1999,66 @@ def delete_iceberg_py(df: DataFrame, path: str, equality_by: list[str]) -> None:
     The delete file is a parquet of the DISTINCT equality values, its
     manifest entry carries content=2 + equality_ids, and its manifest
     is registered with content=1 in the manifest list."""
-    prior = _latest_metadata(path)
+    version, prior = _load_metadata(path)
     if prior.get("format-version", 1) > 2:
         raise NotImplementedError("Iceberg format v3+ not supported")
     equality_by = list(equality_by)
     if not equality_by:
         raise ValueError("equality_by must name at least one column")
-    sid = prior.get("current-schema-id", 0)
-    cur = next(
-        (s for s in prior.get("schemas", []) if s.get("schema-id") == sid), None
-    )
-    if cur is None:
-        raise ValueError("Iceberg metadata has no resolvable schema")
+    cur = _current_ice_schema(prior)
     name2id = {f["name"]: f["id"] for f in cur["fields"]}
     for c in equality_by:
         if c not in name2id:
             raise ValueError(f"equality column {c!r} not in table schema")
-    eq_ids = [name2id[c] for c in equality_by]
-
-    md = _meta_dir(path)
-    now_ms = int(time.time() * 1000)
-    snapshot_id = uuid.uuid4().int % (1 << 62)
-    seq = prior.get("last-sequence-number", 0) + 1
-
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    df.select(*equality_by).distinct().write.mode("overwrite").parquet(staging)
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    entries = []
-    for root, _dirs, files in os.walk(staging):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            name = f"{uuid.uuid4().hex}-deletes.parquet"
-            dst = os.path.join(data_dir, name)
-            shutil.move(os.path.join(root, f), dst)
-            entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 2,  # EQUALITY_DELETES
-                        "file_path": dst,
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": _parquet_rows(dst),
-                        "file_size_in_bytes": os.path.getsize(dst),
-                        "equality_ids": eq_ids,
-                    },
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
-    _commit_delete_manifest(path, prior, entries, schema_json=json.dumps(cur))
+    entries = _stage_delete_files(
+        df.select(*equality_by).distinct(),
+        path,
+        uuid.uuid4().int % (1 << 62),
+        2,
+        [name2id[c] for c in equality_by],
+    )
+    _commit_delete_manifest(path, version, prior, entries)
 
 
-def _unpartitioned_spec_id(meta: dict) -> tuple[int, list[dict]]:
-    """spec-id of an empty (unpartitioned) partition spec, adding one
-    when the table has none. Global deletes carry an EMPTY partition
-    tuple; on a partitioned table the declared spec 0 has fields, so a
-    spec-compliant reader could not reconcile the entry with its spec —
-    the spec the delete manifest references must itself be
-    unpartitioned (Iceberg spec: delete files may use any registered
+def _unpartitioned_spec(specs: list[dict]) -> tuple[int, list[dict]]:
+    """(spec-id, actions) of an empty (unpartitioned) partition spec,
+    with an add-spec when the table has none. Global deletes carry an
+    EMPTY partition tuple; on a partitioned table the declared spec 0
+    has fields, so a spec-compliant reader could not reconcile the entry
+    with its spec — the spec the delete manifest references must itself
+    be unpartitioned (Iceberg spec: delete files may use any registered
     spec; an empty tuple belongs to an empty spec)."""
-    specs = [dict(s) for s in meta.get("partition-specs", [])]
     for s in specs:
         if not s.get("fields"):
-            return s.get("spec-id", 0), specs
+            return s.get("spec-id", 0), []
     new_id = max((s.get("spec-id", 0) for s in specs), default=-1) + 1
-    specs.append({"spec-id": new_id, "fields": []})
-    return new_id, specs
+    return new_id, [{"action": "add-spec", "spec": {"spec-id": new_id, "fields": []}}]
 
 
 def _commit_delete_manifest(
-    path: str, prior: dict, entries: list[dict], schema_json: str
+    path: str, version: int, prior: dict, entries: list[dict]
 ) -> None:
-    """Shared tail of the equality/position delete writers: write the
-    deletes manifest under an unpartitioned spec, prepend it to the
-    prior manifest list, commit snapshot + metadata v(N+1)."""
-    md = _meta_dir(path)
-    now_ms = int(time.time() * 1000)
-    snapshot_id = entries[0]["snapshot_id"]
-    seq = prior.get("last-sequence-number", 0) + 1
-    spec_id, specs = _unpartitioned_spec_id(prior)
-
-    manifest_path = os.path.join(md, f"{uuid.uuid4().hex}-m0.avro")
-    write_ocf(
-        manifest_path,
-        _manifest_entry_schema([]),
-        entries,
-        metadata={
-            "schema": schema_json,
-            "partition-spec": json.dumps([]),
-            "partition-spec-id": str(spec_id),
-            "format-version": "2",
-            "content": "deletes",
-        },
+    """Shared tail of the equality/position delete writers: one deletes
+    manifest under an unpartitioned spec, listed ahead of the head's
+    manifests in a new snapshot, committed on the base the deletes were
+    computed from."""
+    spec_id, updates = _unpartitioned_spec(prior.get("partition-specs", []))
+    manifest = _write_manifest(
+        path, entries, _manifest_entry_schema([]), _current_ice_schema(prior),
+        spec_id, [], content=1,
     )
-    new_manifest = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": spec_id,
-        "content": 1,  # deletes manifest
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(entries),
-        "existing_data_files_count": 0,
-        "deleted_data_files_count": 0,
-        "added_rows_count": sum(e["data_file"]["record_count"] for e in entries),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    manifests = [new_manifest]
-    prior_snap = current_snapshot(prior)
-    if prior_snap is not None:
-        _, _, prev = read_ocf(_to_local(prior_snap["manifest-list"], path))
-        manifests.extend(prev)
-
-    mlist_path = os.path.join(md, f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro")
-    write_ocf(mlist_path, _MANIFEST_FILE_SCHEMA, manifests, metadata={"format-version": "2"})
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist_path,
-        "summary": {"operation": "delete"},
-        "schema-id": prior.get("current-schema-id", 0),
-    }
-    if prior_snap is not None:
-        snapshot["parent-snapshot-id"] = prior_snap["snapshot-id"]
-    meta = dict(prior)
-    meta["partition-specs"] = specs
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now_ms
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = list(prior.get("snapshots", [])) + [snapshot]
-    meta["snapshot-log"] = list(prior.get("snapshot-log", [])) + [
-        {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
-    ]
-    _publish_metadata(path, meta)
+    snap = _build_snapshot(
+        path,
+        {
+            "snapshot-id": entries[0]["snapshot_id"],
+            "summary": {"operation": "delete"},
+            "schema-id": prior.get("current-schema-id", 0),
+        },
+        [manifest],
+        current_snapshot(prior),
+        prior.get("last-sequence-number", 0) + 1,
+    )
+    _commit(path, version, prior, [*updates, *_add_snapshot(snap)])
 
 
 def position_delete_iceberg_py(path: str, spark: SparkSession, where: str) -> None:
@@ -2013,14 +2076,13 @@ def position_delete_iceberg_py(path: str, spark: SparkSession, where: str) -> No
     artifact layout is the public v2 spec."""
     from pyspark.sql import functions as F
 
-    prior = _latest_metadata(path)
+    version, prior = _load_metadata(path)
     if prior.get("format-version", 1) > 2:
         raise NotImplementedError("Iceberg format v3+ not supported")
     schema = _current_schema(prior)
     data, _deletes = _live_files_and_deletes(prior, path)
     if not data:
         return
-    snapshot_id = uuid.uuid4().int % (1 << 62)
     src = spark.read.schema(schema).parquet(*[r["path"] for r in data])
     hits = (
         src.select(
@@ -2034,45 +2096,10 @@ def position_delete_iceberg_py(path: str, spark: SparkSession, where: str) -> No
         .select(F.col("__fp").alias("file_path"), F.col("__pos").alias("pos"))
         .orderBy("file_path", "pos")  # spec: sorted by file_path then pos
     )
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    hits.write.mode("overwrite").parquet(staging)
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    entries = []
-    for root, _dirs, files in os.walk(staging):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            if _parquet_rows(os.path.join(root, f)) == 0:
-                continue
-            name = f"{uuid.uuid4().hex}-pos-deletes.parquet"
-            dst = os.path.join(data_dir, name)
-            shutil.move(os.path.join(root, f), dst)
-            entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 1,  # POSITION_DELETES
-                        "file_path": dst,
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": _parquet_rows(dst),
-                        "file_size_in_bytes": os.path.getsize(dst),
-                        "equality_ids": None,
-                    },
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    entries = _stage_delete_files(hits, path, uuid.uuid4().int % (1 << 62), 1)
     if not entries:
         return  # nothing matched; no commit
-    sid = prior.get("current-schema-id", 0)
-    cur = next(
-        (s for s in prior.get("schemas", []) if s.get("schema-id") == sid), None
-    )
-    _commit_delete_manifest(path, prior, entries, schema_json=json.dumps(cur or {}))
+    _commit_delete_manifest(path, version, prior, entries)
 
 
 def expire_iceberg_snapshots(
@@ -2084,15 +2111,17 @@ def expire_iceberg_snapshots(
     """Snapshot EXPIRATION (the spec's snapshot-retention maintenance,
     pyiceberg/Spark ``expireSnapshots``): drops snapshots beyond
     ``keep_last`` and/or older than ``older_than_ms`` from the metadata
-    (the current snapshot is always kept), then deletes every
-    manifest list, manifest, and data/delete file referenced ONLY by
-    expired snapshots. Returns counts. Without this, a
+    (the current snapshot is always kept), commits that, and only then
+    deletes every manifest list, manifest, and data/delete file
+    referenced ONLY by expired snapshots — a crash in between leaves
+    orphan files, never metadata that names deleted ones, so a re-run
+    completes. Returns counts. Without this, a
     frequently-committed 100 TB table accretes unbounded metadata and
     unreachable data files. Time travel to an expired snapshot_id
     raises afterwards — the retention contract."""
     if keep_last is None and older_than_ms is None:
         raise ValueError("expire_iceberg_snapshots needs keep_last and/or older_than_ms")
-    meta = _latest_metadata(path)
+    version, meta = _load_metadata(path)
     snaps = list(meta.get("snapshots", []))
     current = meta.get("current-snapshot-id")
     by_time = sorted(snaps, key=lambda s: (s.get("timestamp-ms", 0), s["snapshot-id"]))
@@ -2132,23 +2161,22 @@ def expire_iceberg_snapshots(
             _ml, ms, fs = refs(s)
             kept_manifests |= ms
             kept_files |= fs
-    deleted = 0
+    doomed: set[str] = set()
     for s in expired:
         mlist, ms, fs = refs(s)
-        for f in (fs - kept_files) | (ms - kept_manifests) | {mlist}:
-            if os.path.exists(f):
-                os.remove(f)
-                deleted += 1
-        kept_manifests |= ms  # never double-count across expired snaps
-        kept_files |= fs
+        doomed |= (fs - kept_files) | (ms - kept_manifests) | {mlist}
 
-    new_meta = dict(meta)
-    new_meta["snapshots"] = [s for s in snaps if s["snapshot-id"] in keep_ids]
-    new_meta["snapshot-log"] = [
-        e for e in meta.get("snapshot-log", []) if e.get("snapshot-id") in keep_ids
-    ]
-    new_meta["last-updated-ms"] = int(time.time() * 1000)
-    _publish_metadata(path, new_meta)
+    _commit(
+        path,
+        version,
+        meta,
+        [{"action": "remove-snapshots", "snapshot-ids": [s["snapshot-id"] for s in expired]}],
+    )
+    deleted = 0
+    for f in sorted(doomed):
+        if os.path.exists(f):
+            os.remove(f)
+            deleted += 1
     return {"expired_snapshots": len(expired), "deleted_files": deleted}
 
 
@@ -2193,7 +2221,7 @@ def rewrite_iceberg_data_files(
     RewritePositionDeleteFiles runs."""
     from pyspark.sql import functions as F
 
-    meta = _latest_metadata(path)
+    version, meta = _load_metadata(path)
     if meta.get("format-version", 1) > 2:
         raise NotImplementedError("Iceberg format v3+ not supported")
     snap = current_snapshot(meta)
@@ -2263,8 +2291,6 @@ def rewrite_iceberg_data_files(
             return id_schema
         return schema
 
-    md = _meta_dir(path)
-    now_ms = int(time.time() * 1000)
     snapshot_id = uuid.uuid4().int % (1 << 62)
     seq = meta.get("last-sequence-number", 0) + 1
     schema_field_ids = {f["name"]: f["id"] for f in ice["fields"]}
@@ -2304,69 +2330,30 @@ def rewrite_iceberg_data_files(
         )
         shutil.move(src, dst)
         shutil.rmtree(staging, ignore_errors=True)
-        vcounts, ncounts, lower, upper = _parquet_column_stats(
-            dst, schema_field_ids, schema_field_types
-        )
         new_entries_by_spec.setdefault(spec_id, []).append(
-            {
-                "status": 1,  # ADDED
-                "snapshot_id": snapshot_id,
-                "sequence_number": None,  # inherit the new manifest's
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": 0,
-                    "file_path": dst,
-                    "file_format": "PARQUET",
-                    "partition": bin_recs[0]["partition"],
-                    "record_count": _parquet_rows(dst),
-                    "file_size_in_bytes": os.path.getsize(dst),
-                    "value_counts": vcounts,
-                    "null_value_counts": ncounts,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                    "equality_ids": None,
-                },
-            }
+            _file_entry(
+                snapshot_id,
+                dst,
+                partition=bin_recs[0]["partition"],
+                stats=_parquet_column_stats(dst, schema_field_ids, schema_field_types),
+            )
         )
 
-    new_manifests: list[dict] = []
     specs_by_id = {
         s.get("spec-id", 0): s.get("fields", [])
         for s in meta.get("partition-specs", [])
     }
-    for spec_id, entries in sorted(new_entries_by_spec.items()):
-        mpath = os.path.join(md, f"{uuid.uuid4().hex}-m0.avro")
-        write_ocf(
-            mpath,
-            _manifest_entry_schema(part_fields_by_spec[spec_id]),
+    new_manifests = [
+        _write_manifest(
+            path,
             entries,
-            metadata={
-                "schema": json.dumps(ice),
-                "partition-spec": json.dumps(specs_by_id.get(spec_id, [])),
-                "partition-spec-id": str(spec_id),
-                "format-version": "2",
-                "content": "data",
-            },
+            _manifest_entry_schema(part_fields_by_spec[spec_id]),
+            ice,
+            spec_id,
+            specs_by_id.get(spec_id, []),
         )
-        new_manifests.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(entries),
-                "existing_data_files_count": 0,
-                "deleted_data_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
+        for spec_id, entries in sorted(new_entries_by_spec.items())
+    ]
 
     rewritten = 0
     for m, esch, entries in data_manifests:
@@ -2397,64 +2384,31 @@ def rewrite_iceberg_data_files(
             )
         if not survivors:
             continue  # every entry replaced: the manifest drops out
-        mpath = os.path.join(md, f"{uuid.uuid4().hex}-m0.avro")
-        write_ocf(
-            mpath,
-            esch,
-            survivors,
-            metadata={
-                "schema": json.dumps(ice),
-                "partition-spec": json.dumps(
-                    specs_by_id.get(m.get("partition_spec_id", 0), [])
-                ),
-                "partition-spec-id": str(m.get("partition_spec_id", 0)),
-                "format-version": "2",
-                "content": "data",
-            },
-        )
+        spec_id = m.get("partition_spec_id", 0)
         carried.append(
             dict(
-                m,
-                manifest_path=mpath,
-                manifest_length=os.path.getsize(mpath),
+                _write_manifest(
+                    path, survivors, esch, ice, spec_id, specs_by_id.get(spec_id, [])
+                ),
                 sequence_number=seq,
                 min_sequence_number=min(s["sequence_number"] for s in survivors),
                 added_snapshot_id=snapshot_id,
-                added_data_files_count=0,
-                existing_data_files_count=len(survivors),
-                deleted_data_files_count=0,
-                added_rows_count=0,
-                existing_rows_count=sum(
-                    s["data_file"]["record_count"] for s in survivors
-                ),
-                deleted_rows_count=0,
             )
         )
 
-    all_manifests = new_manifests + carried
-    mlist_path = os.path.join(md, f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro")
-    write_ocf(
-        mlist_path, _MANIFEST_FILE_SCHEMA, all_manifests, metadata={"format-version": "2"}
+    snap = _build_snapshot(
+        path,
+        {
+            "snapshot-id": snapshot_id,
+            "summary": {"operation": "replace"},
+            "schema-id": meta.get("current-schema-id", 0),
+        },
+        new_manifests,
+        current_snapshot(meta),
+        seq,
+        carried=carried,
     )
-    head = current_snapshot(meta)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist_path,
-        **({"parent-snapshot-id": head["snapshot-id"]} if head else {}),
-        "summary": {"operation": "replace"},
-        "schema-id": meta.get("current-schema-id", 0),
-    }
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = snapshot_id
-    new_meta["snapshots"] = meta.get("snapshots", []) + [snapshot]
-    new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-        {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
-    ]
-    _publish_metadata(path, new_meta)
+    _commit(path, version, meta, _add_snapshot(snap))
     return {
         "removed": len(replaced),
         "added": sum(len(v) for v in new_entries_by_spec.values()),
@@ -2539,60 +2493,74 @@ def set_iceberg_ref(
     are protected from expire_iceberg_snapshots."""
     if ref_type not in ("tag", "branch"):
         raise ValueError(f"ref type must be 'tag' or 'branch', got {ref_type!r}")
-    meta = _latest_metadata(path)
-    sid = snapshot_id if snapshot_id is not None else meta.get("current-snapshot-id")
-    if sid is None or all(s["snapshot-id"] != sid for s in meta.get("snapshots", [])):
-        raise ValueError(f"snapshot {sid} not found")
-    entry: dict = {"snapshot-id": sid, "type": ref_type}
+    version, meta = _load_metadata(path)
+    update = {
+        "action": "set-snapshot-ref",
+        "ref-name": name,
+        "snapshot-id": (
+            snapshot_id if snapshot_id is not None else meta.get("current-snapshot-id")
+        ),
+        "type": ref_type,
+    }
     if max_ref_age_ms is not None:
-        entry["max-ref-age-ms"] = int(max_ref_age_ms)
-    refs = dict(meta.get("refs") or {})
-    refs[name] = entry
-    new_meta = dict(meta)
-    new_meta["refs"] = refs
-    new_meta["last-updated-ms"] = int(time.time() * 1000)
-    _publish_metadata(path, new_meta)
+        update["max-ref-age-ms"] = int(max_ref_age_ms)
+    _commit(path, version, meta, [update])
 
 
-def _rebase_append_snapshot(
-    path: str, snap: dict, new_manifests: list[dict], head: dict | None, new_seq: int
+def _add_snapshot(snap: dict, ref: str = "main", **ref_fields) -> list[dict]:
+    """The actions that add ``snap`` and point ``ref`` (a branch) at it;
+    ``ref_fields`` carry the ref's retention settings."""
+    return [
+        {"action": "add-snapshot", "snapshot": snap},
+        {
+            "action": "set-snapshot-ref",
+            "ref-name": ref,
+            "type": "branch",
+            **ref_fields,
+            "snapshot-id": snap["snapshot-id"],
+        },
+    ]
+
+
+def _build_snapshot(
+    path: str,
+    snap: dict,
+    new_manifests: list[dict],
+    head: dict | None,
+    seq: int,
+    carried: list[dict] | None = None,
 ) -> dict:
-    """Rebuild an APPEND snapshot's manifest list on top of ``head``'s
-    manifests under sequence number ``new_seq`` and return the updated
-    snapshot dict. The manifest avro FILES never rewrite — per-entry
-    sequence numbers inherit from the manifest-list entry, so a rebase
-    is one small avro write. Shared by branch writes, cherry-pick, and
-    the REST client's 409 retry loop."""
-    from daft_spark.io.avro import read_ocf, write_ocf
-
-    carried: list[dict] = []
-    if head is not None:
-        _, _, carried = read_ocf(_to_local(head["manifest-list"], path))
-    # added_snapshot_id moves to the rebased snapshot: cherry-pick mints
-    # a NEW snapshot id, and incremental/streaming readers attribute a
+    """The snapshot a commit adds on ``head``: ``snap`` (id, summary,
+    schema-id) with sequence number ``seq`` and one new manifest list —
+    this commit's ``new_manifests``, stamped with ``seq`` and the
+    snapshot's id, ahead of ``carried`` (default: ``head``'s manifests;
+    an overwrite carries none). The manifest avro FILES never rewrite —
+    per-entry sequence numbers inherit from the manifest-list entry, so
+    rebasing onto a moved head is one small avro write. Every
+    snapshot-adding commit builds its snapshot here."""
+    if carried is None:
+        carried = [] if head is None else read_ocf(_to_local(head["manifest-list"], path))[2]
+    sid = snap["snapshot-id"]
+    # added_snapshot_id moves to this snapshot: cherry-pick mints a NEW
+    # snapshot id, and incremental/streaming readers attribute a
     # manifest's added files to the snapshot whose id it carries — left
     # at the source id, a resumed stream would skip the published rows.
-    rebased = [
-        dict(
-            m,
-            sequence_number=new_seq,
-            min_sequence_number=new_seq,
-            added_snapshot_id=snap["snapshot-id"],
-        )
+    stamped = [
+        dict(m, sequence_number=seq, min_sequence_number=seq, added_snapshot_id=sid)
         for m in new_manifests
     ]
-    mlist = os.path.join(
-        _meta_dir(path), f"snap-{snap['snapshot-id']}-r-{uuid.uuid4().hex}.avro"
-    )
+    mlist = os.path.join(_meta_dir(path), f"snap-{sid}-{seq}-{uuid.uuid4().hex}.avro")
     write_ocf(
-        mlist,
-        _MANIFEST_FILE_SCHEMA,
-        rebased + list(carried),
-        metadata={"format-version": "2"},
+        mlist, _MANIFEST_FILE_SCHEMA, stamped + list(carried), metadata={"format-version": "2"}
     )
     out = dict(snap)
-    out["sequence-number"] = new_seq
+    out.pop("parent-snapshot-id", None)
+    out["sequence-number"] = seq
+    out["timestamp-ms"] = int(time.time() * 1000)
     out["manifest-list"] = mlist
+    # parent-snapshot-id is the spec's ancestry pointer — incremental /
+    # streaming reads walk it (ancestorsBetween); absent only on a
+    # table's first snapshot. Overwrites still chain: history stays linear.
     if head is not None:
         out["parent-snapshot-id"] = head["snapshot-id"]
     return out
@@ -2607,15 +2575,13 @@ def cherry_pick_iceberg_snapshot(path: str, snapshot_id: int) -> None:
     ``source-snapshot-id``. Only append snapshots cherry-pick — a
     delete/overwrite re-applied on changed state is not well-defined,
     and this engine does not fake it."""
-    meta = _latest_metadata(path)
+    version, meta = _load_metadata(path)
     src = current_snapshot(meta, snapshot_id)
     if (src.get("summary") or {}).get("operation") != "append":
         raise ValueError(
             f"snapshot {snapshot_id} is not an append — only append "
             "snapshots can be cherry-picked"
         )
-    from daft_spark.io.avro import read_ocf
-
     _, _, entries = read_ocf(_to_local(src["manifest-list"], path))
     own = [m for m in entries if m.get("added_snapshot_id") == snapshot_id]
     head = current_snapshot(meta)
@@ -2630,29 +2596,20 @@ def cherry_pick_iceberg_snapshot(path: str, snapshot_id: int) -> None:
                 f"snapshot {snapshot_id} is already published on main — "
                 "cherry-picking it again would duplicate its rows"
             )
-    new_seq = int(meta.get("last-sequence-number", 0)) + 1
-    now_ms = int(time.time() * 1000)
     snap = dict(
         src,
         **{
             "snapshot-id": uuid.uuid4().int % (1 << 62),
-            "timestamp-ms": now_ms,
             "summary": {
                 **(src.get("summary") or {}),
                 "source-snapshot-id": str(snapshot_id),
             },
         },
     )
-    snap = _rebase_append_snapshot(path, snap, own, head, new_seq)
-    new_meta = dict(meta)
-    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [snap]
-    new_meta["last-sequence-number"] = new_seq
-    new_meta["current-snapshot-id"] = snap["snapshot-id"]
-    new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"snapshot-id": snap["snapshot-id"], "timestamp-ms": now_ms}
-    ]
-    new_meta["last-updated-ms"] = now_ms
-    _publish_metadata(path, new_meta)
+    snap = _build_snapshot(
+        path, snap, own, head, int(meta.get("last-sequence-number", 0)) + 1
+    )
+    _commit(path, version, meta, _add_snapshot(snap))
 
 
 def write_iceberg_branch_py(df: DataFrame, path: str, branch: str) -> None:
@@ -2660,34 +2617,29 @@ def write_iceberg_branch_py(df: DataFrame, path: str, branch: str) -> None:
     write-audit-publish pattern (stage experimental/audit writes on a
     branch, validate, then fast-forward main). The append stages
     exactly like a main append (data files + new manifests in shared
-    storage), then the snapshot is REBASED onto the branch head: its
-    manifest list is rebuilt as (this commit's new manifests) + (the
-    branch head's manifests) under the next table-wide sequence
-    number, and only ``refs[branch]`` moves in the published metadata.
+    storage), then its snapshot is built on the branch head: its
+    manifest list is (this commit's new manifests) + (the branch head's
+    manifests) under the next table-wide sequence number, and only
+    ``refs[branch]`` moves in the published metadata.
     Main readers never see the branch's rows; branch readers never see
     main commits made after the fork. Zero data movement beyond the
     append itself."""
-    meta = _latest_metadata(path)
-    refs = dict(meta.get("refs") or {})
-    entry = refs.get(branch)
+    version, meta = _load_metadata(path)
+    entry = (meta.get("refs") or {}).get(branch)
     if entry is None or entry.get("type") != "branch":
         raise ValueError(
             f"branch {branch!r} not found — create it with "
             "set_iceberg_ref(path, name, ref_type='branch')"
         )
-    staged = write_iceberg_py(df, path, mode="append", _publish=False)
-    head = current_snapshot(meta, entry["snapshot-id"])
-    new_seq = int(meta.get("last-sequence-number", 0)) + 1
-    snap = _rebase_append_snapshot(
-        path, dict(staged["snapshot"]), staged["new_manifests"], head, new_seq
+    staged = _stage_write(df, path, (version, meta), "append")
+    snap = _build_snapshot(
+        path,
+        staged.snapshot,
+        staged.manifests,
+        current_snapshot(meta, entry["snapshot-id"]),
+        int(meta.get("last-sequence-number", 0)) + 1,
     )
-    new_meta = dict(meta)
-    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [snap]
-    new_meta["last-sequence-number"] = new_seq
-    new_meta["last-updated-ms"] = snap["timestamp-ms"]
-    refs[branch] = dict(entry, **{"snapshot-id": snap["snapshot-id"]})
-    new_meta["refs"] = refs
-    _publish_metadata(path, new_meta)
+    _commit(path, version, meta, [*staged.updates, *_add_snapshot(snap, branch, **entry)])
 
 
 def fast_forward_iceberg_main(path: str, branch: str) -> None:
@@ -2696,7 +2648,7 @@ def fast_forward_iceberg_main(path: str, branch: str) -> None:
     snapshot to be an ANCESTOR of the branch head — a true
     fast-forward; anything else needs a merge/cherry-pick, which this
     engine does not fake."""
-    meta = _latest_metadata(path)
+    version, meta = _load_metadata(path)
     refs = meta.get("refs") or {}
     entry = refs.get(branch)
     if entry is None or entry.get("type") != "branch":
@@ -2715,25 +2667,24 @@ def fast_forward_iceberg_main(path: str, branch: str) -> None:
             f"main ({cur}) is not an ancestor of branch {branch!r} head "
             f"({head_id}) — cannot fast-forward"
         )
-    new_meta = dict(meta)
-    new_meta["current-snapshot-id"] = head_id
-    new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"snapshot-id": head_id, "timestamp-ms": int(time.time() * 1000)}
-    ]
-    new_meta["last-updated-ms"] = int(time.time() * 1000)
-    _publish_metadata(path, new_meta)
+    _commit(
+        path,
+        version,
+        meta,
+        [
+            {
+                "action": "set-snapshot-ref",
+                "ref-name": "main",
+                "type": "branch",
+                "snapshot-id": head_id,
+            }
+        ],
+    )
 
 
 def drop_iceberg_ref(path: str, name: str) -> None:
-    meta = _latest_metadata(path)
-    refs = dict(meta.get("refs") or {})
-    if name not in refs:
-        raise ValueError(f"ref {name!r} not found")
-    del refs[name]
-    new_meta = dict(meta)
-    new_meta["refs"] = refs
-    new_meta["last-updated-ms"] = int(time.time() * 1000)
-    _publish_metadata(path, new_meta)
+    version, meta = _load_metadata(path)
+    _commit(path, version, meta, [{"action": "remove-snapshot-ref", "ref-name": name}])
 
 
 def resolve_iceberg_ref(meta: dict, ref: str) -> int:

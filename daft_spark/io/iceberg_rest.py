@@ -21,12 +21,12 @@ external service:
 Scope: read/discovery, create/drop, AND (r7) the multi-operation
 ``updateTable`` commit protocol: the server validates requirements
 (assert-table-uuid, assert-ref-snapshot-id) against its CURRENT
-metadata and applies updates (add-snapshot, set-snapshot-ref,
-set-properties) — the catalog-arbitrated metadata swap. Table handles
-returned by the client stage data/manifests to the table location and
-move the pointer ONLY through commit_table, so a concurrent commit
-fails the requirement with 409 CommitFailedException instead of
-losing an update.
+metadata and commits the updates through the file path's own
+committer (``iceberg._commit``) — the catalog-arbitrated metadata
+swap. Table handles returned by the client stage data/manifests to the
+table location and move the pointer ONLY through commit_table, so a
+concurrent commit answers 409 CommitFailedException instead of losing
+an update.
 """
 
 from __future__ import annotations
@@ -141,22 +141,17 @@ class _Handler(BaseHTTPRequestHandler):
             ident = ".".join(ns + [name])
             if not cat.has_table(ident):
                 return self._error(404, f"table {ident} not found", "NoSuchTableException")
-            from daft_spark.io.iceberg import _latest_metadata, _meta_dir
+            from daft_spark.io.iceberg import _load_metadata, _metadata_file
 
             tpath = cat._path(ident)
-            meta = _latest_metadata(tpath)
-            md = _meta_dir(tpath)
-            versions = sorted(
-                int(f[1 : -len(".metadata.json")])
-                for f in os.listdir(md)
-                if f.startswith("v")
-                and f.endswith(".metadata.json")
-                and f[1 : -len(".metadata.json")].isdigit()
-            )
-            loc = os.path.join(md, f"v{versions[-1]}.metadata.json")
+            version, meta = _load_metadata(tpath)
             return self._send(
                 200,
-                {"metadata-location": loc, "metadata": meta, "config": {}},
+                {
+                    "metadata-location": _metadata_file(tpath, version),
+                    "metadata": meta,
+                    "config": {},
+                },
             )
         return self._error(404, f"no route for {self.path}", "NotFoundException")
 
@@ -201,22 +196,20 @@ class _Handler(BaseHTTPRequestHandler):
             return self._send(200, {"metadata": {"location": loc}})
         if kind == "table":
             # CommitTableRequest: validate requirements against the
-            # CURRENT metadata, apply the updates, publish v(N+1) —
-            # the catalog-arbitrated metadata swap of the spec's
-            # commit protocol (data/manifests already sit in shared
-            # storage; only the pointer move is the catalog's job)
+            # CURRENT metadata, then commit the updates on exactly that
+            # version through the table's one committer — a commit that
+            # lost the race to publish it answers 409 like a failed
+            # requirement (data/manifests already sit in shared storage;
+            # only the pointer move is the catalog's job)
             ns, name = arg
             ident = ".".join(ns + [name])
             if not cat.has_table(ident):
                 return self._error(404, f"table {ident} not found", "NoSuchTableException")
-            from daft_spark.io.iceberg import (
-                _latest_metadata,
-                _meta_dir,
-                _publish_metadata,
-            )
+            from daft_spark.io.iceberg import _commit, _load_metadata, _metadata_file
+            from daft_spark.io.publish import ConcurrentCommitError
 
             tpath = cat._path(ident)
-            meta = _latest_metadata(tpath)
+            version, meta = _load_metadata(tpath)
             body = self._body()
             for req in body.get("requirements") or []:
                 rtype = req.get("type")
@@ -245,61 +238,14 @@ class _Handler(BaseHTTPRequestHandler):
                     return self._error(
                         400, f"unsupported requirement {rtype!r}", "BadRequestException"
                     )
-            new_meta = dict(meta)
-            for upd in body.get("updates") or []:
-                utype = upd.get("action")
-                if utype == "add-snapshot":
-                    snap = upd["snapshot"]
-                    new_meta["snapshots"] = new_meta.get("snapshots", []) + [snap]
-                    new_meta["last-sequence-number"] = max(
-                        new_meta.get("last-sequence-number", 0),
-                        snap.get("sequence-number", 0),
-                    )
-                    new_meta["last-updated-ms"] = snap.get("timestamp-ms")
-                elif utype == "set-snapshot-ref":
-                    ref = upd.get("ref-name", "main")
-                    sid = upd["snapshot-id"]
-                    if not any(
-                        s["snapshot-id"] == sid for s in new_meta.get("snapshots", [])
-                    ):
-                        return self._error(
-                            400, f"snapshot {sid} unknown", "BadRequestException"
-                        )
-                    if ref == "main":
-                        new_meta["current-snapshot-id"] = sid
-                        new_meta["snapshot-log"] = new_meta.get("snapshot-log", []) + [
-                            {
-                                "snapshot-id": sid,
-                                "timestamp-ms": new_meta.get("last-updated-ms"),
-                            }
-                        ]
-                    else:
-                        refs = dict(new_meta.get("refs") or {})
-                        refs[ref] = {
-                            "snapshot-id": sid,
-                            "type": upd.get("type", "branch"),
-                        }
-                        new_meta["refs"] = refs
-                elif utype == "set-properties":
-                    props = dict(new_meta.get("properties") or {})
-                    props.update(upd.get("updates") or {})
-                    new_meta["properties"] = props
-                else:
-                    return self._error(
-                        400, f"unsupported update {utype!r}", "BadRequestException"
-                    )
-            _publish_metadata(tpath, new_meta)
-            md = _meta_dir(tpath)
-            versions = sorted(
-                int(f[1 : -len(".metadata.json")])
-                for f in os.listdir(md)
-                if f.startswith("v")
-                and f.endswith(".metadata.json")
-                and f[1 : -len(".metadata.json")].isdigit()
-            )
-            loc = os.path.join(md, f"v{versions[-1]}.metadata.json")
+            try:
+                version, meta = _commit(tpath, version, meta, body.get("updates") or [])
+            except ConcurrentCommitError as e:
+                return self._error(409, str(e), "CommitFailedException")
+            except (KeyError, ValueError) as e:
+                return self._error(400, str(e), "BadRequestException")
             return self._send(
-                200, {"metadata-location": loc, "metadata": new_meta}
+                200, {"metadata-location": _metadata_file(tpath, version), "metadata": meta}
             )
         return self._error(404, f"no route for {self.path}", "NotFoundException")
 
@@ -503,41 +449,37 @@ class IcebergRestCatalog(Catalog):
 
         def _rest_write(df, mode="append"):
             # data + manifests stage to the (shared) table location; the
-            # metadata pointer moves through the commit protocol with an
-            # assert-ref-snapshot-id requirement, so a concurrent commit
-            # turns into 409 instead of a lost update — and the client
-            # then refreshes and REBASES the staged snapshot onto the
-            # moved head before retrying (real catalogs' retry loop)
+            # metadata pointer moves only through the commit protocol
             if mode != "append":
                 raise ValueError(
                     "REST-committed table writes support mode='append' only"
                 )
-            from daft_spark.io.iceberg import write_iceberg_py
+            from daft_spark.io.iceberg import _stage_write
 
-            staged = write_iceberg_py(df, tpath, mode="append", _publish=False)
-            self._commit_staged_with_retry(identifier, tpath, staged)
+            self._commit_append(
+                identifier, _stage_write(df, tpath, self._load(identifier), "append")
+            )
 
         tbl._write = _rest_write
         return tbl
 
-    def _commit_staged_with_retry(
-        self, identifier, tpath: str, staged: dict, max_retries: int = 5
-    ) -> None:
-        """Commit a staged append snapshot, handling 409
-        CommitFailedException the way real Iceberg clients do: refresh
-        the table from the catalog, REBASE the staged snapshot onto the
-        moved head — new sequence number, manifest list rebuilt as
-        (this commit's new manifests) + (the new head's manifests; the
-        per-entry sequence numbers inherit from the list, so the
-        manifest avro files themselves never rewrite) — and retry the
-        updateTable with the refreshed requirement. Gives up after
-        ``max_retries`` rebases."""
-        from daft_spark.io.iceberg import _rebase_append_snapshot
+    def _load(self, identifier) -> tuple[None, dict]:
+        """(version, metadata) for the shared commit loop; the catalog,
+        not the client, numbers metadata versions."""
+        return None, self.load_table_result(identifier)["metadata"]
 
-        snap = dict(staged["snapshot"])
-        new_manifests = list(staged.get("new_manifests") or [])
-        parent = staged["prior_snapshot_id"]
-        for attempt in range(max_retries + 1):
+    def _commit_append(self, identifier, staged) -> None:
+        """Commit a staged append through updateTable. The requirement
+        pins main to the snapshot the staged write read, so a concurrent
+        commit answers 409 CommitFailedException; that surfaces as
+        ConcurrentCommitError to the loop the file path uses too
+        (iceberg._commit_snapshot), which refreshes the table, rebases
+        the staged snapshot onto the moved head and retries."""
+        from daft_spark.io.iceberg import _commit_snapshot
+        from daft_spark.io.publish import ConcurrentCommitError
+
+        def commit(_version, base, updates):
+            head = base.get("current-snapshot-id")
             try:
                 self.commit_table(
                     identifier,
@@ -545,37 +487,17 @@ class IcebergRestCatalog(Catalog):
                         {
                             "type": "assert-ref-snapshot-id",
                             "ref": "main",
-                            "snapshot-id": parent,
+                            "snapshot-id": None if head in (None, -1) else head,
                         }
                     ],
-                    updates=[
-                        {"action": "add-snapshot", "snapshot": snap},
-                        {
-                            "action": "set-snapshot-ref",
-                            "ref-name": "main",
-                            "snapshot-id": snap["snapshot-id"],
-                            "type": "branch",
-                        },
-                    ],
+                    updates=updates,
                 )
-                return
             except RestError as e:
-                if attempt == max_retries or e.code != 409:
+                if e.code != 409:
                     raise
-            res = self.load_table_result(identifier)
-            meta = res["metadata"]
-            head_id = meta.get("current-snapshot-id")
-            head = next(
-                (
-                    s
-                    for s in meta.get("snapshots", [])
-                    if s["snapshot-id"] == head_id
-                ),
-                None,
-            )
-            new_seq = int(meta.get("last-sequence-number", 0)) + 1
-            snap = _rebase_append_snapshot(tpath, snap, new_manifests, head, new_seq)
-            parent = head_id
+                raise ConcurrentCommitError(str(e)) from e
+
+        _commit_snapshot(staged, lambda: self._load(identifier), commit)
 
     def read_table(self, identifier):
         return self.get_table(identifier).read()

@@ -27,9 +27,12 @@ hudi.py; Avro via the same io/avro.py codec Iceberg uses):
   layout) and each file's tuple is encoded as a Flink BinaryRow in its
   manifest entry (binary_row_encode — 8-bit header + null bits, 8-byte
   slots, compact <=7-byte strings, little-endian). Data written with
-  Spark's parquet writer and renamed to Paimon data-file names;
-  snapshot JSON staged and os.rename()'d — single-writer file://
-  atomicity. Each commit's base manifest list carries forward the
+  Spark's parquet writer and renamed to Paimon data-file names. A
+  commit names the snapshot it read and link-publishes ``snapshot-<N+1>``
+  with the no-clobber ``publish_once`` (io/publish.py): a writer whose
+  snapshot went stale raises instead of replacing another writer's
+  snapshot. ``LATEST`` is only a lower bound — readers probe forward
+  past it. Each commit's base manifest list carries forward the
   previous snapshot's base + delta metas, so readers only ever consult
   the latest snapshot.
 - ``read_paimon_py(path, spark, snapshot=None)``: schema + snapshot +
@@ -63,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from daft_spark.io.avro import read_ocf, write_ocf
+from daft_spark.io.publish import publish_once
 
 # ---------------------------------------------------------------------------
 # type mapping: Spark <-> Paimon SQL-style type strings
@@ -306,19 +310,28 @@ def _latest_snapshot_id(path: str) -> int | None:
     sd = _snapshot_dir(path)
     if not os.path.isdir(sd):
         return None
+    sid = None
     hint = os.path.join(sd, "LATEST")
     if os.path.exists(hint):
         with open(hint) as f:
             txt = f.read().strip()
         token = txt.rsplit("-", 1)[-1] if "-" in txt else txt
         if token.isdigit():
-            return int(token)
-    ids = [
-        int(f.split("-", 1)[1])
-        for f in os.listdir(sd)
-        if f.startswith("snapshot-") and f.split("-", 1)[1].isdigit()
-    ]
-    return max(ids) if ids else None
+            sid = int(token)
+    if sid is None or not os.path.exists(os.path.join(sd, f"snapshot-{sid}")):
+        ids = [
+            int(f.split("-", 1)[1])
+            for f in os.listdir(sd)
+            if f.startswith("snapshot-") and f.split("-", 1)[1].isdigit()
+        ]
+        if not ids:
+            return None
+        sid = max(ids)
+    # LATEST is a lower bound: a commit that published snapshot-<N+1>
+    # but did not rotate the hint yet is still the latest snapshot
+    while os.path.exists(os.path.join(sd, f"snapshot-{sid + 1}")):
+        sid += 1
+    return sid
 
 
 def _load_snapshot(path: str, snapshot_id: int) -> dict:
@@ -705,14 +718,12 @@ def write_paimon_py(
         "totalRecordCount": prior_total + delta_rows,
         "deltaRecordCount": delta_rows,
     }
-    # snapshot file is the commit point — staged then os.rename()'d
-    final = os.path.join(_snapshot_dir(path), f"snapshot-{new_id}")
-    if os.path.exists(final):
-        raise RuntimeError(f"concurrent Paimon commit at snapshot {new_id} ({path})")
-    tmp = os.path.join(_snapshot_dir(path), f".tmp-{run}")
-    with open(tmp, "w") as f:
-        json.dump(snapshot, f)
-    os.rename(tmp, final)
+    # the snapshot file is the commit point
+    publish_once(
+        os.path.join(_snapshot_dir(path), f"snapshot-{new_id}"),
+        json.dumps(snapshot),
+        f"concurrent Paimon commit at snapshot {new_id} ({path})",
+    )
     for hint, value in (("LATEST", new_id), ("EARLIEST", 1)):
         hp = os.path.join(_snapshot_dir(path), hint)
         if hint == "EARLIEST" and os.path.exists(hp):
@@ -720,7 +731,7 @@ def write_paimon_py(
         tmp = os.path.join(_snapshot_dir(path), f".tmp-hint-{run}")
         with open(tmp, "w") as f:
             f.write(str(value))
-        os.rename(tmp, hp)
+        os.replace(tmp, hp)
 
 
 def compact_paimon_py(

@@ -374,7 +374,11 @@ class S3TablesRestCatalog(Catalog):
         versionToken (compare-and-swap)."""
         from pyspark.sql import DataFrame as SparkDF
 
-        from daft_spark.io.iceberg import _meta_dir, write_iceberg_py
+        from daft_spark.io.iceberg import (
+            _load_metadata,
+            _metadata_file,
+            write_iceberg_py,
+        )
         from daft_spark.session import _is_wrapped_df
 
         if _is_wrapped_df(source):
@@ -390,18 +394,12 @@ class S3TablesRestCatalog(Catalog):
         write_iceberg_py(
             source, loc, mode="error", partition_by=properties.get("partition_by")
         )
-        md = _meta_dir(loc)
-        latest = max(
-            int(f[1 : -len(".metadata.json")])
-            for f in os.listdir(md)
-            if f.startswith("v") and f.endswith(".metadata.json")
-        )
         self._client.update_table_metadata_location(
             tableBucketARN=self._arn,
             namespace=ns,
             name=name,
             versionToken=info["versionToken"],
-            metadataLocation=os.path.join(md, f"v{latest}.metadata.json"),
+            metadataLocation=_metadata_file(loc, _load_metadata(loc)[0]),
         )
         return self.get_table(identifier)
 

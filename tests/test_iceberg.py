@@ -1936,3 +1936,254 @@ def test_ancestry_fallback_rollback_does_not_fabricate_parent(spark, tmp_path):
     assert sorted(r["k"] for r in read_iceberg_py(p, spark).collect()) == [
         0, 1, 2,
     ]
+
+
+# ---------------------------------------------------------------------------
+# one committer: a commit names the base it read, only blind appends rebase
+
+
+def _keys(spark, lo, n=10):
+    return spark.range(lo, lo + n).select(F.col("id").alias("k"))
+
+
+def _read_keys(spark, path):
+    from daft_spark.io.iceberg import read_iceberg_py
+
+    return sorted(r["k"] for r in read_iceberg_py(path, spark).collect())
+
+
+def test_append_staged_on_stale_base_keeps_both(spark, tmp_path, monkeypatch):
+    """Writer A reads v1 and stages an append; writer B appends and
+    publishes; then A publishes. A's commit must not be built on v1 —
+    that silently drops B's rows — but rebase onto B's snapshot."""
+    import daft_spark.io.iceberg as ice
+
+    p = str(tmp_path / "stale")
+    ice.write_iceberg_py(_keys(spark, 0), p)
+    real, raced = ice._parquet_column_stats, []
+
+    def racing(*a, **k):
+        if not raced:  # B lands while A is between its read and its publish
+            raced.append(1)
+            ice.write_iceberg_py(_keys(spark, 100), p, mode="append")
+        return real(*a, **k)
+
+    monkeypatch.setattr(ice, "_parquet_column_stats", racing)
+    ice.write_iceberg_py(_keys(spark, 200), p, mode="append")
+    monkeypatch.undo()
+    assert raced
+    assert _read_keys(spark, p) == (
+        list(range(10)) + list(range(100, 110)) + list(range(200, 210))
+    )
+    seqs = [s["sequence-number"] for s in ice._latest_metadata(p)["snapshots"]]
+    assert seqs == [1, 2, 3]
+
+
+def test_append_past_lagging_version_hint(spark, tmp_path):
+    """A commit that linked v<N+1>.metadata.json but crashed before it
+    rotated version-hint.text: readers and the next append probe past
+    the hint instead of reading stale state or failing forever on the
+    taken version."""
+    from daft_spark.io.iceberg import write_iceberg_py
+
+    p = str(tmp_path / "lag")
+    write_iceberg_py(_keys(spark, 0), p)
+    write_iceberg_py(_keys(spark, 100), p, mode="append")
+    with open(os.path.join(p, "metadata", "version-hint.text"), "w") as f:
+        f.write("1")
+    assert _read_keys(spark, p) == list(range(10)) + list(range(100, 110))
+    write_iceberg_py(_keys(spark, 200), p, mode="append")
+    assert _read_keys(spark, p) == (
+        list(range(10)) + list(range(100, 110)) + list(range(200, 210))
+    )
+    assert os.path.exists(os.path.join(p, "metadata", "v3.metadata.json"))
+
+
+def test_expire_rerun_after_crash_before_publish(spark, tmp_path, monkeypatch):
+    """A crash between expiry's file deletes and its metadata publish
+    must not leave metadata naming deleted files: the pruned metadata
+    is committed first, so a crash leaves the table readable and a
+    re-run completes."""
+    import types
+
+    import daft_spark.io.iceberg as ice
+
+    p = str(tmp_path / "exp")
+    ice.write_iceberg_py(_keys(spark, 0), p)
+    ice.write_iceberg_py(_keys(spark, 100), p, mode="append")
+    ice.write_iceberg_py(_keys(spark, 200), p, mode="append")
+    armed = [True]
+
+    def once(real):
+        def crash(*a, **k):
+            if armed[0]:
+                armed[0] = False
+                raise OSError("crash before the metadata publish")
+            return real(*a, **k)
+
+        return crash
+
+    monkeypatch.setattr(
+        ice,
+        "json",
+        types.SimpleNamespace(
+            **{**vars(json), "dump": once(json.dump), "dumps": once(json.dumps)}
+        ),
+    )
+    with pytest.raises(OSError, match="crash before"):
+        ice.expire_iceberg_snapshots(p, keep_last=1)
+    monkeypatch.undo()
+    expected = list(range(10)) + list(range(100, 110)) + list(range(200, 210))
+    assert _read_keys(spark, p) == expected
+    out = ice.expire_iceberg_snapshots(p, keep_last=1)
+    assert out["expired_snapshots"] == 2
+    assert len(ice._latest_metadata(p)["snapshots"]) == 1
+    assert _read_keys(spark, p) == expected
+
+
+def test_concurrent_blind_appends_all_land(spark, tmp_path):
+    """N threads x M blind appends (more writers than cores): every
+    append lands exactly once — losers of the publish race rebase on
+    the new head and retry."""
+    import sys
+    import threading
+
+    from daft_spark.io.iceberg import _latest_metadata, write_iceberg_py
+
+    p = str(tmp_path / "many")
+    write_iceberg_py(_keys(spark, 0, 1), p)
+    n_threads, per_thread = 5, 2
+    errs: list[BaseException] = []
+
+    def writer(t):
+        try:
+            for j in range(per_thread):
+                lo = 1000 * (t + 1) + 10 * j
+                write_iceberg_py(_keys(spark, lo, 3), p, mode="append")
+        except BaseException as e:  # noqa: BLE001 - re-raised by the assert
+            errs.append(e)
+
+    threads = [threading.Thread(target=writer, args=(t,)) for t in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs, errs
+    meta = _latest_metadata(p)
+    assert len(meta["snapshots"]) == 1 + n_threads * per_thread
+    seqs = [s["sequence-number"] for s in meta["snapshots"]]
+    assert sorted(seqs) == list(range(1, 2 + n_threads * per_thread))
+    expected = [0] + sorted(
+        1000 * (t + 1) + 10 * j + i
+        for t in range(n_threads)
+        for j in range(per_thread)
+        for i in range(3)
+    )
+    assert _read_keys(spark, p) == expected
+
+
+@pytest.mark.parametrize("op", ["equality_delete", "evolve_schema", "rewrite", "set_ref"])
+def test_commit_on_moved_base_raises(spark, tmp_path, monkeypatch, op):
+    """Only a blind append may rebase: any other commit whose base moved
+    between its read and its publish raises, and the other writer's
+    commit survives untouched."""
+    import daft_spark.io.iceberg as ice
+    from daft_spark.io.publish import ConcurrentCommitError
+
+    p = str(tmp_path / op)
+    ice.write_iceberg_py(_keys(spark, 0, 20).repartition(2), p)
+    real, raced = ice._load_metadata, []
+
+    def racing_load(path):
+        out = real(path)
+        if not raced:  # another writer lands right after this read
+            raced.append(1)
+            ice.write_iceberg_py(_keys(spark, 100, 5), p, mode="append")
+        return out
+
+    ops = {
+        "equality_delete": lambda: ice.delete_iceberg_py(
+            _keys(spark, 0, 3), p, ["k"]
+        ),
+        "evolve_schema": lambda: ice.evolve_iceberg_schema(
+            p, add_columns=[("extra", "string")]
+        ),
+        "rewrite": lambda: ice.rewrite_iceberg_data_files(p, spark),
+        "set_ref": lambda: ice.set_iceberg_ref(p, "audit"),
+    }
+    monkeypatch.setattr(ice, "_load_metadata", racing_load)
+    with pytest.raises(ConcurrentCommitError, match="concurrent Iceberg commit"):
+        ops[op]()
+    monkeypatch.undo()
+    meta = ice._latest_metadata(p)
+    assert [s["summary"]["operation"] for s in meta["snapshots"]] == ["append"] * 2
+    assert len(meta["schemas"]) == 1 and not meta["refs"]
+    assert _read_keys(spark, p) == list(range(20)) + list(range(100, 105))
+
+
+def test_rest_same_parent_commits_one_409_then_lands(spark, tmp_path):
+    """Two threads POST commits staged on the same parent: the server
+    publishes exactly one of them first; the other gets 409
+    CommitFailedException, rebases on the new head and lands."""
+    import threading
+
+    from daft_spark.io.iceberg import _latest_metadata, _stage_write
+    from daft_spark.io.iceberg_rest import IcebergRestCatalogServer, RestError
+    from daft_spark.session import Catalog
+
+    with IcebergRestCatalogServer(str(tmp_path / "wh")) as srv:
+        cat = Catalog.from_iceberg(srv.uri)
+        cat.create_namespace("ns")
+        cat.create_table("ns.t", _keys(spark, 0, 5))
+        tpath = srv._httpd.catalog._path("ns.t")
+        staged = [
+            _stage_write(_keys(spark, lo, 5), tpath, cat._load("ns.t"), "append")
+            for lo in (100, 200)
+        ]
+        assert (
+            staged[0].base["current-snapshot-id"]
+            == staged[1].base["current-snapshot-id"]
+        )
+        codes, lock, errs = [], threading.Lock(), []
+        real = cat.commit_table
+
+        def recording(identifier, requirements, updates):
+            try:
+                out = real(identifier, requirements, updates)
+            except RestError as e:
+                with lock:
+                    codes.append(e.code)
+                raise
+            with lock:
+                codes.append(200)
+            return out
+
+        cat.commit_table = recording
+        barrier = threading.Barrier(2)
+
+        def commit(s):
+            try:
+                barrier.wait(timeout=60)
+                cat._commit_append("ns.t", s)
+            except BaseException as e:  # noqa: BLE001 - re-raised by the assert
+                errs.append(e)
+
+        threads = [threading.Thread(target=commit, args=(s,)) for s in staged]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert not errs, errs
+        assert sorted(codes) == [200, 200, 409]
+        meta = _latest_metadata(tpath)
+        assert [s["sequence-number"] for s in meta["snapshots"]] == [1, 2, 3]
+        assert _read_keys(spark, tpath) == (
+            list(range(5)) + list(range(100, 105)) + list(range(200, 205))
+        )

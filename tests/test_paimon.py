@@ -329,3 +329,24 @@ def test_paimon_and_iceberg_null_partition_values(spark, tmp_path):
     write_paimon_py(upd, p3, partition_by=["grp"], primary_key=["id", "grp"])
     got = {r["id"]: r["v"] for r in read_paimon_py(p3, spark).collect()}
     assert got[2] == -9.0 and len(got) == 4
+
+
+def test_paimon_append_past_lagging_latest_hint(spark, tmp_path):
+    """A commit that published snapshot-<N+1> but crashed before it
+    rotated LATEST: readers and the next append probe past the hint
+    instead of reading stale state or failing forever on the taken
+    snapshot name."""
+    from daft_spark.io.paimon import read_paimon_py, write_paimon_py
+
+    def keys(lo):
+        return spark.range(lo, lo + 10).select(F.col("id").alias("k"))
+
+    path = str(tmp_path / "lag")
+    write_paimon_py(keys(0), path, mode="error")
+    write_paimon_py(keys(100), path, mode="append")
+    with open(os.path.join(path, "snapshot", "LATEST"), "w") as f:
+        f.write("1")
+    write_paimon_py(keys(200), path, mode="append")
+    got = sorted(r["k"] for r in read_paimon_py(path, spark).collect())
+    assert got == list(range(10)) + list(range(100, 110)) + list(range(200, 210))
+    assert os.path.exists(os.path.join(path, "snapshot", "snapshot-3"))

@@ -846,7 +846,7 @@ def test_rest_catalog_commit_conflict_retry(spark, tmp_path):
     concurrent threaded writers both eventually commit."""
     import threading
 
-    from daft_spark.io.iceberg import _latest_metadata, write_iceberg_py
+    from daft_spark.io.iceberg import _latest_metadata, _stage_write
     from daft_spark.io.iceberg_rest import IcebergRestCatalogServer
     from daft_spark.session import Catalog
 
@@ -856,18 +856,20 @@ def test_rest_catalog_commit_conflict_retry(spark, tmp_path):
         cat.create_namespace("ns")
         cat.create_table("ns.t", base)
         tpath = srv._httpd.catalog._path("ns.t")
-        s1 = write_iceberg_py(
+        s1 = _stage_write(
             spark.range(100, 105).select(F.col("id").alias("k")),
-            tpath, mode="append", _publish=False,
+            tpath, cat._load("ns.t"), "append",
         )
-        s2 = write_iceberg_py(
+        s2 = _stage_write(
             spark.range(200, 205).select(F.col("id").alias("k")),
-            tpath, mode="append", _publish=False,
+            tpath, cat._load("ns.t"), "append",
         )
-        assert s1["prior_snapshot_id"] == s2["prior_snapshot_id"]
-        cat._commit_staged_with_retry("ns.t", tpath, s1)
+        assert (
+            s1.base["current-snapshot-id"] == s2.base["current-snapshot-id"]
+        )
+        cat._commit_append("ns.t", s1)
         # stale parent -> 409 -> refresh, rebase, retry
-        cat._commit_staged_with_retry("ns.t", tpath, s2)
+        cat._commit_append("ns.t", s2)
         got = sorted(r["k"] for r in cat.read_table("ns.t").collect())
         assert got == (
             list(range(5)) + list(range(100, 105)) + list(range(200, 205))
