@@ -244,7 +244,9 @@ def _checkpoint_rows(table_path: str, version: int) -> list[dict]:
 class _Snapshot(NamedTuple):
     """Table state at one version: what every read and commit starts
     from. ``adds`` maps data-file path -> add action (sorted by path);
-    ``txns`` maps appId -> its highest committed txn version."""
+    ``txns`` maps appId -> its highest committed txn version.
+    ``table_id`` and ``created_time`` are the metaData ``id`` and
+    ``createdTime``, which every later metaData action keeps."""
 
     version: int
     schema_json: str
@@ -253,6 +255,8 @@ class _Snapshot(NamedTuple):
     configuration: dict
     protocol: dict
     txns: dict[str, int]
+    table_id: str
+    created_time: int
 
 
 def _snapshot(table_path: str, version: int | None = None) -> _Snapshot:
@@ -283,6 +287,7 @@ def _snapshot(table_path: str, version: int | None = None) -> _Snapshot:
     schema_json: str | None = None
     partition_cols: list[str] = []
     configuration: dict = {}
+    metadata: dict = {}
     protocol: dict = dict(_MAX_SUPPORTED)
     adds: dict[str, dict] = {}
     txns: dict[str, int] = {}
@@ -293,6 +298,7 @@ def _snapshot(table_path: str, version: int | None = None) -> _Snapshot:
             _check_protocol(protocol)
         md = row.get("metaData")
         if md:
+            metadata = md
             schema_json = md["schemaString"]
             partition_cols = list(md.get("partitionColumns") or [])
             configuration = dict(md.get("configuration") or {})
@@ -322,6 +328,8 @@ def _snapshot(table_path: str, version: int | None = None) -> _Snapshot:
         configuration,
         protocol,
         txns,
+        metadata.get("id") or str(uuid.uuid4()),
+        int(metadata.get("createdTime") or 0),
     )
 
 
@@ -355,16 +363,20 @@ def _commit(
 
 
 def _metadata_action(
-    schema_json: str, partition_cols: list[str], configuration: dict
+    snap: _Snapshot | None, schema_json: str, partition_cols: list[str],
+    configuration: dict,
 ) -> dict:
+    """A metaData action. The table ``id`` and ``createdTime`` are minted
+    once, by the commit that creates the table (``snap`` None), and kept
+    by every later one (PROTOCOL.md: the id is unique and stable)."""
     return {
         "metaData": {
-            "id": str(uuid.uuid4()),
+            "id": snap.table_id if snap else str(uuid.uuid4()),
             "format": {"provider": "parquet", "options": {}},
             "schemaString": schema_json,
             "partitionColumns": partition_cols,
             "configuration": configuration,
-            "createdTime": int(time.time() * 1000),
+            "createdTime": snap.created_time if snap else int(time.time() * 1000),
         }
     }
 
@@ -1055,7 +1067,7 @@ def write_deltalake_py(
         actions.append({"protocol": dict(_MAX_SUPPORTED)})
     if snap is None or mode == "overwrite":
         # table properties (CDF flag etc.) survive overwrites
-        actions.append(_metadata_action(df.schema.json(), partition_by, prior_cfg))
+        actions.append(_metadata_action(snap, df.schema.json(), partition_by, prior_cfg))
     if snap is not None and mode == "overwrite":
         actions.extend(
             {"remove": {"path": rel, "deletionTimestamp": now_ms, "dataChange": True}}
@@ -1095,14 +1107,9 @@ def _write_checkpoint(table_path: str, version: int) -> None:
         {"protocol": ck_protocol, "metaData": None, "add": None},
         {
             "protocol": None,
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema_json,
-                "partitionColumns": snap.partition_cols,
-                "configuration": snap.configuration,
-                "createdTime": int(time.time() * 1000),
-            },
+            **_metadata_action(
+                snap, snap.schema_json, snap.partition_cols, snap.configuration
+            ),
             "add": None,
         },
     ]
@@ -1123,6 +1130,7 @@ def _write_checkpoint(table_path: str, version: int) -> None:
                     "size": int(add.get("size", 0)),
                     "modificationTime": int(add.get("modificationTime", 0)),
                     "dataChange": True,
+                    "stats": add.get("stats"),
                     "deletionVector": (
                         {
                             "storageType": dv["storageType"],
@@ -1187,6 +1195,9 @@ def _write_checkpoint(table_path: str, version: int) -> None:
                         ("size", pa.int64()),
                         ("modificationTime", pa.int64()),
                         ("dataChange", pa.bool_()),
+                        # the JSON string form (PROTOCOL.md: checkpoint
+                        # add.stats), so pruning survives a checkpoint
+                        ("stats", pa.string()),
                         (
                             "deletionVector",
                             pa.struct(
@@ -1281,6 +1292,7 @@ def set_column_mapping_delta_py(path: str, mode: str = "name") -> None:
         [
             {"protocol": new_proto},
             _metadata_action(
+                snap,
                 json.dumps({"type": "struct", "fields": out_fields}),
                 snap.partition_cols,
                 new_cfg,
@@ -1362,7 +1374,7 @@ def evolve_delta_schema(
     _commit(
         path,
         snap,
-        [_metadata_action(schema_json, snap.partition_cols, new_cfg)],
+        [_metadata_action(snap, schema_json, snap.partition_cols, new_cfg)],
         "CHANGE COLUMN",
     )
 
@@ -1648,7 +1660,7 @@ def restore_deltalake_py(path: str, version: int) -> None:
     ):
         actions.append(
             _metadata_action(
-                target.schema_json, target.partition_cols, target.configuration
+                cur, target.schema_json, target.partition_cols, target.configuration
             )
         )
 
@@ -1710,7 +1722,7 @@ def enable_cdf_delta_py(path: str) -> None:
         snap,
         [
             {"protocol": new_proto},
-            _metadata_action(snap.schema_json, snap.partition_cols, new_cfg),
+            _metadata_action(snap, snap.schema_json, snap.partition_cols, new_cfg),
         ],
         "SET TBLPROPERTIES",
     )

@@ -211,14 +211,24 @@ def minhash_signatures(
     )
 
 
+def _signature_aggs(num_hashes: int, seed: int = 42) -> list[Column]:
+    """The ``num_hashes`` universal-hash permutation minima over a
+    ``__h`` shingle-hash column, aliased ``__m0..__m{n-1}``. Each is
+    parsed from SQL text in 3 driver-to-JVM calls, where composing the
+    same expression from Column operators makes about 70 (each operator
+    and literal is its own call, and each records its Python call
+    site). The expressions and their types are the same either way:
+    int constants, a bigint modulus."""
+    return [
+        F.expr(f"min((__h * {a} + {b}) % {_MERSENNE_P}) AS __m{i}")
+        for i, (a, b) in enumerate(_perm_constants(num_hashes, seed))
+    ]
+
+
 def _signatures_from_hashes(ex: DataFrame, num_hashes: int, seed: int = 42) -> DataFrame:
     """min-aggregate the universal-hash permutations of (__id, __h)
     shingle-hash rows into (__id, __m0..__m{n-1})."""
-    aggs = [
-        F.min((F.col("__h") * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE_P)).alias(f"__m{i}")
-        for i, (a, b) in enumerate(_perm_constants(num_hashes, seed))
-    ]
-    return ex.groupBy("__id").agg(*aggs)
+    return ex.groupBy("__id").agg(*_signature_aggs(num_hashes, seed))
 
 
 def simhash64(token_col: Column) -> Column:
@@ -436,16 +446,15 @@ def _band_candidates(
     candidate pairs."""
     r = num_hashes // bands
     band_cols = [
-        F.xxhash64(
-            F.concat_ws("|", *[F.col(f"__m{b * r + j}") for j in range(r)]),
-            F.lit(b),
-        ).alias(f"__band{b}")
+        "xxhash64(concat_ws('|', {ms}), {b}) AS __band{b}".format(
+            ms=", ".join(f"__m{b * r + j}" for j in range(r)), b=b
+        )
         for b in range(bands)
     ]
     # (The stacked+windowed bucket frame is persisted inside
     # _capped_bucket_pairs — that cache covers every downstream read, so
     # the banded frame itself needs no second persist.)
-    banded = sig.select("__id", *band_cols)
+    banded = sig.selectExpr("__id", *band_cols)
     stacked = banded.selectExpr(
         "__id",
         "stack({n}, {args}) as (band_id, band_hash)".format(
@@ -765,11 +774,11 @@ def minhash_near_dups(
     frame instead of two offsets the codegen loss, and at 100 TB the
     saved exchange is the entire shingle stream."""
     ex = shingle_hashes(df, text_col, id_col, shingle_k)
-    aggs = [
-        F.min((F.col("__h") * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE_P)).alias(f"__m{i}")
-        for i, (a, b) in enumerate(_perm_constants(num_hashes, seed))
-    ]
-    both = ex.groupBy("__id").agg(*aggs, F.collect_set("__h").alias("__vsh")).persist()
+    both = (
+        ex.groupBy("__id")
+        .agg(*_signature_aggs(num_hashes, seed), F.collect_set("__h").alias("__vsh"))
+        .persist()
+    )
     sig = both.select("__id", *[f"__m{i}" for i in range(num_hashes)])
     cands = _band_candidates(sig, num_hashes, bands, max_bucket_size)
     sets = both.select(F.col("__id").alias("__vid"), F.col("__vsh"))
@@ -862,14 +871,7 @@ def lsh_banding_audit(
     truth = jaccard_pairs(
         df, text_col, id_col, threshold=threshold, shingle_k=shingle_k
     ).select("id_a", "id_b")
-    ex = shingle_hashes(df, text_col, id_col, shingle_k)
-    aggs = [
-        F.min(
-            (F.col("__h") * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE_P)
-        ).alias(f"__m{i}")
-        for i, (a, b) in enumerate(_perm_constants(num_hashes, seed))
-    ]
-    sig = ex.groupBy("__id").agg(*aggs)
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k, seed)
     cands = (
         _band_candidates(sig, num_hashes, bands, max_bucket_size)
         .select("id_a", "id_b")

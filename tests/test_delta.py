@@ -1588,3 +1588,45 @@ def test_commit_on_stale_snapshot_never_clobbers(spark, tbl):
         assert f.read() == before
     assert not [f for f in os.listdir(os.path.join(tbl, "_delta_log")) if f.startswith(".tmp-")]
     assert read_deltalake_py(tbl, spark).count() == 20
+
+
+def test_table_id_stable_across_metadata_commits(spark, tbl):
+    """Create, SET TBLPROPERTIES, overwrite and a checkpoint all state
+    one table id and creation time (PROTOCOL.md: the metaData id is the
+    table's unique, stable identifier)."""
+    import pyarrow.parquet as pq
+
+    from daft_spark.io.delta import _snapshot, _write_checkpoint, enable_cdf_delta_py
+
+    write_deltalake_py(_df(spark, 0, 10), tbl, mode="overwrite")
+    enable_cdf_delta_py(tbl)
+    write_deltalake_py(_df(spark, 10, 20), tbl, mode="overwrite")
+    _write_checkpoint(tbl, 2)
+    log = os.path.join(tbl, "_delta_log")
+    metadata = []
+    for v in range(3):
+        with open(os.path.join(log, f"{v:020d}.json")) as f:
+            metadata += [a["metaData"] for a in map(json.loads, f) if "metaData" in a]
+    ck = pq.read_table(os.path.join(log, f"{2:020d}.checkpoint.parquet")).to_pylist()
+    metadata += [r["metaData"] for r in ck if r["metaData"]]
+    assert len(metadata) == 4
+    assert len({(m["id"], m["createdTime"]) for m in metadata}) == 1
+    assert _snapshot(tbl).table_id == metadata[0]["id"]
+
+
+def test_stats_pruning_survives_checkpoint(spark, tmp_path):
+    """Checkpointed adds keep their ``stats``: with the JSON commits
+    gone, the planner still admits only the file whose range matches."""
+    from daft_spark.io.delta import _write_checkpoint, delta_admitted_files
+
+    path = str(tmp_path / "t")
+    a = spark.createDataFrame([(i, f"s{i}") for i in range(100)], ["x", "s"])
+    b = spark.createDataFrame([(i, f"s{i}") for i in range(100, 200)], ["x", "s"])
+    write_deltalake_py(a.coalesce(1), path, mode="error")
+    write_deltalake_py(b.coalesce(1), path, mode="append")
+    _write_checkpoint(path, 1)
+    for v in range(2):
+        os.remove(os.path.join(path, "_delta_log", f"{v:020d}.json"))
+    adm, total = delta_admitted_files(path, [("x", "=", 150)])
+    assert total == 2 and len(adm) == 1
+    assert read_deltalake_py(path, spark).count() == 200
