@@ -120,34 +120,18 @@ def configure(spark: SparkSession) -> SparkSession:
             pass
     _ship_package(spark)
     if not getattr(spark, "_daft_spark_sources_registered", False):
-        try:  # format("daft_iceberg") with automatic filter pushdown
-            from daft_spark.io.iceberg_source import IcebergSource
+        # format("daft_iceberg") batch reads with filter pushdown, and
+        # the streaming sources daft_delta, daft_delta_cdf, daft_paimon
+        # and daft_iceberg. A source that fails to import fails here.
+        from daft_spark.io.delta_source import DeltaCDFStreamSource, DeltaStreamSource
+        from daft_spark.io.iceberg_source import IcebergSource
+        from daft_spark.io.paimon_source import PaimonStreamSource
 
-            spark.dataSource.register(IcebergSource)
-        except Exception:
-            pass  # pre-4.1 API
-        try:  # streaming Delta source: readStream.format("daft_delta")
-            from daft_spark.io.delta_source import DeltaStreamSource
-
-            spark.dataSource.register(DeltaStreamSource)
-        except Exception:
-            pass
-        try:  # streaming Paimon source: readStream.format("daft_paimon")
-            from daft_spark.io.paimon_source import PaimonStreamSource
-
-            spark.dataSource.register(PaimonStreamSource)
-        except Exception:
-            pass
-        try:  # streaming CDF source: readStream.format("daft_delta_cdf")
-            from daft_spark.io.delta_source import DeltaCDFStreamSource
-
-            spark.dataSource.register(DeltaCDFStreamSource)
-        except Exception:
-            pass
-        try:
-            spark._daft_spark_sources_registered = True
-        except Exception:
-            pass
+        for source in (
+            IcebergSource, DeltaStreamSource, PaimonStreamSource, DeltaCDFStreamSource
+        ):
+            spark.dataSource.register(source)
+        spark._daft_spark_sources_registered = True
     return spark
 
 

@@ -1882,7 +1882,9 @@ def table_changes_delta_py(
             "change data feed is not enabled on this table "
             "(enable_cdf_delta_py / delta.enableChangeDataFeed)"
         )
-    partition_cols = snap.partition_cols
+    # column-mapped tables: files and partitionValues use physical names
+    _mode, l2p, p2l = _mapping_info(snap.schema_json, snap.configuration)
+    partition_cols = [p2l.get(c, c) for c in snap.partition_cols]
     schema = StructType.fromJson(json.loads(snap.schema_json))
     cdc_schema = StructType(
         list(schema.fields) + [StructField("_change_type", StringType())]
@@ -1904,8 +1906,10 @@ def table_changes_delta_py(
         }
         keep = {rel: ks for rel, _pv, _dv, ks in entries if ks is not None}
         if change_type is None:  # cdc files carry _change_type
-            return _scan(spark, path, adds, cdc_schema, partition_cols, keep=keep)
-        df = _scan(spark, path, adds, schema, partition_cols, keep=keep)
+            return _scan(
+                spark, path, adds, cdc_schema, partition_cols, l2p=l2p, keep=keep
+            )
+        df = _scan(spark, path, adds, schema, partition_cols, l2p=l2p, keep=keep)
         return df.withColumn("_change_type", F.lit(change_type)).select(*cdc_cols)
 
     versions = [

@@ -1,8 +1,12 @@
-"""Streaming Delta SOURCE — a Spark Python DataSource (format
-``daft_delta``) that tails a Delta table's JSON commit log:
-offset = log version, micro-batch (start, end] = the files those
-commits added. Pairs with the exactly-once streaming Delta SINK
-(io/delta.py) for end-to-end delta-to-delta pipelines.
+"""Streaming Delta SOURCES — Spark Python DataSources that tail a Delta
+table's JSON commit log: ``daft_delta`` (the table's rows) and
+``daft_delta_cdf`` (its change data feed). Both are
+``log_stream.LogStreamReader``s: offset ``{"version": v}``, micro-batch
+(start, end] = the files those commits added (or changed), read
+per file by ``log_stream.read_projected`` with column mapping,
+partition values and deletion vectors applied. Pairs with the
+exactly-once streaming Delta SINK (io/delta.py) for end-to-end
+delta-to-delta pipelines.
 
 Semantics follow the Delta streaming-source contract:
 
@@ -27,32 +31,10 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import StructType
 
-
-def _latest_version(path: str) -> int:
-    from daft_spark.io.delta import _table_versions
-
-    versions = _table_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"not a Delta table: {path}")
-    return versions[-1]
-
-
-def _version_actions(path: str, version: int) -> list[dict]:
-    """The actions of JSON commit ``version``; [] for a checkpoint-only
-    version (its JSON commit was cleaned up)."""
-    from daft_spark.io.delta import _commit_actions_at
-
-    try:
-        return _commit_actions_at(path, version)
-    except FileNotFoundError:
-        return []
+from daft_spark.io.log_stream import LogStreamReader, read_projected
 
 
 class DeltaStreamSource(DataSource):
@@ -71,43 +53,49 @@ class DeltaStreamSource(DataSource):
         return DeltaStreamReader(self.options, schema)
 
 
-class DeltaStreamReader(DataSourceStreamReader):
+class DeltaStreamReader(LogStreamReader):
+    """Entries are (rel path, partitionValues, deletionVector|None,
+    keep ordinals|None, constant columns)."""
+
     def __init__(self, options, schema):
+        from daft_spark.io.delta import _mapping_info, _snapshot
+
         self.path = options["path"]
         self.ignore_changes = str(options.get("ignorechanges", "")).lower() == "true"
         self.ignore_deletes = str(options.get("ignoredeletes", "")).lower() == "true"
         self.schema = schema
-        from daft_spark.io.delta import _mapping_info, _snapshot
-
         snap = _snapshot(self.path)
         # column-mapped tables: data files + partitionValues use
         # physical names; the stream emits logical columns
-        _mode, self.l2p, p2l = _mapping_info(snap.schema_json, snap.configuration)
-        self.partition_cols = [p2l.get(c, c) for c in snap.partition_cols]
+        _mode, self.l2p, _p2l = _mapping_info(snap.schema_json, snap.configuration)
 
-    # -- offsets ----------------------------------------------------------
-    def initialOffset(self) -> dict:
-        # version -1 => the first batch delivers the snapshot at the
-        # then-latest version (Delta's default startingVersion behavior)
-        return {"version": -1}
+    def _latest(self) -> int:
+        from daft_spark.io.delta import _table_versions
 
-    def latestOffset(self) -> dict:
-        return {"version": _latest_version(self.path)}
+        versions = _table_versions(self.path)
+        if not versions:
+            raise FileNotFoundError(f"not a Delta table: {self.path}")
+        return versions[-1]
 
-    def commit(self, end: dict) -> None:
-        pass
-
-    # -- planning ----------------------------------------------------------
-    def _snapshot_adds(self, version: int) -> list[tuple[str, dict]]:
+    def _snapshot_entries(self, version: int) -> list[tuple]:
         from daft_spark.io.delta import _snapshot
 
-        return list(_snapshot(self.path, version).adds.items())
+        return [
+            (rel, add.get("partitionValues"), add.get("deletionVector"), None, None)
+            for rel, add in _snapshot(self.path, version).adds.items()
+        ]
 
-    def _incremental_adds(self, start: int, end: int) -> list[tuple[str, dict]]:
-        out: list[tuple[str, dict]] = []
+    def _entries_between(self, start: int, end: int) -> list[tuple]:
+        from daft_spark.io.delta import _commit_actions_at
+
+        out: list[tuple] = []
         for v in range(start + 1, end + 1):
+            try:
+                actions = _commit_actions_at(self.path, v)
+            except FileNotFoundError:
+                continue  # checkpoint-only version
             adds, removes = [], []
-            for action in _version_actions(self.path, v):
+            for action in actions:
                 if "add" in action:
                     # dataChange=false adds are rearrangements of
                     # existing data (OPTIMIZE compaction) — already
@@ -129,75 +117,27 @@ class DeltaStreamReader(DataSourceStreamReader):
                     f"Delta commit {v} rewrites data files; ignoreDeletes "
                     "only skips delete-only commits — set ignoreChanges=true"
                 )
-            out.extend((a["path"], a) for a in adds)
+            out.extend(
+                (a["path"], a.get("partitionValues"), a.get("deletionVector"), None, None)
+                for a in adds
+            )
         return out
 
-    def partitions(self, start: dict, end: dict):
-        sv, ev = int(start["version"]), int(end["version"])
-        if ev <= sv:
-            entries: list[tuple[str, dict]] = []
-        elif sv < 0:
-            entries = self._snapshot_adds(ev)
-        else:
-            entries = self._incremental_adds(sv, ev)
-        parts = [
-            InputPartition(
-                (
-                    rel,
-                    json.dumps(add.get("partitionValues") or {}),
-                    json.dumps(add.get("deletionVector"))
-                    if add.get("deletionVector")
-                    else None,
-                )
-            )
-            for rel, add in entries
-        ]
-        # Spark requires >= 1 partition per batch
-        return parts or [InputPartition(None)]
+    _incremental_adds = _entries_between  # the remove-policy tests' name
 
-    # -- execution ----------------------------------------------------------
-    def read(self, partition: InputPartition):
-        if partition.value is None:
-            return
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
+    def _read_entry(self, entry: tuple):
+        from daft_spark.io.delta import _dv_read
 
-        rel, pvals_json, dv_json = partition.value
-        pvals = json.loads(pvals_json)
-        target = pa.schema(
-            [
-                pa.field(f.name, f.type, nullable=True)
-                for f in to_arrow_schema(self.schema)
-            ]
+        rel, pvals, dv, keep, constants = entry
+        return read_projected(
+            os.path.join(self.path, rel),
+            self.schema,
+            drop=_dv_read(self.path, dv) if dv else None,
+            keep=keep,
+            l2p=self.l2p,
+            pvals=pvals,
+            constants=constants,
         )
-        table = pq.read_table(os.path.join(self.path, rel))
-        if dv_json:
-            from daft_spark.io.delta import _dv_read
-
-            drop = _dv_read(self.path, json.loads(dv_json))
-            if drop:
-                idx = pa.array(range(table.num_rows), type=pa.int64())
-                table = table.filter(
-                    pc.invert(pc.is_in(idx, value_set=pa.array(drop, type=pa.int64())))
-                )
-        n = table.num_rows
-        cols = []
-        for tfield in target:
-            phys = self.l2p.get(tfield.name, tfield.name)
-            if phys in table.column_names:
-                cols.append(table.column(phys).cast(tfield.type))
-            elif tfield.name in self.partition_cols:
-                # partition columns live in partitionValues (spec: data
-                # files omit them; mapped tables key them by physical
-                # name); serialized as strings, null if absent
-                raw = pvals.get(phys, pvals.get(tfield.name))
-                arr = pa.array([raw] * n, type=pa.string())
-                cols.append(arr.cast(tfield.type))
-            else:
-                cols.append(pa.nulls(n, type=tfield.type))
-        yield from pa.table(cols, schema=target).to_batches(max_chunksize=65536)
 
 
 class DeltaCDFStreamSource(DataSource):
@@ -235,112 +175,40 @@ class DeltaCDFStreamSource(DataSource):
         return DeltaCDFStreamReader(self.options, schema)
 
 
-class DeltaCDFStreamReader(DataSourceStreamReader):
+class DeltaCDFStreamReader(DeltaStreamReader):
+    """The Delta stream reader over the change feed: every batch, the
+    first included, is the changes of the commits in (start, end],
+    planned by ``_commit_changes`` exactly as table_changes_delta_py
+    plans them. The offset starts at ``startingversion - 1``."""
+
     def __init__(self, options, schema):
         from daft_spark.io.delta import _cdf_enabled, _snapshot
 
-        self.path = options["path"]
-        self.schema = schema
-        self.start_version = int(options.get("startingversion", 0))
-        snap = _snapshot(self.path)
+        snap = _snapshot(options["path"])
         if not _cdf_enabled(snap.configuration):
             raise ValueError(
                 "change data feed is not enabled on this table "
                 "(enable_cdf_delta_py / delta.enableChangeDataFeed)"
             )
+        super().__init__(options, schema)
         self.partition_cols = snap.partition_cols
+        self.start = int(options.get("startingversion", 0)) - 1
 
-    def initialOffset(self) -> dict:
-        return {"version": self.start_version - 1}
+    def _snapshot_entries(self, version: int) -> list[tuple]:
+        return self._entries_between(-1, version)
 
-    def latestOffset(self) -> dict:
-        return {"version": _latest_version(self.path)}
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    def _version_entries(self, v: int) -> list[tuple]:
-        """[(kind, abs_file, pvals_json, version, dv_json|None,
-        keep_json|None)] for one commit — kind 'cdc' (file carries
-        _change_type), 'insert', or 'delete' — planned by
-        _commit_changes exactly as table_changes_delta_py plans it."""
+    def _entries_between(self, start: int, end: int) -> list[tuple]:
         from daft_spark.io.delta import _commit_changes, _commit_file
 
-        if not os.path.exists(_commit_file(self.path, v)):
-            return []  # checkpoint-only version
-        _ts, changes = _commit_changes(self.path, v, self.partition_cols)
-        return [
-            (
-                kind,
-                os.path.join(self.path, rel),
-                json.dumps(pv),
-                v,
-                json.dumps(dv) if dv else None,
-                json.dumps(keep) if keep is not None else None,
-            )
-            for kind, rel, pv, dv, keep in changes
-        ]
-
-    def partitions(self, start: dict, end: dict):
-        sv, ev = int(start["version"]), int(end["version"])
-        entries: list[tuple] = []
-        for v in range(max(sv + 1, 0), ev + 1):
-            entries.extend(self._version_entries(v))
-        parts = [InputPartition(t) for t in entries]
-        return parts or [InputPartition(None)]
-
-    def read(self, partition: InputPartition):
-        if partition.value is None:
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        kind, fpath, pvals_json, version, dv_json, keep_json = partition.value
-        pvals = json.loads(pvals_json)
-        target = pa.schema(
-            [
-                pa.field(f.name, f.type, nullable=True)
-                for f in to_arrow_schema(self.schema)
-            ]
-        )
-        table = pq.read_table(fpath)
-        if keep_json:
-            # DV-diff reconstruction: stream exactly these row ordinals
-            table = table.take(
-                [p for p in json.loads(keep_json) if p < table.num_rows]
-            )
-        elif dv_json:
-            # MoR: drop the deletion vector's row ordinals so the
-            # reconstructed insert/delete carries only visible rows
-            import numpy as np
-
-            from daft_spark.io.delta import _dv_read
-
-            drop = [
-                p for p in _dv_read(self.path, json.loads(dv_json))
-                if p < table.num_rows
-            ]
-            if drop:
-                mask = np.ones(table.num_rows, dtype=bool)
-                mask[np.asarray(drop, dtype=np.int64)] = False
-                table = table.filter(pa.array(mask))
-        n = table.num_rows
-        cols = []
-        for tfield in target:
-            if tfield.name == "_change_type":
-                if kind == "cdc":
-                    cols.append(table.column("_change_type").cast(tfield.type))
-                else:
-                    cols.append(pa.array([kind] * n, type=pa.string()))
-            elif tfield.name == "_commit_version":
-                cols.append(pa.array([version] * n, type=pa.int64()))
-            elif tfield.name in table.column_names:
-                cols.append(table.column(tfield.name).cast(tfield.type))
-            elif tfield.name in self.partition_cols:
-                raw = pvals.get(tfield.name)
-                arr = pa.array([raw] * n, type=pa.string())
-                cols.append(arr.cast(tfield.type))
-            else:
-                cols.append(pa.nulls(n, type=tfield.type))
-        yield from pa.table(cols, schema=target).to_batches(max_chunksize=65536)
+        out: list[tuple] = []
+        for v in range(start + 1, end + 1):
+            if not os.path.exists(_commit_file(self.path, v)):
+                continue  # checkpoint-only version
+            _ts, changes = _commit_changes(self.path, v, self.partition_cols)
+            for kind, rel, pv, dv, keep in changes:
+                # a cdc file carries its own _change_type column
+                constants = {"_commit_version": v}
+                if kind != "cdc":
+                    constants["_change_type"] = kind
+                out.append((rel, pv, dv, keep, constants))
+        return out

@@ -12,8 +12,10 @@ pruning needs no manual ``filters=`` plumbing. Every filter is
 returned as unhandled — pruning is file-granular, and Spark re-applies
 the predicates row-level above the scan, which keeps semantics exact.
 
-Execution shape: one input partition per pruned data file; each task
-reads its file with pyarrow and streams Arrow record batches, applying
+Execution shape: one input partition per ~128 MB bin of pruned data
+files (``log_stream.bin_pack``; files with different applicable
+deletes never share a bin); each task reads its files with pyarrow
+and streams Arrow record batches, applying
 the table's merge-on-read deletes LOCALLY (equality deletes as value
 anti-masks, position deletes as ordinal anti-masks — per-file work,
 no shuffle at all). This path trades the JVM parquet scan for
@@ -31,6 +33,10 @@ plan (missing rows). Workaround: call ``load()`` per query, or use
 ``read_iceberg_py``. Nothing the source can do — ``pushFilters`` is
 never invoked for the filterless re-use.
 
+``readStream.format("daft_iceberg")`` is ``IcebergStreamReader``, a
+``log_stream.LogStreamReader`` (the one micro-batch rule of the lake
+streaming sources) whose entries are this reader's task bins.
+
 Reference: ``daft/io/iceberg/_iceberg.py:130`` plans Iceberg scans
 through pyiceberg with pushed filters; this source is the same design
 on Spark's pluggable-scan surface.
@@ -43,7 +49,6 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     EqualNullSafe,
     EqualTo,
     GreaterThan,
@@ -55,6 +60,8 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
+
+from daft_spark.io.log_stream import LogStreamReader, bin_pack, target_schema
 
 
 def _translate(filters) -> tuple[list[tuple], list]:
@@ -154,17 +161,6 @@ class IcebergReader(DataSourceReader):
         self.proj_fields = [(f["name"], f["id"]) for f in ice["fields"]]
         self._spark_schema = schema if schema is not None else _current_schema(meta)
 
-    def _target_arrow_schema(self):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return pa.schema(
-            [
-                pa.field(f.name, f.type, nullable=True)
-                for f in to_arrow_schema(self._spark_schema)
-            ]
-        )
-
     def pushFilters(self, filters):
         if self.start_snapshot_id is not None:
             # incremental scans do no file pruning — hand every filter
@@ -176,7 +172,7 @@ class IcebergReader(DataSourceReader):
         # file-granular pruning only: Spark must re-apply row-level
         yield from unhandled
 
-    def _incremental_partitions(self) -> Sequence[InputPartition]:
+    def _incremental_bins(self) -> list[tuple]:
         from daft_spark.io.iceberg import _latest_metadata
 
         meta = _latest_metadata(self.path)
@@ -196,32 +192,30 @@ class IcebergReader(DataSourceReader):
             )
         start_seq = by_id[self.start_snapshot_id].get("sequence-number", 0)
         end_seq = chain[-1].get("sequence-number", 0) if chain else 0
-        files = _appended_data_files(
-            self.path,
-            start_seq,
-            end_seq,
-            strict=True,
-            end_snapshot_id=self.end_snapshot_id,
+        return _append_bins(
+            _appended_data_files(
+                self.path,
+                start_seq,
+                end_seq,
+                strict=True,
+                end_snapshot_id=self.end_snapshot_id,
+            )
         )
-        target = 128 * 1024 * 1024
-        parts: list[InputPartition] = []
-        bin_files: list[str] = []
-        bin_bytes = 0
-        for p, size in sorted(files):
-            if bin_files and bin_bytes + size > target:
-                parts.append(InputPartition((bin_files, [], [])))
-                bin_files, bin_bytes = [], 0
-            bin_files.append(p)
-            bin_bytes += size
-        if bin_files:
-            parts.append(InputPartition((bin_files, [], [])))
-        return parts or [InputPartition(([], [], []))]
 
     def partitions(self) -> Sequence[InputPartition]:
+        # never return []: Spark invokes read() with a default partition
+        # when the list is empty, and partition.value would then be absent
+        return [InputPartition(b) for b in self._bins()] or [
+            InputPartition(([], [], []))
+        ]
+
+    def _bins(self) -> list[tuple]:
+        """The read's tasks: (data files, equality deletes, position
+        deletes), data files bin-packed by size."""
         from daft_spark.io.iceberg import _latest_metadata, _live_files_and_deletes
 
         if self.start_snapshot_id is not None:
-            return self._incremental_partitions()
+            return self._incremental_bins()
         meta = _latest_metadata(self.path)
         if meta.get("format-version", 1) > 2:
             raise NotImplementedError("Iceberg format v3+ not supported")
@@ -238,7 +232,6 @@ class IcebergReader(DataSourceReader):
         # files doesn't schedule one task each; files with different
         # applicable-delete sets never share a task (delete application
         # is per-file local work, never a shuffle)
-        target = 128 * 1024 * 1024
         by_key: dict[tuple, list] = {}
         for rec in data:
             eq = tuple(
@@ -252,24 +245,17 @@ class IcebergReader(DataSourceReader):
                 if d.get("content") == 1 and d["seq"] >= rec["seq"]
             )
             by_key.setdefault((eq, pos), []).append(rec)
-        parts = []
-        for (eq, pos), recs in by_key.items():
-            bin_files: list[str] = []
-            bin_bytes = 0
-            for rec in recs:
-                if bin_files and bin_bytes + rec["size"] > target:
-                    parts.append(InputPartition((bin_files, list(eq), list(pos))))
-                    bin_files, bin_bytes = [], 0
-                bin_files.append(rec["path"])
-                bin_bytes += rec["size"]
-            if bin_files:
-                parts.append(InputPartition((bin_files, list(eq), list(pos))))
-        # never return []: Spark invokes read() with a default partition
-        # when the list is empty, and partition.value would then be absent
-        return parts or [InputPartition(([], [], []))]
+        return [
+            (b, list(eq), list(pos))
+            for (eq, pos), recs in by_key.items()
+            for b in bin_pack((rec["path"], rec["size"]) for rec in recs)
+        ]
 
     def read(self, partition: InputPartition) -> Iterator:
-        paths, eq_deletes, pos_deletes = partition.value
+        return self._read_bin(partition.value)
+
+    def _read_bin(self, value: tuple) -> Iterator:
+        paths, eq_deletes, pos_deletes = value
         for path in paths:
             yield from self._read_one(path, eq_deletes, pos_deletes)
 
@@ -343,7 +329,7 @@ class IcebergReader(DataSourceReader):
 
         # eq entries may arrive tuple-ized from the partition key
         eq_deletes = [(p, list(cols)) for p, cols in eq_deletes]
-        target = self._target_arrow_schema()
+        target = target_schema(self._spark_schema)
         table = self._project(pq.read_table(path), target)
         n = table.num_rows
         keep = None  # boolean mask, lazily created
@@ -450,6 +436,12 @@ def _main_ancestors(meta: dict, head_id: int | None = None) -> list[dict]:
     return chain
 
 
+def _append_bins(files: list[tuple[str, int]]) -> list[tuple]:
+    """Read bins (data files, no deletes) of appended (path, size)
+    files, packed in path order."""
+    return [(b, [], []) for b in bin_pack(sorted(files))]
+
+
 def _appended_data_files(
     path: str,
     start_seq: int,
@@ -524,20 +516,23 @@ def _appended_data_files(
     return out
 
 
-class IcebergStreamReader(DataSourceStreamReader):
+class IcebergStreamReader(LogStreamReader):
     """Streaming Iceberg source (``spark.readStream.format(
-    "daft_iceberg")``), following the Iceberg Spark connector's
-    streaming semantics: offset = the table's last sequence number,
-    the FIRST batch is the table's current snapshot (live files with
-    merge-on-read deletes applied — delegated to the batch reader's
-    planner), later batches contain only the files ADDED by each
-    append snapshot. ``replace`` snapshots (compaction) are data
-    rearrangements and are skipped; ``overwrite``/``delete`` snapshots
-    fail the stream unless ``streaming-skip-overwrite-snapshots`` /
+    "daft_iceberg")``), a ``log_stream.LogStreamReader`` following the
+    Iceberg Spark connector's streaming semantics: offset
+    ``{"seq": n}``, the table's last sequence number; the FIRST batch
+    is the table's current snapshot (live files with merge-on-read
+    deletes applied — delegated to the batch reader's planner), later
+    batches contain only the files ADDED by each append snapshot.
+    ``replace`` snapshots (compaction) are data rearrangements and are
+    skipped; ``overwrite``/``delete`` snapshots fail the stream unless
+    ``streaming-skip-overwrite-snapshots`` /
     ``streaming-skip-delete-snapshots`` is set — the same knobs the
-    real connector exposes. Executor-side reads reuse the batch
-    reader's field-id projection path, so schema evolution mid-stream
-    resolves renamed columns by id."""
+    real connector exposes. Entries are the batch reader's task bins,
+    read by its field-id projection path, so schema evolution
+    mid-stream resolves renamed columns by id."""
+
+    offset_key = "seq"
 
     def __init__(self, options, schema):
         self.path = options["path"]
@@ -551,19 +546,32 @@ class IcebergStreamReader(DataSourceStreamReader):
         # projection fields travel; per-batch planning stays driver-side
         self._batch = IcebergReader({"path": self.path}, schema)
 
-    # -- offsets ----------------------------------------------------------
-    def initialOffset(self) -> dict:
-        return {"seq": -1}
-
-    def latestOffset(self) -> dict:
+    def _latest(self) -> int:
         from daft_spark.io.iceberg import _latest_metadata
 
-        return {"seq": _latest_metadata(self.path).get("last-sequence-number", 0)}
+        return _latest_metadata(self.path).get("last-sequence-number", 0)
 
-    def commit(self, end: dict) -> None:
-        pass
+    def _snapshot_entries(self, seq: int) -> list[tuple]:
+        """The MAIN-branch state at sequence ``seq`` — the batch planner
+        pinned to that snapshot (deletes applied). Only main ancestors
+        qualify: a branch write can hold the table-wide max sequence
+        number without being published."""
+        from daft_spark.io.iceberg import _latest_metadata
 
-    # -- planning ----------------------------------------------------------
+        snap = None
+        for s in _main_ancestors(_latest_metadata(self.path)):
+            if s.get("sequence-number", 0) <= seq and (
+                snap is None
+                or s.get("sequence-number", 0) > snap.get("sequence-number", 0)
+            ):
+                snap = s
+        if snap is None:
+            return []
+        planner = IcebergReader(
+            {"path": self.path, "snapshot_id": str(snap["snapshot-id"])}, None
+        )
+        return planner._bins()
+
     def _appended_files(self, start: int, end: int) -> list[tuple[str, int]]:
         """(path, size) of data files ADDED by snapshots with sequence
         number in (start, end], honoring the skip/fail options."""
@@ -575,47 +583,8 @@ class IcebergStreamReader(DataSourceStreamReader):
             skip_delete=self.skip_delete,
         )
 
-    def partitions(self, start: dict, end: dict):
-        from daft_spark.io.iceberg import _latest_metadata, current_snapshot
+    def _entries_between(self, start: int, end: int) -> list[tuple]:
+        return _append_bins(self._appended_files(start, end))
 
-        sv, ev = int(start["seq"]), int(end["seq"])
-        if ev <= sv:
-            return [InputPartition(([], [], []))]
-        if sv < 0:
-            # snapshot batch: the MAIN-branch state at sequence ev —
-            # delegate to the batch planner pinned to that snapshot
-            # (deletes applied). Only main ancestors qualify: a branch
-            # write can hold the table-wide max sequence number without
-            # being published (r8 advice).
-            meta = _latest_metadata(self.path)
-            snap = None
-            for s in _main_ancestors(meta):
-                if s.get("sequence-number", 0) <= ev and (
-                    snap is None
-                    or s.get("sequence-number", 0) > snap.get("sequence-number", 0)
-                ):
-                    snap = s
-            if snap is None:
-                return [InputPartition(([], [], []))]
-            planner = IcebergReader(
-                {"path": self.path, "snapshot_id": str(snap["snapshot-id"])}, None
-            )
-            return list(planner.partitions())
-        files = self._appended_files(sv, ev)
-        target = 128 * 1024 * 1024
-        parts: list[InputPartition] = []
-        bin_files: list[str] = []
-        bin_bytes = 0
-        for p, size in sorted(files):
-            if bin_files and bin_bytes + size > target:
-                parts.append(InputPartition((bin_files, [], [])))
-                bin_files, bin_bytes = [], 0
-            bin_files.append(p)
-            bin_bytes += size
-        if bin_files:
-            parts.append(InputPartition((bin_files, [], [])))
-        return parts or [InputPartition(([], [], []))]
-
-    # -- execution ----------------------------------------------------------
-    def read(self, partition: InputPartition):
-        yield from self._batch.read(partition)
+    def _read_entry(self, entry: tuple):
+        return self._batch._read_bin(entry)

@@ -1,8 +1,11 @@
 """Streaming Paimon SOURCE — a Spark Python DataSource (format
 ``daft_paimon``) that tails an APPEND-ONLY Paimon table's snapshot
-chain: offset = snapshot id, micro-batch (start, end] = the data files
-those snapshots' DELTA manifests added. Completes the lake streaming
-matrix next to the Delta source/sink and Iceberg source/sink.
+chain. It is a ``log_stream.LogStreamReader``: offset
+``{"snapshot": id}``, micro-batch (start, end] = the data files those
+snapshots' DELTA manifests added, read per file by
+``log_stream.read_projected`` with the partition values restored.
+Completes the lake streaming matrix next to the Delta source/sink and
+Iceberg source/sink.
 
 Semantics follow Paimon's own streaming read of append tables:
 
@@ -24,15 +27,12 @@ the free-superset Structured Streaming surface (SURVEY §2.8).
 
 from __future__ import annotations
 
-import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
 from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSource
+
+from daft_spark.io.log_stream import LogStreamReader, read_projected
 
 
 class PaimonStreamSource(DataSource):
@@ -61,7 +61,11 @@ class PaimonStreamSource(DataSource):
         return PaimonStreamReader(self.options, schema)
 
 
-class PaimonStreamReader(DataSourceStreamReader):
+class PaimonStreamReader(LogStreamReader):
+    """Entries are (absolute file path, partition values as strings)."""
+
+    offset_key = "snapshot"
+
     def __init__(self, options, schema):
         from daft_spark.io.paimon import _latest_schema
 
@@ -77,70 +81,34 @@ class PaimonStreamReader(DataSourceStreamReader):
             )
         self.partition_keys = list(self.pschema.get("partitionKeys") or [])
 
-    # -- offsets ----------------------------------------------------------
-    def initialOffset(self) -> dict:
-        # snapshot -1 => first batch delivers the then-latest snapshot
-        return {"snapshot": -1}
-
-    def latestOffset(self) -> dict:
-        from daft_spark.io.paimon import _latest_snapshot_id
-
-        sid = _latest_snapshot_id(self.path)
-        return {"snapshot": int(sid or 0)}
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    # -- planning ----------------------------------------------------------
-    def _entry_tuple(self, entry: dict) -> tuple:
-        """(absolute file path, json partition values) — the partition
-        BinaryRow decodes DRIVER-side so executors only parse JSON."""
+    def _entry(self, rec: dict) -> tuple:
+        """A {partition, bucket, name} record as an entry — the
+        partition BinaryRow decodes DRIVER-side so executors only see
+        strings."""
         from daft_spark.io.paimon import _entry_path, binary_row_decode
 
         ftypes = {f["name"]: f["type"] for f in self.pschema["fields"]}
-        rec = {
-            "partition": entry["_PARTITION"],
-            "bucket": entry["_BUCKET"],
-            "name": entry["_FILE"]["_FILE_NAME"],
-        }
-        fpath = _entry_path(self.path, self.pschema, rec)
-        vals = (
-            binary_row_decode(
-                entry["_PARTITION"], [ftypes[k] for k in self.partition_keys]
-            )
-            if self.partition_keys
-            else []
-        )
-        pvals = {k: (None if v is None else str(v)) for k, v in zip(self.partition_keys, vals)}
-        return (fpath, json.dumps(pvals))
+        keys = self.partition_keys
+        vals = binary_row_decode(rec["partition"], [ftypes[k] for k in keys]) if keys else []
+        pvals = {k: (None if v is None else str(v)) for k, v in zip(keys, vals)}
+        return (_entry_path(self.path, self.pschema, rec), pvals)
+
+    def _latest(self) -> int:
+        from daft_spark.io.paimon import _latest_snapshot_id
+
+        return int(_latest_snapshot_id(self.path) or 0)
 
     def _snapshot_entries(self, sid: int) -> list[tuple]:
-        from daft_spark.io.paimon import (
-            _entry_path,
-            _live_entries,
-            _load_snapshot,
-            binary_row_decode,
-        )
+        from daft_spark.io.paimon import _live_entries, _load_snapshot
 
-        ftypes = {f["name"]: f["type"] for f in self.pschema["fields"]}
-        out = []
-        for rec in _live_entries(self.path, _load_snapshot(self.path, sid)):
-            fpath = _entry_path(self.path, self.pschema, rec)
-            vals = (
-                binary_row_decode(
-                    rec["partition"], [ftypes[k] for k in self.partition_keys]
-                )
-                if self.partition_keys
-                else []
-            )
-            pvals = {
-                k: (None if v is None else str(v))
-                for k, v in zip(self.partition_keys, vals)
-            }
-            out.append((fpath, json.dumps(pvals)))
-        return out
+        if sid == 0:  # no snapshot yet (ids start at 1)
+            return []
+        return [
+            self._entry(rec)
+            for rec in _live_entries(self.path, _load_snapshot(self.path, sid))
+        ]
 
-    def _incremental_entries(self, start: int, end: int) -> list[tuple]:
+    def _entries_between(self, start: int, end: int) -> list[tuple]:
         from daft_spark.io.avro import read_ocf
         from daft_spark.io.paimon import _load_snapshot, _manifest_dir
 
@@ -163,50 +131,19 @@ class PaimonStreamReader(DataSourceStreamReader):
                 _, _, entries = read_ocf(
                     os.path.join(_manifest_dir(self.path), meta["_FILE_NAME"])
                 )
-                for e in entries:
-                    if e["_KIND"] == 0:  # ADD
-                        out.append(self._entry_tuple(e))
+                out.extend(
+                    self._entry(
+                        {
+                            "partition": e["_PARTITION"],
+                            "bucket": e["_BUCKET"],
+                            "name": e["_FILE"]["_FILE_NAME"],
+                        }
+                    )
+                    for e in entries
+                    if e["_KIND"] == 0  # ADD
+                )
         return out
 
-    def partitions(self, start: dict, end: dict):
-        sv, ev = int(start["snapshot"]), int(end["snapshot"])
-        if ev <= sv or ev == 0:
-            entries: list[tuple] = []
-        elif sv < 0:
-            entries = self._snapshot_entries(ev)
-        else:
-            entries = self._incremental_entries(sv, ev)
-        parts = [InputPartition(t) for t in entries]
-        return parts or [InputPartition(None)]
-
-    # -- execution ----------------------------------------------------------
-    def read(self, partition: InputPartition):
-        if partition.value is None:
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        fpath, pvals_json = partition.value
-        pvals = json.loads(pvals_json)
-        target = pa.schema(
-            [
-                pa.field(f.name, f.type, nullable=True)
-                for f in to_arrow_schema(self.schema)
-            ]
-        )
-        table = pq.read_table(fpath)
-        n = table.num_rows
-        cols = []
-        for tfield in target:
-            if tfield.name in table.column_names:
-                cols.append(table.column(tfield.name).cast(tfield.type))
-            elif tfield.name in self.partition_keys:
-                # partition columns live in the manifest entry's
-                # BinaryRow, decoded driver-side into string pvals
-                raw = pvals.get(tfield.name)
-                arr = pa.array([raw] * n, type=pa.string())
-                cols.append(arr.cast(tfield.type))
-            else:
-                cols.append(pa.nulls(n, type=tfield.type))
-        yield from pa.Table.from_arrays(cols, schema=target).to_batches()
+    def _read_entry(self, entry: tuple):
+        fpath, pvals = entry
+        return read_projected(fpath, self.schema, pvals=pvals)

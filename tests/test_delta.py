@@ -504,8 +504,10 @@ def test_column_mapping_partitioned_and_checkpoint(spark, tmp_path):
 
 def test_column_mapping_streaming_source(spark, tmp_path):
     from daft_spark.io.delta import (
+        enable_cdf_delta_py,
         evolve_delta_schema,
         set_column_mapping_delta_py,
+        table_changes_delta_py,
         write_deltalake_py,
     )
     from tests.test_streaming import _drain_to_parquet
@@ -521,6 +523,30 @@ def test_column_mapping_streaming_source(spark, tmp_path):
     rows = spark.read.parquet(out).collect()
     assert sorted(r["k"] for r in rows) == list(range(5))
     assert all(r["tag"] == "a" for r in rows)
+    # the change data feed resolves the renamed column by physical name
+    # too, in batch and as a stream, for files written before and after
+    # the rename
+    enable_cdf_delta_py(src)
+    write_deltalake_py(
+        spark.range(5, 7).select(F.col("id").alias("k"), F.lit("b").alias("tag")),
+        src, mode="append",
+    )
+    want = [(i, "a") for i in range(5)] + [(5, "b"), (6, "b")]
+    batch = table_changes_delta_py(src, spark, starting_version=0)
+    assert sorted((r["k"], r["tag"]) for r in batch.collect()) == want
+    cdf_out = str(tmp_path / "cmscdf")
+    q = (
+        spark.readStream.format("daft_delta_cdf").option("path", src).load()
+        .writeStream.format("parquet")
+        .option("path", cdf_out)
+        .option("checkpointLocation", str(tmp_path / "cmscdfc"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300), "cdf stream did not drain"
+    got = spark.read.parquet(cdf_out).collect()
+    assert sorted((r["k"], r["tag"]) for r in got) == want
+    assert {r["_change_type"] for r in got} == {"insert"}
 
 
 # ---------------------------------------------------------------------------

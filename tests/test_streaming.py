@@ -450,6 +450,72 @@ def test_paimon_stream_source_rejects_pk_tables(spark, tmp_path):
         PaimonStreamReader({"path": p}, None)
 
 
+def test_paimon_stream_source_overwrite_policy(spark, tmp_path):
+    """An OVERWRITE snapshot fails the Paimon stream unless
+    ``ignorechanges`` is set; with it, the overwrite's adds are
+    delivered. Planned and read by direct calls, no streaming query."""
+    from daft_spark.io.paimon import write_paimon_py
+    from daft_spark.io.paimon_source import PaimonStreamReader, PaimonStreamSource
+
+    p = str(tmp_path / "ow")
+    write_paimon_py(spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string"), p)
+    write_paimon_py(
+        spark.createDataFrame([(3, "c")], "id int, s string"), p, mode="overwrite"
+    )
+    schema = PaimonStreamSource({"path": p}).schema()
+    reader = PaimonStreamReader({"path": p}, schema)
+    end = reader.latestOffset()
+    with pytest.raises(RuntimeError, match="ignorechanges"):
+        reader.partitions({"snapshot": 1}, end)
+    reader = PaimonStreamReader({"path": p, "ignorechanges": "true"}, schema)
+    rows = [
+        r
+        for part in reader.partitions({"snapshot": 1}, end)
+        for batch in reader.read(part)
+        for r in batch.to_pylist()
+    ]
+    assert rows == [{"id": 3, "s": "c"}]
+
+
+def test_stream_offsets_keep_their_checkpoint_keys(spark, tmp_path):
+    """Each lake stream reader keeps the offset JSON key and initial
+    value that existing checkpoints hold, so a checkpointed query
+    resumes: Delta and its change feed ``version``, Paimon ``snapshot``,
+    Iceberg ``seq``. Direct method calls, no streaming query."""
+    from daft_spark.io.delta import enable_cdf_delta_py, write_deltalake_py
+    from daft_spark.io.delta_source import DeltaCDFStreamReader, DeltaStreamReader
+    from daft_spark.io.iceberg import write_iceberg_py
+    from daft_spark.io.iceberg_source import IcebergStreamReader
+    from daft_spark.io.paimon import write_paimon_py
+    from daft_spark.io.paimon_source import PaimonStreamReader
+
+    df = spark.createDataFrame([(1,)], "k long")
+    d = str(tmp_path / "d")
+    write_deltalake_py(df, d)  # v0
+    enable_cdf_delta_py(d)  # v1
+    delta = DeltaStreamReader({"path": d}, None)
+    assert delta.initialOffset() == {"version": -1}
+    assert delta.latestOffset() == {"version": 1}
+    # an empty range still plans one partition, which reads nothing
+    (empty,) = delta.partitions({"version": 1}, {"version": 1})
+    assert empty.value is None and list(delta.read(empty)) == []
+    cdf = DeltaCDFStreamReader({"path": d}, None)
+    assert cdf.initialOffset() == {"version": -1}
+    assert cdf.latestOffset() == {"version": 1}
+    cdf = DeltaCDFStreamReader({"path": d, "startingversion": "1"}, None)
+    assert cdf.initialOffset() == {"version": 0}
+    p = str(tmp_path / "p")
+    write_paimon_py(df, p)
+    paimon = PaimonStreamReader({"path": p}, None)
+    assert paimon.initialOffset() == {"snapshot": -1}
+    assert paimon.latestOffset() == {"snapshot": 1}
+    i = str(tmp_path / "i")
+    write_iceberg_py(df, i)
+    iceberg = IcebergStreamReader({"path": i}, None)
+    assert iceberg.initialOffset() == {"seq": -1}
+    assert iceberg.latestOffset() == {"seq": 1}
+
+
 def test_iceberg_sink_idempotence_survives_snapshot_expiration(spark, tmp_path):
     """The sink's batch watermark lives in a TABLE PROPERTY updated with
     each commit — snapshot expiration must not erase it (summary-only
