@@ -56,7 +56,6 @@ import datetime
 import decimal
 import json
 import os
-import shutil
 import time
 import uuid
 from typing import NamedTuple
@@ -64,7 +63,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
-from daft_spark.io.publish import publish_once
+from daft_spark.io.publish import STAGING_PREFIX, publish_once, stage_files
 
 _LOG_DIR = "_delta_log"
 _MAX_SUPPORTED = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -848,11 +847,15 @@ def update_deltalake_dv_py(
     by_file = _dv_write_distributed(matched, path, snap.adds)
     if not by_file:
         return
-    types_by_name = {f.name: f.dataType for f in schema.fields}
-    updated = matched
-    for col, expr in set_exprs.items():
-        updated = updated.withColumn(col, F.expr(expr).cast(types_by_name[col]))
-    updated = updated.select(*[f.name for f in schema.fields])
+    # one select: every SET expression reads the old row
+    updated = matched.select(
+        *[
+            F.expr(set_exprs[f.name]).cast(f.dataType).alias(f.name)
+            if f.name in set_exprs
+            else F.col(f.name)
+            for f in schema.fields
+        ]
+    )
     # Stage the rewritten rows exactly like write_deltalake_py does
     # (hive layout when partitioned), producing the commit's add actions.
     new_adds = _stage_data_files(
@@ -890,53 +893,39 @@ def _stage_data_files(
     partition_by: list[str],
     now_ms: int,
 ) -> list[dict]:
-    """Stage ``df`` with Spark's parquet writer, then move the files
-    into the table root under unique names (Delta data files are
-    immutable and never share names across commits) and return their
-    add actions. Hive layout when ``partition_by`` is set, with the
-    partition columns dropped from the files and carried in each add's
-    partitionValues, per the spec."""
-    from urllib.parse import unquote
+    """Stage ``df`` as data files under unique names in the table root
+    (Delta data files are immutable and never share names across
+    commits) and return their add actions. Hive layout when
+    ``partition_by`` is set, with the partition columns dropped from
+    the files and carried in each add's partitionValues, per the spec."""
+    staged = stage_files(
+        df,
+        path,
+        partition_by,
+        lambda rel_dir, _values: os.path.join(
+            path, rel_dir, f"part-{version:05d}-{uuid.uuid4().hex}.parquet"
+        ),
+    )
+    return [_add_action(path, dst, pvals, now_ms) for dst, pvals in staged]
 
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    adds: list[dict] = []
-    for root, _dirs, files in os.walk(staging):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, staging)
-            pvals: dict[str, str] = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    # hive layout URL-encodes; null partitions appear as
-                    # __HIVE_DEFAULT_PARTITION__
-                    pvals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-            name = f"part-{version:05d}-{uuid.uuid4().hex}.parquet"
-            rel = os.path.join(rel_dir, name) if rel_dir != "." else name
-            dst = os.path.join(path, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.move(os.path.join(root, f), dst)
-            add = {
-                "path": rel,
-                "partitionValues": pvals,
-                "size": os.path.getsize(dst),
-                "modificationTime": now_ms,
-                "dataChange": True,
-            }
-            # per-file stats (data skipping; delta-spark writes these
-            # by default) — conservative footer lift, never blocks the
-            # write
-            st = _file_stats_json(dst)
-            if st:
-                add["stats"] = st
-            adds.append({"add": add})
-    shutil.rmtree(staging, ignore_errors=True)
-    return adds
+
+def _add_action(
+    path: str, dst: str, pvals: dict, now_ms: int, data_change: bool = True
+) -> dict:
+    """The add action of the data file ``dst``, with the per-file stats
+    data skipping reads (delta-spark writes these by default) — a
+    conservative footer lift that never blocks the write."""
+    add = {
+        "path": os.path.relpath(dst, path),
+        "partitionValues": pvals,
+        "size": os.path.getsize(dst),
+        "modificationTime": now_ms,
+        "dataChange": data_change,
+    }
+    st = _file_stats_json(dst)
+    if st:
+        add["stats"] = st
+    return {"add": add}
 
 
 def _cow_commit(
@@ -1437,24 +1426,18 @@ def optimize_deltalake_py(
     actions: list[dict] = []
     removed = added = 0
     for bin_files in bins:
-        rels = [rel for rel, _a in bin_files]
         # file-level rewrite: physical columns, DVs applied, no
         # partition restore (the bin shares one partition directory)
         scan = _scan(spark, path, dict(bin_files), file_schema, [])
-        staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-        scan.coalesce(1).write.mode("overwrite").parquet(staging)
-        part_dir = os.path.dirname(rels[0])
-        name = f"part-opt-{uuid.uuid4().hex}.parquet"
-        rel_out = os.path.join(part_dir, name) if part_dir else name
-        dst = os.path.join(path, rel_out)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        src = next(
-            os.path.join(staging, f)
-            for f in sorted(os.listdir(staging))
-            if f.endswith(".parquet")
+        part_dir = os.path.dirname(bin_files[0][0])
+        [(dst, _)] = stage_files(
+            scan.coalesce(1),
+            path,
+            [],
+            lambda *_: os.path.join(
+                path, part_dir, f"part-opt-{uuid.uuid4().hex}.parquet"
+            ),
         )
-        shutil.move(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
         for rel, _a in bin_files:
             actions.append(
                 {
@@ -1467,15 +1450,13 @@ def optimize_deltalake_py(
             )
             removed += 1
         actions.append(
-            {
-                "add": {
-                    "path": rel_out,
-                    "partitionValues": bin_files[0][1].get("partitionValues") or {},
-                    "size": os.path.getsize(dst),
-                    "modificationTime": now_ms,
-                    "dataChange": False,
-                }
-            }
+            _add_action(
+                path,
+                dst,
+                bin_files[0][1].get("partitionValues") or {},
+                now_ms,
+                data_change=False,
+            )
         )
         added += 1
     _commit(path, snap, actions, "OPTIMIZE", {"targetSize": str(target_file_bytes)})
@@ -1504,7 +1485,7 @@ def vacuum_deltalake_py(
     now_ms = int(time.time() * 1000)
     out: list[str] = []
     for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if d != _LOG_DIR and not d.startswith(".staging-")]
+        dirs[:] = [d for d in dirs if d != _LOG_DIR and not d.startswith(STAGING_PREFIX)]
         for f in files:
             if not f.endswith(".parquet"):
                 continue  # DV .bin files etc. are never vacuum targets
@@ -1735,48 +1716,26 @@ def _write_cdc_file(path: str, cdc_df: DataFrame, partition_cols: list[str]) -> 
     data). Partitioned tables follow the data-file rules: hive-layout
     dirs under _change_data/, partition columns dropped from the files
     and carried in each action's partitionValues."""
-    from urllib.parse import unquote
-
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    writer = cdc_df.coalesce(1).write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
+    staged = stage_files(
+        cdc_df.coalesce(1),
+        path,
+        partition_cols,
+        lambda rel_dir, _values: os.path.join(
+            path, "_change_data", rel_dir, f"cdc-{uuid.uuid4().hex}.parquet"
+        ),
+    )
     os.makedirs(os.path.join(path, "_change_data"), exist_ok=True)
-    actions: list[dict] = []
-    for root, _dirs, files in os.walk(staging):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, staging)
-            pvals: dict[str, str | None] = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    pvals[k] = (
-                        None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-                    )
-            name = f"cdc-{uuid.uuid4().hex}.parquet"
-            rel = (
-                os.path.join("_change_data", rel_dir, name)
-                if rel_dir != "."
-                else os.path.join("_change_data", name)
-            )
-            dst = os.path.join(path, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.move(os.path.join(root, f), dst)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": rel,
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(dst),
-                        "dataChange": False,
-                    }
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
-    return actions
+    return [
+        {
+            "cdc": {
+                "path": os.path.relpath(dst, path),
+                "partitionValues": pvals,
+                "size": os.path.getsize(dst),
+                "dataChange": False,
+            }
+        }
+        for dst, pvals in staged
+    ]
 
 
 def _commit_changes(

@@ -39,13 +39,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from daft_spark.io.publish import publish_once
+from daft_spark.io.publish import publish_once, stage_files
 
 _HOODIE = ".hoodie"
 
@@ -339,42 +338,31 @@ def write_hudi_py(
     # Partitioned staging duplicates the partition columns so the hive
     # layout consumes the copies and the originals stay in the data
     # files (Hudi keeps partition source columns in base files).
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
     staged = df
     for c in partition_by:
         staged = staged.withColumn(f"_p_{c}", F.col(c))
-    writer = staged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*[f"_p_{c}" for c in partition_by])
-    writer.parquet(staging)
     stats_by_part: dict[str, list] = {}
-    for root, _dirs, files in os.walk(staging):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, staging)
-            part = ""
-            if rel_dir != ".":
-                part = "/".join(
-                    seg.replace("_p_", "", 1) if seg.startswith("_p_") else seg
-                    for seg in rel_dir.split(os.sep)
-                )
-            file_id = uuid.uuid4().hex
-            name = f"{file_id}_0-0-0_{instant}.parquet"
-            rel = os.path.join(part, name) if part else name
-            dst = os.path.join(path, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.move(os.path.join(root, f), dst)
-            stats_by_part.setdefault(part, []).append(
-                {
-                    "fileId": file_id,
-                    "path": rel,
-                    "partitionPath": part,
-                    "fileSizeInBytes": os.path.getsize(dst),
-                    "totalWriteBytes": os.path.getsize(dst),
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    for dst, _ in stage_files(
+        staged,
+        path,
+        [f"_p_{c}" for c in partition_by],
+        lambda rel_dir, _values: os.path.join(
+            path,
+            os.sep.join(seg[3:] for seg in rel_dir.split(os.sep)),
+            f"{uuid.uuid4().hex}_0-0-0_{instant}.parquet",
+        ),
+    ):
+        rel = os.path.relpath(dst, path)
+        part = os.path.dirname(rel)
+        stats_by_part.setdefault(part, []).append(
+            {
+                "fileId": os.path.basename(rel).split("_", 1)[0],
+                "path": rel,
+                "partitionPath": part,
+                "fileSizeInBytes": os.path.getsize(dst),
+                "totalWriteBytes": os.path.getsize(dst),
+            }
+        )
 
     action = "replacecommit" if (mode == "overwrite" and exists) else "commit"
     commit: dict = {"partitionToWriteStats": stats_by_part or {"": []}}

@@ -72,7 +72,6 @@ from __future__ import annotations
 import functools
 import json
 import os
-import shutil
 import time
 import uuid
 from typing import NamedTuple
@@ -83,7 +82,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from daft_spark.io.avro import read_ocf, write_ocf
-from daft_spark.io.publish import ConcurrentCommitError, publish_once
+from daft_spark.io.publish import ConcurrentCommitError, publish_once, stage_files
 
 # ---------------------------------------------------------------------------
 # schema conversion (Spark StructType <-> Iceberg schema JSON)
@@ -1245,8 +1244,6 @@ def _stage_write(
     """Everything of write_iceberg_py up to the commit, against ``base``
     = (version, metadata) as a loader returned it: data files under
     data/, their manifests, and the metadata actions the write needs."""
-    from urllib.parse import unquote
-
     from pyspark.sql import functions as F
 
     version, prior = base
@@ -1330,7 +1327,6 @@ def _stage_write(
     # into the parquet footer (PARQUET:field_id, written by Spark's
     # fieldId.write path) so readers can resolve columns by id after
     # renames — spec §Column Projection.
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
     staged = df
     for fld in ice_schema["fields"]:
         staged = staged.withMetadata(fld["name"], {"parquet.field.id": fld["id"]})
@@ -1355,49 +1351,38 @@ def _stage_write(
             )
         else:
             staged = staged.sortWithinPartitions(*sort_cols)
-    writer = staged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*[f"_p_{t['name']}" for t in terms])
-    writer.parquet(staging)
     data_dir = os.path.join(path, "data")
+    staged_files = stage_files(
+        staged,
+        path,
+        [f"_p_{t['name']}" for t in terms],
+        # the hive dirs name the derived _p_<name> columns, data/ the
+        # partition fields themselves
+        lambda rel_dir, _values: os.path.join(
+            data_dir,
+            os.sep.join(seg[3:] for seg in rel_dir.split(os.sep)),
+            f"{uuid.uuid4().hex}.parquet",
+        ),
+    )
     os.makedirs(data_dir, exist_ok=True)
     os.makedirs(_meta_dir(path), exist_ok=True)
 
-    parsers = {t["name"]: t["parse"] for t in terms}
-
     schema_field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
     schema_field_types = {f["name"]: f["type"] for f in ice_schema["fields"]}
-
     entries = []
-    for root, _dirs, files in os.walk(staging):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, staging)
-            pvals: dict[str, object] = {}
-            rel_out = ""
-            if rel_dir != ".":
-                segs = []
-                for seg in rel_dir.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    col = k[3:] if k.startswith("_p_") else k
-                    raw = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-                    pvals[col] = None if raw is None else parsers[col](raw)
-                    segs.append(f"{col}={v}")
-                rel_out = os.path.join(*segs)
-            name = f"{uuid.uuid4().hex}.parquet"
-            dst = os.path.join(data_dir, rel_out, name) if rel_out else os.path.join(data_dir, name)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.move(os.path.join(root, f), dst)
-            entries.append(
-                _file_entry(
-                    snapshot_id,
-                    dst,
-                    partition={c: pvals.get(c) for c, _ in part_fields},
-                    stats=_parquet_column_stats(dst, schema_field_ids, schema_field_types),
-                )
+    for dst, raw in staged_files:
+        partition = {}
+        for t in terms:
+            v = raw.get(f"_p_{t['name']}")
+            partition[t["name"]] = None if v is None else t["parse"](v)
+        entries.append(
+            _file_entry(
+                snapshot_id,
+                dst,
+                partition=partition,
+                stats=_parquet_column_stats(dst, schema_field_ids, schema_field_types),
             )
-    shutil.rmtree(staging, ignore_errors=True)
+        )
 
     # Spec catalog: reuse an identical existing spec (its id and field
     # ids) or add the next spec-id; ALL specs stay in the metadata so
@@ -1568,23 +1553,19 @@ def _stage_delete_files(
     distinct key values) or 1 (position, ``df`` holds file_path/pos;
     empty files are dropped)."""
     suffix = "-deletes" if content == 2 else "-pos-deletes"
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
     data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
+    staged = stage_files(
+        df,
+        path,
+        [],
+        lambda *_: os.path.join(data_dir, f"{uuid.uuid4().hex}{suffix}.parquet"),
+    )
     entries = []
-    for root, _dirs, files in os.walk(staging):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            if content == 1 and _parquet_rows(os.path.join(root, f)) == 0:
-                continue
-            dst = os.path.join(data_dir, f"{uuid.uuid4().hex}{suffix}.parquet")
-            shutil.move(os.path.join(root, f), dst)
-            entries.append(
-                _file_entry(snapshot_id, dst, content, equality_ids=equality_ids)
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    for dst, _ in staged:
+        if content == 1 and _parquet_rows(dst) == 0:
+            os.remove(dst)
+            continue
+        entries.append(_file_entry(snapshot_id, dst, content, equality_ids=equality_ids))
     return entries
 
 
@@ -2317,19 +2298,15 @@ def rewrite_iceberg_data_files(
         staged = df
         for fld in ice["fields"]:
             staged = staged.withMetadata(fld["name"], {"parquet.field.id": fld["id"]})
-        staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-        staged.coalesce(1).write.mode("overwrite").parquet(staging)
         rel_dir = os.path.dirname(os.path.relpath(bin_recs[0]["path"], path))
-        name = f"{uuid.uuid4().hex}-compacted.parquet"
-        dst = os.path.join(path, rel_dir, name)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        src = next(
-            os.path.join(staging, f)
-            for f in sorted(os.listdir(staging))
-            if f.endswith(".parquet")
+        [(dst, _)] = stage_files(
+            staged.coalesce(1),
+            path,
+            [],
+            lambda *_: os.path.join(
+                path, rel_dir, f"{uuid.uuid4().hex}-compacted.parquet"
+            ),
         )
-        shutil.move(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
         new_entries_by_spec.setdefault(spec_id, []).append(
             _file_entry(
                 snapshot_id,

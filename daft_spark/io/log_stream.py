@@ -93,7 +93,7 @@ def read_projected(
     ``constants`` value if given, else the file column under its
     physical name (``l2p``), else the partition value, restored from
     its string form (``pvals`` keyed by physical or logical name), else
-    null."""
+    null; a file that lacks a non-nullable field is an error."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -110,7 +110,7 @@ def read_projected(
     n = table.num_rows
     target = target_schema(schema)
     cols = []
-    for tfield in target:
+    for sfield, tfield in zip(schema.fields, target):
         name = tfield.name
         phys = l2p.get(name, name)
         if name in constants:
@@ -120,8 +120,13 @@ def read_projected(
         elif phys in pvals or name in pvals:
             raw = pvals[phys] if phys in pvals else pvals[name]
             cols.append(pa.array([raw] * n, type=pa.string()).cast(tfield.type))
-        else:
+        elif sfield.nullable:
             cols.append(pa.nulls(n, type=tfield.type))
+        else:
+            raise ValueError(
+                f"data file {path} has no column {phys!r} for the "
+                f"non-nullable field {name!r}"
+            )
     yield from pa.table(cols, schema=target).to_batches(max_chunksize=65536)
 
 

@@ -56,9 +56,9 @@ scan (plus the one merge exchange for primary-key tables).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
-import shutil
 import time
 import uuid
 
@@ -66,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from daft_spark.io.avro import read_ocf, write_ocf
-from daft_spark.io.publish import publish_once
+from daft_spark.io.publish import HIVE_NULL, publish_once, stage_files
 
 # ---------------------------------------------------------------------------
 # type mapping: Spark <-> Paimon SQL-style type strings
@@ -260,9 +260,6 @@ def binary_row_decode(data: bytes, types: list[str]) -> list:
     return out
 
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
 def _part_dir(keys: list[str], values: list) -> str:
     """Canonical hive-style partition path segment for a decoded tuple —
     the writer MOVES staged files into exactly these directories, so the
@@ -273,7 +270,7 @@ def _part_dir(keys: list[str], values: list) -> str:
     segs = []
     for k, v in zip(keys, values):
         if v is None:
-            segs.append(f"{k}={_HIVE_NULL}")
+            segs.append(f"{k}={HIVE_NULL}")
         elif isinstance(v, bool):
             segs.append(f"{k}={'true' if v else 'false'}")
         else:
@@ -558,9 +555,8 @@ def write_paimon_py(
 
     # data files: stage with Spark's parquet writer (partitionBy drops
     # the partition columns from the files — the Paimon layout), then
-    # rename into <canonical partition dir>/bucket-0
+    # move each into <canonical partition dir>/bucket-0
     import pyarrow.parquet as pq
-    from urllib.parse import unquote
 
     def _typed(raw: str | None, t: str):
         if raw is None:
@@ -571,6 +567,9 @@ def write_paimon_py(
         if base == "BOOLEAN":
             return raw.lower() == "true"
         return raw
+
+    def _values(raw: dict) -> list:
+        return [_typed(raw.get(c), ptypes[c]) for c in partition_by]
 
     new_id = (prior_id or 0) + 1
     staged_df = df
@@ -598,58 +597,43 @@ def write_paimon_py(
             F.lit(1 if delete else 0).cast("int").alias("_VALUE_KIND"),
             *df.columns,
         )
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    writer = staged_df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+
+    names = (f"data-{uuid.uuid4().hex}-{i}.parquet" for i in itertools.count())
+    staged = stage_files(
+        staged_df,
+        path,
+        partition_by,
+        lambda _rel_dir, raw: os.path.join(
+            path, _part_dir(partition_by, _values(raw)), "bucket-0", next(names)
+        ),
+    )
     seq_base = new_id if primary_key else int(time.time() * 1000)
     entries: list[dict] = []
-    i = 0
-    for root, _dirs, fnames in os.walk(staging):
-        for f in sorted(fnames):
-            if not f.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, staging)
-            values: list = []
-            if partition_by:
-                raw_by_col = {}
-                if rel_dir != ".":
-                    for seg in rel_dir.split(os.sep):
-                        k, _, v = seg.partition("=")
-                        raw_by_col[k] = None if v == _HIVE_NULL else unquote(v)
-                values = [_typed(raw_by_col.get(c), ptypes[c]) for c in partition_by]
-            pbytes = (
-                binary_row_encode(values, [ptypes[c] for c in partition_by])
-                if partition_by
-                else b""
-            )
-            name = f"data-{uuid.uuid4().hex}-{i}.parquet"
-            i += 1
-            dst_dir = os.path.join(path, _part_dir(partition_by, values), "bucket-0")
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, name)
-            shutil.move(os.path.join(root, f), dst)
-            entries.append(
-                {
-                    "_KIND": 0,
-                    "_PARTITION": pbytes,
-                    "_BUCKET": 0,
-                    "_TOTAL_BUCKETS": -1,
-                    "_FILE": {
-                        "_FILE_NAME": name,
-                        "_FILE_SIZE": os.path.getsize(dst),
-                        "_ROW_COUNT": pq.ParquetFile(dst).metadata.num_rows,
-                        "_MIN_SEQUENCE_NUMBER": seq_base,
-                        "_MAX_SEQUENCE_NUMBER": seq_base,
-                        "_SCHEMA_ID": 0,
-                        "_LEVEL": 0,
-                        "_EXTRA_FILES": [],
-                        "_CREATION_TIME": seq_base,
-                    },
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    for dst, raw in staged:
+        values = _values(raw)
+        entries.append(
+            {
+                "_KIND": 0,
+                "_PARTITION": (
+                    binary_row_encode(values, [ptypes[c] for c in partition_by])
+                    if partition_by
+                    else b""
+                ),
+                "_BUCKET": 0,
+                "_TOTAL_BUCKETS": -1,
+                "_FILE": {
+                    "_FILE_NAME": os.path.basename(dst),
+                    "_FILE_SIZE": os.path.getsize(dst),
+                    "_ROW_COUNT": pq.ParquetFile(dst).metadata.num_rows,
+                    "_MIN_SEQUENCE_NUMBER": seq_base,
+                    "_MAX_SEQUENCE_NUMBER": seq_base,
+                    "_SCHEMA_ID": 0,
+                    "_LEVEL": 0,
+                    "_EXTRA_FILES": [],
+                    "_CREATION_TIME": seq_base,
+                },
+            }
+        )
     delta_rows = sum(e["_FILE"]["_ROW_COUNT"] for e in entries)
 
     overwriting = mode == "overwrite" and prior_id is not None

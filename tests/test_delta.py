@@ -612,6 +612,38 @@ def test_optimize_partitioned_and_dv_materialization(spark, tmp_path):
     assert all("/g=" in f or "g=" in f for f in back.inputFiles())
 
 
+def test_optimize_writes_stats_on_compacted_files(spark, tmp_path):
+    """OPTIMIZE's replacement files carry per-file stats, so data
+    skipping keeps pruning after a compaction."""
+    import pyarrow.parquet as pq
+
+    from daft_spark.io.delta import (
+        _snapshot,
+        delta_admitted_files,
+        optimize_deltalake_py,
+    )
+
+    p = str(tmp_path / "opt_stats")
+    for lo in (0, 25):  # one file per partition per append
+        rows = spark.range(lo, lo + 25).union(spark.range(100 + lo, 125 + lo))
+        write_deltalake_py(
+            rows.select(
+                F.col("id").alias("k"),
+                F.when(F.col("id") < 100, "a").otherwise("b").alias("g"),
+            ).coalesce(1),
+            p, mode="append", partition_by=["g"],
+        )
+    assert optimize_deltalake_py(p, spark) == {"removed": 4, "added": 2}
+    adds = _snapshot(p).adds
+    for rel, add in adds.items():
+        assert "stats" in add, rel
+        rows = pq.ParquetFile(os.path.join(p, rel)).metadata.num_rows
+        assert json.loads(add["stats"])["numRecords"] == rows == 50
+    admitted, total = delta_admitted_files(p, [("k", "<", 50)])
+    assert total == 2
+    assert len(admitted) == 1 and "g=a" in admitted[0]
+
+
 def test_optimize_commit_is_invisible_to_streaming(spark, tmp_path):
     from daft_spark.io.delta import optimize_deltalake_py, write_deltalake_py
     from tests.test_streaming import _drain_to_parquet
@@ -666,6 +698,53 @@ def test_vacuum_reclaims_unreferenced_files(spark, tmp_path):
     assert sorted(
         r["k"] for r in read_deltalake_py(p, spark).collect()
     ) == list(range(20))
+
+
+def test_failed_write_leaves_no_staging_dir(spark, tbl):
+    """An append whose Spark job fails publishes nothing and leaves no
+    .staging- directory behind (VACUUM never looks inside one)."""
+    write_deltalake_py(_df(spark, 0, 10), tbl, mode="overwrite")
+    # one task: no sibling task is still writing when the job fails
+    bad = _df(spark, 10, 20).coalesce(1).withColumn(
+        "v", F.when(F.col("id") == 15, F.raise_error("boom")).otherwise(F.col("v"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        write_deltalake_py(bad, tbl, mode="append")
+    assert [f for f in os.listdir(tbl) if f.startswith(".staging-")] == []
+    assert read_deltalake_py(tbl, spark).count() == 10
+    assert _list_versions(tbl) == [0]
+
+
+def test_dv_update_sets_from_the_old_row(spark, tmp_path):
+    """Every SET expression of a DV UPDATE reads the pre-update row, as
+    the copy-on-write UPDATE does: swapping two columns swaps them, in
+    the table and in the change feed's post-image."""
+    from daft_spark.io.delta import (
+        enable_cdf_delta_py,
+        table_changes_delta_py,
+        update_deltalake_dv_py,
+        update_deltalake_py,
+    )
+
+    df = spark.createDataFrame([(1, 10, 20), (2, 30, 40)], "id long, a long, b long")
+    cow, dv = str(tmp_path / "cow"), str(tmp_path / "dv")
+    write_deltalake_py(df, cow, mode="overwrite")
+    write_deltalake_py(df, dv, mode="overwrite")
+    enable_cdf_delta_py(dv)
+    swap = {"a": "b", "b": "a"}
+    update_deltalake_py(cow, spark, swap, "id = 1")
+    update_deltalake_dv_py(dv, spark, "id = 1", swap)
+
+    def rows(p):
+        return sorted(
+            tuple(r) for r in read_deltalake_py(p, spark).select("id", "a", "b").collect()
+        )
+
+    assert rows(dv) == rows(cow) == [(1, 20, 10), (2, 30, 40)]
+    post = table_changes_delta_py(dv, spark, starting_version=2).filter(
+        F.col("_change_type") == "update_postimage"
+    )
+    assert [(r["id"], r["a"], r["b"]) for r in post.collect()] == [(1, 20, 10)]
 
 
 # ---------------------------------------------------------------------------

@@ -320,3 +320,20 @@ def test_read_real_hudi_empty_table(spark, tmp_path):
     assert df.count() == 0
     assert df.columns == ["id", "name", "isActive"]
     assert dict(df.dtypes) == {"id": "int", "name": "string", "isActive": "boolean"}
+
+
+def test_hudi_failed_write_leaves_no_staging_dir(spark, tmp_path):
+    """A Hudi append whose Spark job fails publishes no instant and
+    leaves no .staging- directory in the table root."""
+    from daft_spark.io.hudi import read_hudi_py, write_hudi_py
+
+    path = str(tmp_path / "tbl")
+    rows = spark.range(20).select(F.col("id").alias("k"), (F.col("id") % 2).alias("g"))
+    write_hudi_py(rows.filter(F.col("k") < 10), path, mode="error")
+    bad = rows.filter(F.col("k") >= 10).coalesce(1).withColumn(
+        "g", F.when(F.col("k") == 15, F.raise_error("boom")).otherwise(F.col("g"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        write_hudi_py(bad, path, mode="append")
+    assert [f for f in os.listdir(path) if f.startswith(".staging-")] == []
+    assert sorted(r["k"] for r in read_hudi_py(path, spark).collect()) == list(range(10))

@@ -516,6 +516,30 @@ def test_stream_offsets_keep_their_checkpoint_keys(spark, tmp_path):
     assert iceberg.latestOffset() == {"seq": 1}
 
 
+def test_read_projected_rejects_missing_non_nullable_column(tmp_path):
+    """A data file that lacks a field the stream schema declares NOT
+    NULL is an error naming the column and the file; a nullable field
+    still reads as null."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from daft_spark.io.log_stream import read_projected
+
+    f = str(tmp_path / "part.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), f)
+    nullable = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.LongType(), True)]
+    )
+    (batch,) = list(read_projected(f, nullable))
+    assert batch.to_pydict() == {"k": [1, 2], "v": [None, None]}
+    required = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.LongType(), False)]
+    )
+    with pytest.raises(ValueError, match=r"part\.parquet.*'v'"):
+        list(read_projected(f, required))
+
+
 def test_iceberg_sink_idempotence_survives_snapshot_expiration(spark, tmp_path):
     """The sink's batch watermark lives in a TABLE PROPERTY updated with
     each commit — snapshot expiration must not erase it (summary-only
