@@ -119,10 +119,12 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             pass
     _ship_package(spark)
-    if not getattr(spark, "_daft_spark_sources_registered", False):
+    sc = spark.sparkContext
+    if not getattr(sc, "_daft_spark_sources_registered", False):
         # format("daft_iceberg") batch reads with filter pushdown, and
         # the streaming sources daft_delta, daft_delta_cdf, daft_paimon
         # and daft_iceberg. A source that fails to import fails here.
+        # The registry is shared by every session of the context.
         from daft_spark.io.delta_source import DeltaCDFStreamSource, DeltaStreamSource
         from daft_spark.io.iceberg_source import IcebergSource
         from daft_spark.io.paimon_source import PaimonStreamSource
@@ -131,8 +133,18 @@ def configure(spark: SparkSession) -> SparkSession:
             IcebergSource, DeltaStreamSource, PaimonStreamSource, DeltaCDFStreamSource
         ):
             spark.dataSource.register(source)
-        spark._daft_spark_sources_registered = True
+        sc._daft_spark_sources_registered = True
+    spark._daft_spark_configured = True
     return spark
+
+
+def configure_once(spark: SparkSession) -> SparkSession:
+    """``configure`` a session the first time the package reads with it.
+    Later calls leave its confs alone, so a conf the caller set after
+    that (a time zone, AQE off) stays as the caller set it."""
+    if getattr(spark, "_daft_spark_configured", False):
+        return spark
+    return configure(spark)
 
 
 def release_caches(spark: SparkSession) -> None:

@@ -45,6 +45,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from daft_spark.io.publish import publish_once, stage_files
+from daft_spark.io.readers import scan_parquet
 
 _HOODIE = ".hoodie"
 
@@ -156,7 +157,7 @@ def read_hudi_py(path: str, spark: SparkSession, as_of: str | None = None) -> Da
             f"Hudi table at {path} has no completed commits"
             + (f" at or before instant {as_of}" if as_of is not None else "")
         )
-    return spark.read.parquet(*files)
+    return scan_parquet(spark, *files)
 
 
 def _hoodie_properties(path: str) -> dict[str, str]:

@@ -4,19 +4,24 @@ surface (reference: ``daft/io/__init__.py:21-43``; native readers
 
 Everything delegates to ``spark.read`` so Catalyst keeps predicate
 pushdown / column pruning / partition pruning; we only add the pieces
-Spark lacks (parquet TIMESTAMP(NANOS) handling, glob-path listings).
+Spark lacks (parquet TIMESTAMP(NANOS) handling, glob-path listings) and
+give parquet scans their schema from one footer read in the driver, as
+the reference's reader does, instead of Spark's inference job.
 """
 
 from __future__ import annotations
 
-import functools
-import glob as _glob
+import json
 import os
+import re
+from urllib.parse import unquote
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from daft_spark.context import configure, get_or_create
+from daft_spark.context import configure_once, get_or_create
 
 # Canonical testdata tables (TESTDATA.md).
 TABLES = (
@@ -36,38 +41,129 @@ TABLES = (
 def _session(spark: SparkSession | None) -> SparkSession:
     if spark is None:
         return get_or_create()
-    return configure(spark)
+    return configure_once(spark)
 
 
-@functools.lru_cache(maxsize=1024)  # footer reads are driver-side IO on
-# every load_table call; schemas of a given path are treated as stable
-def _ns_timestamp_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark's vectorized
-    reader rejects them (PARQUET_TYPE_ILLEGAL), so we read them as int64
-    via ``spark.sql.legacy.parquet.nanosAsLong`` and convert to
-    microsecond timestamps. Inspect the first footer only: schemas are
-    uniform per dataset (same assumption the reference's schema
-    inference makes — ``src/daft-parquet/src/schema_inference.rs``)."""
+# Spark's parquet schema inference (ParquetUtils.inferSchema) reads one
+# footer: the first data file of the listing in path order, or a summary
+# file. It reads it in a one-task Spark job. The driver reads the same
+# footer with the same Spark code below, so a scan plans with no job.
+_PARQUET_FORMAT = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$"
+_GLOB_CHARS = frozenset("{}[]*?\\")
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+# A top-level INT64 TIMESTAMP(NANOS) field in a parquet schema's text form.
+_NS_FIELD = re.compile(
+    r"^  \w+ int64 (.+) \(TIMESTAMP\(NANOS,(?:true|false)\)\)(?: = \d+)?;$", re.M
+)
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (HadoopFSUtils.shouldFilterOutPathName):
+    ``_SUCCESS``, ``_delta_log``, ``.staging-*``; not ``k=v`` partitions."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_data_file(paths: list[str]) -> tuple[str, list[str], bool] | None:
+    """The data file whose footer Spark's inference reads, the hive
+    partition keys of its directory, and whether the listing holds a
+    summary file. None when the paths are not local absolute files or
+    directories (a URI, a glob, a relative path) or list no data file:
+    only Spark's listing can say what those read."""
+    files: list[tuple[str, str]] = []  # (file, partition discovery root)
+    summary = False
+    for p in paths:
+        if not isinstance(p, str) or not p.startswith("/") or _GLOB_CHARS.intersection(p):
+            return None
+        p = os.path.normpath(p)
+        if os.path.isfile(p):
+            if _hidden(os.path.basename(p)):
+                return None
+            files.append((p, os.path.dirname(p)))
+        elif os.path.isdir(p):
+            for root, dirs, names in os.walk(p, followlinks=True):
+                summary |= any(n.startswith(_SUMMARY_FILES) for n in dirs + names)
+                dirs[:] = [d for d in dirs if not _hidden(d)]
+                files += [(os.path.join(root, n), p) for n in names if not _hidden(n)]
+        else:
+            return None
+    if not files:
+        return None
+    first, root = min(files)
+    rel = os.path.relpath(os.path.dirname(first), root)
+    keys = [unquote(c.split("=", 1)[0]) for c in rel.split(os.sep) if "=" in c]
+    return first, keys, summary
+
+
+def _read_footer(spark: SparkSession, file: str) -> tuple[StructType, tuple[str, ...]] | None:
+    """Spark's schema of one local parquet file, from the calls Spark's
+    inference task makes (same session confs, Spark row metadata
+    honoured), and its top-level TIMESTAMP(NANOS) columns. None when the
+    read raises: Spark's own inference then raises the same error."""
+    jvm, jss = spark._jvm, spark._jsparkSession
     try:
-        import pyarrow.parquet as pq
-        import pyarrow as pa
-    except Exception:
-        return ()
-    candidates: list[str] = []
-    first = path
-    if os.path.isdir(path):
-        files = sorted(_glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-        if not files:
-            return ()
-        first = files[0]
-    try:
-        schema = pq.read_schema(first)
-    except Exception:
-        return ()
-    for field in schema:
-        if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
-            candidates.append(field.name)
-    return tuple(candidates)
+        conf = jss.sessionState().newHadoopConf()
+        jpath = jvm.org.apache.hadoop.fs.Path(file)
+        fs = jpath.getFileSystem(conf)
+        if fs.getScheme() != "file":  # a bare path on a non-local default FS
+            return None
+        fmt = jvm.java.lang.Class.forName(_PARQUET_FORMAT).getField("MODULE$").get(None)
+        footers = fmt.readParquetFootersInParallel(
+            conf, jvm.PythonUtils.toSeq([fs.getFileStatus(jpath)]), False
+        )
+        schema = fmt.readSchema(footers, jss).get().json()
+        message = footers.head().getParquetMetadata().getFileMetaData().getSchema().toString()
+    except Py4JError:
+        return None
+    return StructType.fromJson(json.loads(schema)), tuple(_NS_FIELD.findall(message))
+
+
+def scan_parquet(spark: SparkSession, *paths: str, schema=None, **options) -> DataFrame:
+    """``spark.read.parquet(*paths)`` planned without Spark's
+    schema-inference job, with parquet TIMESTAMP(NANOS) columns read as
+    timestamp_ntz.
+
+    The schema comes from the first visible data file's footer, read in
+    the driver (``_read_footer``); Spark still discovers hive partition
+    columns from the directory names. Spark's inference job still runs,
+    unchanged, for any reader option, ``spark.sql.parquet.mergeSchema``,
+    a ``_metadata``/``_common_metadata`` summary file, a partition column
+    also stored in the file, a path that is not a local absolute file or
+    directory, no visible data file, or a footer read that raises.
+
+    Spark's vectorized reader rejects TIMESTAMP(NANOS)
+    (PARQUET_TYPE_ILLEGAL), so ``spark.sql.legacy.parquet.nanosAsLong``
+    reads those columns as int64 and they are converted to microsecond
+    timestamps. The columns come from the same footer, read on every
+    call: schemas are uniform per dataset (the assumption the
+    reference's inference makes, ``src/daft-parquet/src/schema_inference.rs``)."""
+    first, partition_keys, summary = _first_data_file(list(paths)) or (None, [], False)
+    file_schema, ns_columns = (first and _read_footer(spark, first)) or (None, ())
+    if (
+        schema is None
+        and file_schema is not None
+        and not options
+        and not summary
+        and not {k.lower() for k in partition_keys} & {n.lower() for n in file_schema.names}
+        and spark.conf.get("spark.sql.parquet.mergeSchema") != "true"
+    ):
+        schema = file_schema
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if options:
+        reader = reader.options(**options)
+    df = reader.parquet(*paths)
+    # ns-timestamp repair: int64 ns -> TIMESTAMP_NTZ(us). `div` keeps the
+    # arithmetic integral and JVM-side.
+    dtypes = dict(df.dtypes) if ns_columns else {}
+    for c in ns_columns:
+        if dtypes.get(c) == "bigint":
+            df = df.withColumn(
+                c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
+            )
+    return df
 
 
 def read_parquet(
@@ -82,6 +178,8 @@ def read_parquet(
     Column pruning / predicate pushdown / limit pushdown (reference:
     ``src/daft-scan/src/pushdowns.rs:16-36``) are automatic in Spark's
     parquet source — verify via ``.explain``'s PushedFilters/ReadSchema.
+    The schema is known when the plan is built, with no Spark job, on
+    the inputs ``scan_parquet`` names.
 
     ``string_encoding="raw"`` (reference read_parquet_into_pyarrow's
     escape hatch for parquet whose string columns carry invalid UTF-8)
@@ -91,14 +189,8 @@ def read_parquet(
     """
     if string_encoding not in ("utf-8", "raw"):
         raise ValueError("string_encoding must be 'utf-8' or 'raw'")
-    spark = _session(spark)
     paths = path if isinstance(path, list) else [path]
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if options:
-        reader = reader.options(**options)
-    df = reader.parquet(*paths)
+    df = scan_parquet(_session(spark), *paths, schema=schema, **options)
     if string_encoding == "raw":
         df = df.select(
             *[
@@ -106,13 +198,6 @@ def read_parquet(
                 for c, t in df.dtypes
             ]
         )
-    # ns-timestamp repair: int64 ns -> TIMESTAMP_NTZ(us). `div` keeps the
-    # arithmetic integral and JVM-side.
-    for c in _ns_timestamp_columns(paths[0]):
-        if c in df.columns and dict(df.dtypes).get(c) == "bigint":
-            df = df.withColumn(
-                c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
-            )
     return df
 
 

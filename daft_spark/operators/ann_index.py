@@ -43,6 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from daft_spark.io.readers import scan_parquet
 from daft_spark.operators.similarity import (
     cosine_similarity,
     ivf_assign,
@@ -133,7 +134,7 @@ def add_to_ivf_index(
     meta = read_index_meta(path)
     corpus_id, corpus_vec = meta["id_col"], meta["vec_col"]
     spark = new_rows.sparkSession
-    cents = spark.read.parquet(os.path.join(path, "centroids")).select(
+    cents = scan_parquet(spark, os.path.join(path, "centroids")).select(
         "centroid_id", "centroid"
     )
     assigned = ivf_assign(
@@ -144,7 +145,7 @@ def add_to_ivf_index(
         os.path.join(path, "vectors")
     )
     if meta["kind"] == "ivfpq":
-        books = spark.read.parquet(os.path.join(path, "codebooks")).select(
+        books = scan_parquet(spark, os.path.join(path, "codebooks")).select(
             "subspace", "code", "centroid", "cnorm2"
         )
         codes = pq_encode(
@@ -185,7 +186,7 @@ def _probe_lists(
     rows) — and its blocks are released by the ContextCleaner when
     the frame is garbage-collected, unlike a persist() with no
     unpersist point."""
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
+    cents = scan_parquet(spark, os.path.join(path, "centroids"))
     q = queries.select(F.col(query_id), F.col(query_vec))
     qc = q.crossJoin(F.broadcast(cents)).withColumn(
         "__qcsim", cosine_similarity(F.col(query_vec), F.col("centroid"))
@@ -230,7 +231,7 @@ def search_ivf_index(
         raise ValueError("no queries to search")
     prune = F.col("centroid_id").isin(probed)
     if meta["kind"] == "ivf":
-        vecs = spark.read.parquet(os.path.join(path, "vectors")).filter(prune)
+        vecs = scan_parquet(spark, os.path.join(path, "vectors")).filter(prune)
         scored = vecs.join(F.broadcast(probes), "centroid_id").select(
             F.col(query_id),
             F.col(corpus_id),
@@ -244,8 +245,8 @@ def search_ivf_index(
         )
     # ivfpq: ADC over stored codes via stored codebooks
     m = meta["m"]
-    books = spark.read.parquet(os.path.join(path, "codebooks"))
-    codes = spark.read.parquet(os.path.join(path, "codes")).filter(prune)
+    books = scan_parquet(spark, os.path.join(path, "codebooks"))
+    codes = scan_parquet(spark, os.path.join(path, "codes")).filter(prune)
     sub = meta["dim"] // m
     qv = queries.select(
         F.col(query_id),
@@ -317,7 +318,7 @@ def search_ivf_index(
         .filter(F.col("__r") <= rerank)
         .select(query_id, corpus_id)
     )
-    vecs = spark.read.parquet(os.path.join(path, "vectors")).filter(prune)
+    vecs = scan_parquet(spark, os.path.join(path, "vectors")).filter(prune)
     cand = vecs.join(shortlist, corpus_id).select(
         F.col(query_id), F.col(corpus_id), F.col(corpus_vec)
     )
@@ -362,8 +363,8 @@ def index_refresh_report(
 
     meta = read_index_meta(path)
     corpus_id, corpus_vec = meta["id_col"], meta["vec_col"]
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    stored = spark.read.parquet(os.path.join(path, "vectors"))
+    cents = scan_parquet(spark, os.path.join(path, "centroids"))
+    stored = scan_parquet(spark, os.path.join(path, "vectors"))
     assigned = ivf_assign(
         new_batch, cents, corpus_id=corpus_id, corpus_vec=corpus_vec
     ).select(corpus_id, corpus_vec, "centroid_id")

@@ -151,3 +151,31 @@ def test_incremental_append_ivfpq_codes(spark, tmp_path):
     hit = out.filter(F.col("vec_id") == F.col("query_id") + 10_000)
     assert hit.count() == 4  # each query finds its appended duplicate
     assert all(abs(r["sim"] - 1.0) < 1e-9 for r in hit.collect())
+
+
+# Spark jobs of one stored-index search, planned and collected. The
+# scans of the index directories (centroids, vectors, codebooks, codes)
+# take their schemas from footers read in the driver, so they add no job.
+SEARCH_JOBS = {"ivf": 8, "ivfpq": 14}
+
+
+def test_search_jobs(spark, tmp_path):
+    queries, emb = _qc(spark)
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "pq")
+    build_ivf_index(emb, ivf, num_centroids=8, iters=2)
+    build_ivf_index(emb, pq, num_centroids=8, kind="ivfpq", m=16, ksub=16, iters=2)
+    searches = {
+        "ivf": lambda: search_ivf_index(spark, ivf, queries, k=5, nprobe=4),
+        "ivfpq": lambda: search_ivf_index(spark, pq, queries, k=5, nprobe=4, rerank=50),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name, search in searches.items():
+            group = f"ivf-search-{name}"
+            sc.setJobGroup(group, group)
+            search().collect()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs == SEARCH_JOBS
